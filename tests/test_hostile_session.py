@@ -28,6 +28,7 @@ import pytest
 from pyspark.sql import functions as F
 
 import __spark_entry__ as entrymod
+from timedb_spark.snapstore import SnapshotStore
 from timedb_spark.store import Store
 
 #: (conf get_spark pins, Spark-default value the driver session runs with).
@@ -125,20 +126,26 @@ def test_store_write_pins_micros_under_hostile_session(hostile, sf_dir):
 
 def test_partition_stats_raises_loudly_on_int96_store(hostile, sf_dir):
     """Pre-fix data (INT96 files without footer stats) must raise with
-    remediation text — never yield silent None bounds (the r6/r7 mode)."""
-    st = Store(hostile, tempfile.mkdtemp(prefix="timedb_int96_store_"))
-    st.create()
-    # Bypass the store's pinned write path: an INT96 write straight into the
-    # partition layout, exactly what pre-fix code produced under the driver.
-    part = st.values_path / "retention=short" / "vt_month=202401"
-    _gate_frame(hostile, sf_dir).limit(50).drop("retention").write.mode(
-        "overwrite"
-    ).parquet(str(part))
-    assert _valid_time_stats_presence(st.values_path)[2] == {"INT96"}, (
-        "fixture no longer writes INT96 — hostile session conf drifted"
-    )
-    with pytest.raises(RuntimeError, match="INT96"):
-        st.partition_stats()
+    remediation text — never yield silent None bounds (the r6/r7 mode).
+    Checked on the directory store and on the snapshot store, whose
+    manifest is made to reference the INT96 files."""
+    for store_cls in (Store, SnapshotStore):
+        st = store_cls(hostile, tempfile.mkdtemp(prefix="timedb_int96_store_"))
+        st.create()
+        # Bypass the store's pinned write path: an INT96 write straight into the
+        # partition layout, exactly what pre-fix code produced under the driver.
+        part = st.values_path / "retention=short" / "vt_month=202401"
+        _gate_frame(hostile, sf_dir).limit(50).drop("retention").write.mode(
+            "overwrite"
+        ).parquet(str(part))
+        assert _valid_time_stats_presence(st.values_path)[2] == {"INT96"}, (
+            "fixture no longer writes INT96 — hostile session conf drifted"
+        )
+        if isinstance(st, SnapshotStore):
+            files = [str(f.relative_to(st.values_path)) for f in part.glob("*.parquet")]
+            st._commit(add=files, remove=set(), op="append")
+        with pytest.raises(RuntimeError, match="INT96"):
+            st.partition_stats()
 
 
 def test_store_gate_queries_end_to_end_under_hostile_session(hostile, sf_dir):

@@ -21,6 +21,15 @@ UTC = timezone.utc
 T0 = datetime(2024, 1, 1, tzinfo=UTC)
 
 
+def each_format(spark, tmp_path):
+    """A fresh store per table format whose partition operations run through
+    the shared Store engine — tests of those operations run against each."""
+    for table_format in ("directory", "snapshot"):
+        db = TimeDB(spark, str(tmp_path / table_format), table_format=table_format)
+        db.create()
+        yield db
+
+
 def ts(h: int) -> datetime:
     return T0 + timedelta(hours=h)
 
@@ -117,16 +126,17 @@ def test_retention_column_per_row(td):
     assert td.read(series_ids=[1]).count() == 2
 
 
-def test_retention_ttl_drops_expired_month_partitions(td):
-    old = pdf([{"series_id": 1, "valid_time": datetime(2020, 1, 1, tzinfo=UTC), "value": 1.0}])
-    td.write(old, retention="short")
-    td.write(simple_batch(sid=2), retention="short")
-    td.write(old.assign(series_id=3), retention="forever")
-    dropped = td.apply_retention(now=datetime(2024, 6, 1, tzinfo=UTC))
-    assert dropped == ["retention=short/vt_month=202001"]
-    assert td.read(series_ids=[1]).count() == 0  # expired
-    assert td.read(series_ids=[2]).count() == 3  # fresh short survives
-    assert td.read(series_ids=[3]).count() == 1  # forever never expires
+def test_retention_ttl_drops_expired_month_partitions(spark, tmp_path):
+    for td in each_format(spark, tmp_path):
+        old = pdf([{"series_id": 1, "valid_time": datetime(2020, 1, 1, tzinfo=UTC), "value": 1.0}])
+        td.write(old, retention="short")
+        td.write(simple_batch(sid=2), retention="short")
+        td.write(old.assign(series_id=3), retention="forever")
+        dropped = td.apply_retention(now=datetime(2024, 6, 1, tzinfo=UTC))
+        assert dropped == ["retention=short/vt_month=202001"]
+        assert td.read(series_ids=[1]).count() == 0  # expired
+        assert td.read(series_ids=[2]).count() == 3  # fresh short survives
+        assert td.read(series_ids=[3]).count() == 1  # forever never expires
 
 
 # -- run_series (ref test_integration.py:130-138) ---------------------------
@@ -260,6 +270,20 @@ def test_rejects_naive_datetime_column(td):
         td.write(naive)
 
 
+def test_rejects_null_valid_time(spark, tmp_path):
+    """A NaT valid_time fails the write before anything lands (the
+    reference column is non-nullable); count and TTL keep working."""
+    bad = simple_batch()
+    bad.loc[1, "valid_time"] = pd.NaT
+    for db in each_format(spark, tmp_path):
+        for skip in (False, True):
+            with pytest.raises(ValueError, match="valid_time must not be null"):
+                db.write(bad, skip_unchanged=skip)
+        assert db.count() == 0
+        assert db.read_run_series(series_id=1) == []
+        assert db.apply_retention() == []
+
+
 def test_unknown_unchanged_scope_rejected(td):
     td.write(simple_batch())
     with pytest.raises(ValueError, match="unchanged_scope"):
@@ -339,64 +363,57 @@ def test_month_pruning_filter(td):
     assert "vt_month" in plan
 
 
+def _n_files(db, retention: str, vt_month: str) -> int:
+    """Live files of one partition, from footer stats: a snapshot store keeps
+    superseded files on disk until vacuum, so a directory glob overcounts."""
+    return {(s["retention"], s["vt_month"]): s["n_files"] for s in db.partition_stats()}[(retention, vt_month)]
+
+
 def test_compact_merges_files_and_preserves_data(spark, tmp_path):
     """Many small appends fragment a partition; compact() rewrites it into
     one sorted file with identical data and leaves other partitions alone."""
-    from datetime import datetime, timezone
-
-    import pandas as pd
-
-    from timedb_spark.client import TimeDB
-
-    UTC = timezone.utc
-    db = TimeDB(spark, str(tmp_path / "t"))
-    db.create()
-    for batch in range(6):  # 6 appends → ≥6 files in the Jan partition
-        db.write(
-            pd.DataFrame(
-                {
-                    "series_id": [batch, batch + 10],
-                    "valid_time": [datetime(2024, 1, 1 + batch, tzinfo=UTC)] * 2,
-                    "value": [float(batch), float(batch) + 0.5],
-                }
-            ),
-            retention="short",
-            knowledge_time=datetime(2024, 1, 20, batch, tzinfo=UTC),
-        )
-    part = tmp_path / "t" / "series_values" / "retention=short" / "vt_month=202401"
-    n_before = len(list(part.glob("*.parquet")))
-    assert n_before >= 6
-
-    before = {tuple(r) for r in db.read(series_ids=list(range(20))).collect()}
-    done = db.compact()
-    assert "retention=short/vt_month=202401" in done
-    assert len(list(part.glob("*.parquet"))) == 1
-    after = {tuple(r) for r in db.read(series_ids=list(range(20))).collect()}
-    assert after == before
-
-    # compacted file is sorted by the store sort key
     import pyarrow.parquet as pq
 
-    t = pq.read_table(str(next(part.glob("*.parquet"))), columns=["series_id", "valid_time"])
-    rows = list(zip(t.column(0).to_pylist(), t.column(1).to_pylist()))
-    assert rows == sorted(rows)
+    for db in each_format(spark, tmp_path):
+        for batch in range(6):  # 6 appends → ≥6 files in the Jan partition
+            db.write(
+                pd.DataFrame(
+                    {
+                        "series_id": [batch, batch + 10],
+                        "valid_time": [datetime(2024, 1, 1 + batch, tzinfo=UTC)] * 2,
+                        "value": [float(batch), float(batch) + 0.5],
+                    }
+                ),
+                retention="short",
+                knowledge_time=datetime(2024, 1, 20, batch, tzinfo=UTC),
+            )
+        assert _n_files(db, "short", "202401") >= 6
 
-    # second compact is a no-op (already ≤ threshold)
-    assert db.compact() == []
+        before = {tuple(r) for r in db.read(series_ids=list(range(20))).collect()}
+        done = db.compact()
+        assert "retention=short/vt_month=202401" in done
+        assert _n_files(db, "short", "202401") == 1
+        after = {tuple(r) for r in db.read(series_ids=list(range(20))).collect()}
+        assert after == before
+
+        # compacted file is sorted by the store sort key
+        (live,) = db.store._live_files()[1]["retention=short/vt_month=202401"]
+        t = pq.read_table(str(live), columns=["series_id", "valid_time"])
+        rows = list(zip(t.column(0).to_pylist(), t.column(1).to_pylist()))
+        assert rows == sorted(rows)
+
+        # second compact is a no-op (already ≤ threshold)
+        assert db.compact() == []
 
 
 def test_partition_stats_footer_only(spark, tmp_path):
     """Footer-derived stats match the data: counts per partition, min/max
     series and time bounds, file counts that drop after compaction."""
-    from datetime import datetime, timezone
+    for db in each_format(spark, tmp_path):
+        _check_partition_stats(db)
 
-    import pandas as pd
 
-    from timedb_spark.client import TimeDB
-
-    UTC = timezone.utc
-    db = TimeDB(spark, str(tmp_path / "t"))
-    db.create()
+def _check_partition_stats(db) -> None:
     db.write(
         pd.DataFrame(
             {
@@ -434,6 +451,7 @@ def test_partition_stats_footer_only(spark, tmp_path):
         for k in ("valid_time_min", "valid_time_max"):
             assert s[k] is None or s[k].tzinfo is None, f"{k} must be naive UTC, got {s[k]!r}"
     assert jan["valid_time_min"] == datetime(2024, 1, 10)
+    assert jan["n_files"] == 1
 
 
 # ---------------------------------------------------------------------------
@@ -505,14 +523,11 @@ def test_json_landing_malformed_lines_captured(spark, tmp_path):
 
 
 def test_fast_count_metadata_only_and_edge_scan(spark, tmp_path):
-    from datetime import datetime, timezone
+    for db in each_format(spark, tmp_path):
+        _check_fast_count(db)
 
-    import pandas as pd
 
-    from timedb_spark import TimeDB
-
-    db = TimeDB(spark, str(tmp_path / "store"))
-    db.create()
+def _check_fast_count(db) -> None:
     rows = []
     sid = 0
     for month, n in ((1, 10), (2, 20), (3, 30)):
@@ -552,14 +567,11 @@ def test_fast_count_metadata_only_and_edge_scan(spark, tmp_path):
 
 
 def test_delete_series_rewrites_only_affected_partitions(spark, tmp_path):
-    from datetime import datetime, timezone
+    for db in each_format(spark, tmp_path):
+        _check_delete_series(db)
 
-    import pandas as pd
 
-    from timedb_spark import TimeDB
-
-    db = TimeDB(spark, str(tmp_path / "store"))
-    db.create()
+def _check_delete_series(db) -> None:
     UTC2 = timezone.utc
     rows = [
         # series 1 and 2 in Jan; series 50 alone in Feb (disjoint id range)

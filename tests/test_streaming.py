@@ -6,6 +6,7 @@ Structured Streaming batch-equivalence contract)."""
 
 from __future__ import annotations
 
+import time
 import uuid
 
 import pytest
@@ -823,6 +824,65 @@ def test_stream_dedup_v2_matches_batch_distinct(spark, sf_dir, tmp_path):
     keys = [r.text_key for r in rows]
     assert len(set(keys)) == len(keys)  # one emission per key, ever
     assert all((r.text_key, r.doc_id) in valid for r in rows)
+
+
+def test_dedup_v2_ttl_processing_time_matches_untimed(spark, sf_dir, tmp_path):
+    """DedupProcessor(ttl=True) drained under timeMode="ProcessingTime" (the
+    mode its state TTL requires, where the runner's stock timestamp RPCs
+    share the state-server socket) emits exactly what the shipped
+    ttl=False / timeMode="None" drain emits on the same input."""
+    from timedb_spark.streaming import state_v2
+    from timedb_spark.streaming.dedup import DOCUMENTS_STREAM_SCHEMA, text_key
+
+    if not state_v2._HAVE_TWS:
+        pytest.skip(f"transformWithStateInPandas gated: missing {state_v2._TWS_MISSING}")
+
+    d = str(tmp_path / "docs")
+    docs = load_table(spark, sf_dir, "documents")
+    docs.repartition(6).write.mode("overwrite").parquet(d)
+    n_docs = docs.count()
+
+    def drain(name: str, ttl: bool, time_mode: str) -> set[tuple]:
+        stream = spark.readStream.schema(DOCUMENTS_STREAM_SCHEMA).option("maxFilesPerTrigger", 2).parquet(d)
+        keyed = stream.select("doc_id", text_key(F.col("text")).alias("tkey")).withColumn(
+            "bucket", F.substring("tkey", 1, state_v2._DEDUP_BUCKET_CHARS)
+        )
+        out = keyed.groupBy("bucket").transformWithStateInPandas(
+            statefulProcessor=state_v2.DedupProcessor(ttl=ttl),
+            outputStructType=state_v2.DEDUP_OUTPUT_SCHEMA,
+            outputMode="Update",
+            timeMode=time_mode,
+        )
+        # ProcessingTime keeps scheduling no-data batches, so neither an
+        # availableNow drain nor processAllAvailable() ever returns: stop the
+        # query once its finished batches have consumed every input row.
+        q = out.writeStream.format("memory").queryName(name).outputMode("update").start()
+        consumed: dict[int, int] = {}
+        try:
+            deadline = time.monotonic() + 300
+            while sum(consumed.values()) < n_docs:
+                assert q.isActive and time.monotonic() < deadline, f"{name} stalled at {consumed}"
+                consumed.update((p["batchId"], p["numInputRows"]) for p in q.recentProgress)
+                time.sleep(0.2)
+        finally:
+            q.stop()
+        return {(r.text_key, r.doc_id) for r in spark.table(name).collect()}
+
+    prev = spark.conf.get("spark.sql.streaming.stateStore.providerClass", None)
+    spark.conf.set(
+        "spark.sql.streaming.stateStore.providerClass",
+        "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider",
+    )
+    try:
+        untimed = drain("dedup_v2_untimed", ttl=False, time_mode="None")
+        ttl = drain("dedup_v2_ttl", ttl=True, time_mode="ProcessingTime")
+    finally:
+        if prev is None:
+            spark.conf.unset("spark.sql.streaming.stateStore.providerClass")
+        else:
+            spark.conf.set("spark.sql.streaming.stateStore.providerClass", prev)
+
+    assert untimed and ttl == untimed
 
 
 def test_stream_cusum_v2_matches_batch_cusum(spark, sf_dir):

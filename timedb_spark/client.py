@@ -57,6 +57,17 @@ def _validate_pandas_tz(df: pd.DataFrame) -> None:
                 raise ValueError(f"{col!r} must be timezone-aware.")
 
 
+def _count_rejecting_null_valid_time(stamped: DataFrame) -> int:
+    """Row count of a stamped batch; the null-``valid_time`` check rides the
+    same Spark job. The reference column is non-nullable, and a null row
+    would land in ``vt_month=__HIVE_DEFAULT_PARTITION__``, which no month
+    arithmetic (count, TTL) can read."""
+    n, n_null = stamped.agg(F.count(F.lit(1)), F.count_if(F.col("valid_time").isNull())).collect()[0]
+    if n_null:
+        raise ValueError(f"valid_time must not be null: {n_null} of {n} rows have no valid_time.")
+    return n
+
+
 def _strip_tz(x: datetime | None) -> datetime | None:
     """Timestamps are stored in UTC wall-clock (session tz is UTC); naive
     datetimes are taken as UTC already."""
@@ -248,13 +259,13 @@ class TimeDB:
                     f"Unknown unchanged_scope {unchanged_scope!r}. Valid values: 'valid_time', 'knowledge_time'."
                 )
             with profiling._phase(profiling.PHASE_WRITE_SKIP_UNCHANGED):
-                before = stamped.count()
+                before = _count_rejecting_null_valid_time(stamped)
                 stamped = self._filter_unchanged(stamped, scope=unchanged_scope)
                 stamped = stamped.localCheckpoint(eager=True)  # pin the filtered batch
                 written = stamped.count()
                 skipped = before - written
         else:
-            written = stamped.count()
+            written = _count_rejecting_null_valid_time(stamped)
 
         if written:
             # run_series FIRST, values (carrying the txn marker) second: the

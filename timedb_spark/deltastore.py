@@ -4,8 +4,10 @@ The directory store (store.py) hand-rolls atomic publish + partition TTL on
 plain parquet; snapstore.py hand-rolls a manifest snapshot protocol. A
 production 100 TB deployment would reach for a lakehouse table format
 instead — atomic multi-file commits, snapshot isolation, time travel and
-OPTIMIZE come from the format. This module maps the same ``Store`` surface
-onto delta-spark 1:1:
+OPTIMIZE come from the format. :class:`DeltaStore` subclasses ``Store`` and
+keeps only the delta-spark mappings below; ``delete``, ``prune_months``,
+``fast_count`` (over the log-based ``partition_stats``), the sorted write
+layout with its schema-drift guard, and the TTL rule are ``Store``'s:
 
 ==================  =====================================================
 Store method        Delta mapping
@@ -18,8 +20,9 @@ read_values         ``spark.read.format("delta").load``
 compact             ``DeltaTable.optimize().executeCompaction()`` /
                     ``executeZOrderBy("series_id", "valid_time")``
                     (cluster="zorder" — the functions/zorder.py analogue)
-apply_retention     partition-predicate ``DELETE`` per expired tier/month
-                    (metadata-only remove actions, like CH part drops)
+apply_retention     partition-predicate ``DELETE`` per tier/month the
+                    shared TTL rule expires (metadata-only remove
+                    actions, like CH part drops)
 delete_series       ``DeltaTable.delete(series_id IN ...)`` — Delta's
                     file-stats pruning rewrites only files that can
                     contain a target id, matching store.py's footer-
@@ -41,14 +44,14 @@ parametrization.
 
 from __future__ import annotations
 
-from datetime import date, datetime, timedelta, timezone
+from datetime import datetime, timezone
 from pathlib import Path
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from timedb_spark.schema import RETENTION_TTL_DAYS, RUN_SERIES_SCHEMA, SERIES_VALUES_SCHEMA
-from timedb_spark.store import _SORT_KEY
+from timedb_spark.schema import RUN_SERIES_SCHEMA, SERIES_VALUES_SCHEMA
+from timedb_spark.store import Store, _expired
 
 #: exact unmet precondition ("" when runnable) — surfaced in skip messages
 #: and the construction-time gate so every probe records WHY it is closed.
@@ -120,15 +123,12 @@ def _require_delta(spark: SparkSession) -> None:
         )
 
 
-class DeltaStore:
+class DeltaStore(Store):
     """Same surface as :class:`timedb_spark.store.Store`, Delta-backed."""
 
     def __init__(self, spark: SparkSession, root: str):
         _require_delta(spark)
-        self.spark = spark
-        self.root = Path(root)
-        self.values_path = self.root / "series_values"
-        self.run_series_path = self.root / "run_series"
+        super().__init__(spark, root)
 
     # -- schema management -------------------------------------------------
 
@@ -148,27 +148,11 @@ class DeltaStore:
             empty_rs = self.spark.createDataFrame([], RUN_SERIES_SCHEMA)
             empty_rs.write.format("delta").mode("overwrite").save(str(self.run_series_path))
 
-    def delete(self) -> None:
-        import shutil
-
-        for p in (self.values_path, self.run_series_path):
-            if p.exists():
-                shutil.rmtree(p)
-
     # -- writes (atomic multi-file commits — the format's whole point) -----
 
     def append_values(self, df: DataFrame) -> None:
-        cols = [f.name for f in SERIES_VALUES_SCHEMA.fields]
-        (
-            df.select(cols)
-            .withColumn("vt_month", F.date_format("valid_time", "yyyyMM"))
-            .repartition("retention", "vt_month")
-            # same zone-map-preserving sorted layout as store.py
-            .sortWithinPartitions("retention", "vt_month", *_SORT_KEY)
-            .write.format("delta")
-            .mode("append")
-            .save(str(self.values_path))
-        )
+        # same guarded, zone-map-preserving sorted layout as store.py
+        self._partition_sorted(df).write.format("delta").mode("append").save(str(self.values_path))
 
     def append_run_series(self, df: DataFrame) -> None:
         (
@@ -189,13 +173,6 @@ class DeltaStore:
         if timestamp is not None:
             reader = reader.option("timestampAsOf", timestamp.isoformat(sep=" "))
         return reader.load(str(self.values_path))
-
-    def prune_months(self, df: DataFrame, start_valid: datetime | None, end_valid: datetime | None) -> DataFrame:
-        if start_valid is not None:
-            df = df.filter(F.col("vt_month") >= start_valid.strftime("%Y%m"))
-        if end_valid is not None:
-            df = df.filter(F.col("vt_month") <= end_valid.strftime("%Y%m"))
-        return df
 
     def read_run_series(self) -> DataFrame:
         raw = self.spark.read.format("delta").load(str(self.run_series_path))
@@ -245,56 +222,10 @@ class DeltaStore:
         dropped: list[str] = []
         for p in self.partition_stats():
             tier, ym = p["retention"], p["vt_month"]
-            ttl_days = RETENTION_TTL_DAYS.get(tier)
-            if ttl_days is None or not ym:
-                continue
-            year, month = int(ym[:4]), int(ym[4:])
-            nxt = date(year + (month == 12), month % 12 + 1, 1)
-            if (nxt - timedelta(days=1)) + timedelta(days=ttl_days) < today:
+            if _expired(tier, ym, today):
                 dt.delete((F.col("retention") == tier) & (F.col("vt_month") == ym))
                 dropped.append(f"retention={tier}/vt_month={ym}")
         return dropped
-
-    def fast_count(self, *, retention=None, start_valid=None, end_valid=None) -> int:
-        """Months fully inside the range answer from log stats; boundary
-        months scan partition-pruned (same split as store.py.fast_count)."""
-        tiers = {retention} if isinstance(retention, str) else (set(retention) if retention else None)
-        total = 0
-        edge: list[tuple[str, str]] = []
-        for p in self.partition_stats():
-            if tiers is not None and p["retention"] not in tiers:
-                continue
-            ym = p["vt_month"]
-            if not ym:  # null valid_time rows: no month to range-prune on —
-                if start_valid is None and end_valid is None:
-                    total += p["n_rows"]  # unbounded count includes them
-                continue  # any time bound excludes a null valid_time
-            m_start = datetime(int(ym[:4]), int(ym[4:]), 1)
-            nxt = date(m_start.year + (m_start.month == 12), m_start.month % 12 + 1, 1)
-            m_end = datetime(nxt.year, nxt.month, nxt.day)
-            if (end_valid is not None and m_start >= end_valid) or (
-                start_valid is not None and m_end <= start_valid
-            ):
-                continue
-            inside = (start_valid is None or start_valid <= m_start) and (
-                end_valid is None or m_end <= end_valid
-            )
-            if inside:
-                total += p["n_rows"]
-            else:
-                edge.append((p["retention"], ym))
-        if edge:
-            df = self.read_values()
-            cond = F.lit(False)
-            for tier, ym in edge:
-                cond = cond | ((F.col("retention") == tier) & (F.col("vt_month") == ym))
-            df = df.filter(cond)
-            if start_valid is not None:
-                df = df.filter(F.col("valid_time") >= start_valid)
-            if end_valid is not None:
-                df = df.filter(F.col("valid_time") < end_valid)
-            total += df.count()
-        return total
 
     def delete_series(self, series_ids) -> list[str]:
         from delta.tables import DeltaTable

@@ -419,7 +419,8 @@ def dedup_embedding(spark: SparkSession, sf_dir: str) -> DataFrame:
     ``cosine_q``, so the oracle stays bit-identical.
 
     ``floor6_once`` binds the dot fold so the rounding guard + the
-    τ-filter evaluate it once per pair — the plain ``floor6``
+    τ-filter evaluate it once in the join condition, plus once more in the
+    projection for the pairs that survive it — the plain ``floor6``
     before-plan ran the fold 8× per candidate pair (4 textual guard
     references × {join condition, projection}). The τ-threshold sits in
     the JOIN CONDITION, after the cheap conjuncts: Spark evaluates the

@@ -14,9 +14,6 @@ PHASE_WRITE_SERIES_VALUES_INSERT = "write.series_values_insert"
 PHASE_WRITE_RUN_SERIES_INSERT = "write.run_series_insert"
 PHASE_WRITE_SKIP_UNCHANGED = "write.skip_unchanged"
 PHASE_WRITE_TOTAL = "write.total"
-PHASE_READ_PLAN = "read.plan"
-PHASE_READ_COLLECT = "read.collect"
-PHASE_READ_TOTAL = "read.total"
 
 _enabled = False
 _phases: dict[str, float] = {}

@@ -2,11 +2,20 @@
 concurrency, snapshot isolation, and time travel over the same partitioned
 parquet layout as :class:`timedb_spark.store.Store`.
 
-The v1 store publishes file-at-a-time (atomic per file, not per batch) and
-readers list the directory — so a reader can observe half of an in-flight
-batch, and compaction/delete briefly swap directories under readers. This
-module adds the minimal table-format commit protocol that fixes all of it
-(the locally-buildable core of what Delta/Iceberg provide):
+The directory store publishes file-at-a-time (atomic per file, not per
+batch) and readers list the directory — so a reader can observe half of an
+in-flight batch, and compaction/delete briefly swap directories under
+readers. This module adds the minimal table-format commit protocol that
+fixes all of it (the locally-buildable core of what Delta/Iceberg provide).
+Every partition-level decision (write layout, compaction, erasure, TTL,
+footer stats) is :class:`~timedb_spark.store.Store`'s; this class supplies
+only the storage hooks that engine calls:
+
+- ``_live_files`` — the latest manifest's files by partition, pinned to its
+  version;
+- ``_publish_append`` — one append commit (idempotent under ``txn``);
+- ``_publish_rewrite`` — one remove/add commit pinned with
+  ``base_version``; a :class:`CommitConflict` makes the engine redo the op.
 
 - ``_manifests/v{N}.json`` — each version lists the COMPLETE set of data
   files in the table plus commit metadata. Readers resolve a manifest, then
@@ -40,19 +49,13 @@ from __future__ import annotations
 
 import json
 import os
-import shutil
 import uuid
-from datetime import date, datetime, timedelta, timezone
+from datetime import datetime, timezone
 from pathlib import Path
 
 from pyspark.sql import DataFrame, SparkSession
-from pyspark.sql import functions as F
-from pyspark.sql import types as T
 
-from timedb_spark.session import micros_parquet_writes
-
-from timedb_spark.schema import RETENTION_TTL_DAYS, SERIES_VALUES_SCHEMA
-from timedb_spark.store import _SORT_KEY, Store
+from timedb_spark.store import _READ_SCHEMA, Store
 
 
 class CommitConflict(Exception):
@@ -202,7 +205,57 @@ class SnapshotStore(Store):
             finally:
                 tmp.unlink(missing_ok=True)
 
-    # -- writes ------------------------------------------------------------
+    # -- storage protocol: the hooks the shared Store engine calls ----------
+
+    def _live_files(self) -> tuple[int, dict[str, list[Path]]]:
+        """The latest manifest's files by partition; its version is the base
+        every rewrite commit is pinned to."""
+        v, files = self._load()
+        parts: dict[str, list[Path]] = {}
+        for rel in sorted(files):
+            parts.setdefault(os.path.dirname(rel), []).append(self.values_path / rel)
+        return v, parts
+
+    def _adopt(self, stage: Path, target: Path) -> list[str]:
+        """Rename staged files into the dataset; returns their manifest
+        paths. Files are invisible to readers until a manifest lists them."""
+        return [str(p.relative_to(self.values_path)) for p in self._publish(stage, target)]
+
+    def _publish_append(self, stage: Path, txn: tuple[str, int] | None = None) -> None:
+        """ONE manifest commit for the whole batch, so a batch spanning many
+        partitions/files appears atomically (the directory store's per-file
+        renames can expose partial batches). A replay of an already
+        committed ``txn`` commits nothing (its orphans are invisible and
+        vacuum reclaims them)."""
+        added = self._adopt(stage, self.values_path)
+        if added:
+            self._commit(add=added, remove=set(), op="append", txn=txn)
+
+    def _publish_rewrite(self, base: int, op: str, replace: dict[str, tuple[list[Path], Path | None]]) -> bool:
+        """A rewrite as a manifest swap: ONE commit removes the replaced
+        partitions' files and adds the staged ones. Old files stay on disk
+        for readers pinned at older versions until :meth:`vacuum`.
+
+        The commit is pinned to the version the rewrite read
+        (``base_version``): an op that serializes AFTER a concurrent append
+        must redo its scan — the winner's files may hold rows it should have
+        compacted, erased or expired — so a lost race discards the staged
+        files and returns False, never a blind add/remove merge."""
+        add: list[str] = []
+        remove: set[str] = set()
+        for part, (old, stage) in replace.items():
+            remove.update(str(f.relative_to(self.values_path)) for f in old)
+            if stage is not None:
+                add += self._adopt(stage, self.values_path / part)
+        try:
+            self._commit(add=add, remove=remove, op=op, base_version=base)
+            return True
+        except CommitConflict:
+            for rel in add:  # no manifest references them: safe to unlink
+                (self.values_path / rel).unlink(missing_ok=True)
+            return False
+
+    # -- writes and reads ----------------------------------------------------
 
     def create(self) -> None:
         super().create()
@@ -211,285 +264,27 @@ class SnapshotStore(Store):
             self._commit(add=[], remove=set(), op="create")
 
     def append_values(self, df: DataFrame, *, txn: tuple[str, int] | None = None) -> None:
-        self._write_values(df.select([f.name for f in SERIES_VALUES_SCHEMA.fields]), txn=txn)
-
-    def _write_values(self, df: DataFrame, txn: tuple[str, int] | None = None) -> None:
-        """Stage → rename files into the dataset → ONE manifest commit.
-
-        Files are invisible to readers until the manifest lands, so a batch
-        spanning many partitions/files appears atomically (the v1 store's
-        per-file renames can expose partial batches). With ``txn``, a replay
-        of an already-committed batch stages files but commits nothing (the
-        orphans are invisible and vacuum reclaims them)."""
+        """With ``txn``, a replayed (already committed) batch is skipped
+        before any staging work."""
         if txn is not None and self._txn_committed(txn):
-            return  # replayed batch — skip even the staging work
-        # schema drift guard: the table's column/type contract is pinned by
-        # SERIES_VALUES_SCHEMA; a caller slipping through with renamed or
-        # retyped columns must fail loudly here, not corrupt the dataset
-        # with mixed-schema files readers discover much later.
-        expected = {(f.name, f.dataType.simpleString()) for f in SERIES_VALUES_SCHEMA.fields}
-        got = {(f.name, f.dataType.simpleString()) for f in df.schema.fields}
-        if got != expected:
-            raise ValueError(
-                f"append schema drift: unexpected={sorted(got - expected)} missing={sorted(expected - got)}"
-            )
-        stage = self._stage_dir()
-        with micros_parquet_writes(self.spark):
-            (
-                df.withColumn("vt_month", F.date_format("valid_time", "yyyyMM"))
-                .repartition("retention", "vt_month")
-                .sortWithinPartitions("retention", "vt_month", *_SORT_KEY)
-                .write.partitionBy("retention", "vt_month")
-                .mode("overwrite")
-                .parquet(str(stage))
-            )
-        added: list[str] = []
-        self.values_path.mkdir(parents=True, exist_ok=True)
-        for src in sorted(stage.rglob("*.parquet")):
-            rel = src.relative_to(stage)
-            dest = self.values_path / rel
-            dest.parent.mkdir(parents=True, exist_ok=True)
-            os.replace(src, dest)
-            added.append(str(rel))
-        shutil.rmtree(stage, ignore_errors=True)
-        if added:
-            self._commit(add=added, remove=set(), op="append", txn=txn)
-
-    # -- reads -------------------------------------------------------------
+            return
+        self._write_values(df, txn=txn)
 
     def read_values(self, version: int | None = None) -> DataFrame:
         """Consistent snapshot read: exactly the files of one manifest.
 
         ``basePath`` keeps hive partition-column derivation (retention,
         vt_month) over the explicit file list, so pruning behaves exactly
-        as in the v1 store."""
+        as in the directory store."""
         _, files = self._load(version)
-        read_schema = T.StructType(
-            list(SERIES_VALUES_SCHEMA.fields) + [T.StructField("vt_month", T.StringType(), True)]
-        )
         if not files:
-            return self.spark.createDataFrame([], read_schema)
+            return self.spark.createDataFrame([], _READ_SCHEMA)
         paths = [str(self.values_path / f) for f in files]
         return (
-            self.spark.read.schema(read_schema)
+            self.spark.read.schema(_READ_SCHEMA)
             .option("basePath", str(self.values_path))
             .parquet(*paths)
         )
-
-    # -- rewrite ops: new version, old files untouched ----------------------
-
-    def _partition_files(self, files: list[str]) -> dict[str, list[str]]:
-        by_part: dict[str, list[str]] = {}
-        for f in files:
-            by_part.setdefault(os.path.dirname(f), []).append(f)
-        return by_part
-
-    def _discard_staged(self, add: list[str]) -> None:
-        """Unlink a losing rewrite attempt's staged files — no manifest
-        references them yet, so removal is safe and saves them from
-        lingering until vacuum."""
-        for rel in add:
-            try:
-                (self.values_path / rel).unlink()
-            except FileNotFoundError:
-                pass
-
-    def compact(self, *, max_files_per_partition: int = 4, target_files: int = 1, cluster: str = "linear") -> list[str]:
-        """Compaction as a manifest swap: fragmented partitions are rewritten
-        into fresh files, then ONE commit removes the old files and adds the
-        new — readers pinned at older versions keep a consistent view (the
-        v1 store deletes the directory under them). ``cluster`` picks the
-        layout (linear primary-key order or series×time Z-order, see
-        Store._cluster_sort).
-
-        The commit is pinned to the file list the rewrite read
-        (``base_version``): losing the OCC race to a concurrent append
-        redoes the whole scan/rewrite against the winner's manifest, so a
-        freshly appended fragment is either re-compacted or left for the
-        next run — never silently dropped from the new version."""
-        while True:
-            base_v, files = self._load()
-            add: list[str] = []
-            remove: set[str] = set()
-            compacted: list[str] = []
-            for part, fs in sorted(self._partition_files(files).items()):
-                if len(fs) <= max_files_per_partition:
-                    continue
-                tmp = self.root / "_compact_tmp" / uuid.uuid4().hex
-                with micros_parquet_writes(self.spark):
-                    (
-                        self._cluster_sort(
-                            self.spark.read.option("basePath", str(self.values_path))
-                            .parquet(*[str(self.values_path / f) for f in fs])
-                            .drop("retention", "vt_month"),
-                            cluster,
-                            target_files,
-                        )
-                        .write.mode("overwrite")
-                        .parquet(str(tmp))
-                    )
-                for src in sorted(tmp.rglob("*.parquet")):
-                    rel = f"{part}/compact-{uuid.uuid4().hex}-{src.name}"
-                    os.replace(src, self.values_path / rel)
-                    add.append(rel)
-                shutil.rmtree(tmp, ignore_errors=True)
-                remove.update(fs)
-                compacted.append(part)
-            if not compacted:
-                return []
-            try:
-                self._commit(add=add, remove=remove, op="compact", base_version=base_v)
-                return compacted
-            except CommitConflict:
-                self._discard_staged(add)
-                continue
-
-    def delete_series(self, series_ids: "set[int] | list[int]") -> list[str]:
-        """Right-to-erasure as a manifest swap (same zone-map pruning as v1:
-        only partitions whose footer stats can contain a target rewrite)."""
-        import pyarrow.parquet as pq
-
-        targets = sorted(set(int(s) for s in series_ids))
-        if not targets:
-            return []
-        while True:
-            base_v, files = self._load()
-            add: list[str] = []
-            remove: set[str] = set()
-            rewritten: list[str] = []
-            for part, fs in sorted(self._partition_files(files).items()):
-                lo = hi = None
-                have_stats = True
-                for f in fs:
-                    md = pq.ParquetFile(self.values_path / f).metadata
-                    idx = {md.schema.column(i).name: i for i in range(md.num_columns)}
-                    for rg in range(md.num_row_groups):
-                        st = md.row_group(rg).column(idx["series_id"]).statistics
-                        if st is None or not st.has_min_max:
-                            have_stats = False
-                            break
-                        lo = st.min if lo is None else min(lo, st.min)
-                        hi = st.max if hi is None else max(hi, st.max)
-                    if not have_stats:
-                        break
-                if have_stats and lo is not None and not any(lo <= t <= hi for t in targets):
-                    continue  # zone maps prove absence — partition untouched
-                tmp = self.root / "_delete_tmp" / uuid.uuid4().hex
-                with micros_parquet_writes(self.spark):
-                    (
-                        self.spark.read.option("basePath", str(self.values_path))
-                        .parquet(*[str(self.values_path / f) for f in fs])
-                        .filter(~F.col("series_id").isin(targets))
-                        .drop("retention", "vt_month")
-                        .repartition(1)
-                        .sortWithinPartitions(*_SORT_KEY)
-                        .write.mode("overwrite")
-                        .parquet(str(tmp))
-                    )
-                for src in sorted(tmp.rglob("*.parquet")):
-                    rel = f"{part}/erase-{uuid.uuid4().hex}-{src.name}"
-                    os.replace(src, self.values_path / rel)
-                    add.append(rel)
-                shutil.rmtree(tmp, ignore_errors=True)
-                remove.update(fs)
-                rewritten.append(part)
-            if not rewritten:
-                break
-            try:
-                # base_version pin: an erase that serializes AFTER a
-                # concurrent append must re-scan the winner's files — they
-                # may contain the very series being erased.
-                self._commit(add=add, remove=remove, op="delete_series", base_version=base_v)
-                break
-            except CommitConflict:
-                self._discard_staged(add)
-                continue
-        # run_series mapping stays directory-based (see class docstring)
-        if self.run_series_path.exists() and any(self.run_series_path.glob("*.parquet")):
-            rs = self.spark.read.parquet(str(self.run_series_path)).filter(
-                ~F.col("series_id").isin(targets)
-            )
-            tmp_rs = self.root / "_delete_tmp" / "run_series"
-            with micros_parquet_writes(self.spark):
-                rs.write.mode("overwrite").parquet(str(tmp_rs))
-            shutil.rmtree(self.run_series_path)
-            tmp_rs.rename(self.run_series_path)
-            shutil.rmtree(self.root / "_delete_tmp", ignore_errors=True)
-        return rewritten
-
-    def apply_retention(self, now: datetime | None = None) -> list[str]:
-        """TTL as a manifest swap: expired (retention, vt_month) partitions
-        drop out of the NEW version; their files stay on disk for pinned
-        readers until :meth:`vacuum`."""
-        today = (now or datetime.now(timezone.utc)).date()
-        while True:
-            base_v, files = self._load()
-            remove: set[str] = set()
-            dropped: list[str] = []
-            for part, fs in sorted(self._partition_files(files).items()):
-                fields = dict(kv.split("=", 1) for kv in part.split("/") if "=" in kv)
-                tier, ym = fields.get("retention"), fields.get("vt_month")
-                ttl_days = RETENTION_TTL_DAYS.get(tier)
-                if ttl_days is None or ym is None:
-                    continue
-                year, month = int(ym[:4]), int(ym[4:])
-                nxt = date(year + (month == 12), month % 12 + 1, 1)
-                if (nxt - timedelta(days=1)) + timedelta(days=ttl_days) < today:
-                    remove.update(fs)
-                    dropped.append(part)
-            if not dropped:
-                return []
-            try:
-                # base_version pin: a concurrent append into an expired
-                # partition must be seen by the re-scan, not survive it.
-                self._commit(add=[], remove=remove, op="ttl", base_version=base_v)
-                return dropped
-            except CommitConflict:
-                continue
-
-    # -- footer stats over the MANIFEST file set ----------------------------
-
-    def partition_stats(self) -> list[dict]:
-        """Same footer-only stats as the v1 store, but over the current
-        manifest's file set — files awaiting vacuum (referenced only by old
-        versions) must not count, or :meth:`fast_count` would overcount."""
-        import pyarrow.parquet as pq
-
-        _, files = self._load()
-        out: list[dict] = []
-        for part, fs in sorted(self._partition_files(files).items()):
-            fields = dict(kv.split("=", 1) for kv in part.split("/") if "=" in kv)
-            n_rows = n_files = 0
-            sid_min = sid_max = vt_min = vt_max = None
-            for f in fs:
-                md = pq.ParquetFile(self.values_path / f).metadata
-                n_files += 1
-                n_rows += md.num_rows
-                idx = {md.schema.column(i).name: i for i in range(md.num_columns)}
-                for rg in range(md.num_row_groups):
-                    for col in ("series_id", "valid_time"):
-                        st = md.row_group(rg).column(idx[col]).statistics
-                        if st is None or not st.has_min_max:
-                            continue
-                        if col == "series_id":
-                            sid_min = st.min if sid_min is None else min(sid_min, st.min)
-                            sid_max = st.max if sid_max is None else max(sid_max, st.max)
-                        else:
-                            vt_min = st.min if vt_min is None else min(vt_min, st.min)
-                            vt_max = st.max if vt_max is None else max(vt_max, st.max)
-            out.append(
-                {
-                    "retention": fields.get("retention"),
-                    "vt_month": fields.get("vt_month"),
-                    "n_rows": n_rows,
-                    "n_files": n_files,
-                    "series_id_min": sid_min,
-                    "series_id_max": sid_max,
-                    "valid_time_min": vt_min,
-                    "valid_time_max": vt_max,
-                }
-            )
-        return out
 
     # -- vacuum: the only destructive step ----------------------------------
 

@@ -14,9 +14,29 @@ that layout as parquet directory partitioning:
   change_time) — the reference's ORDER BY key — so parquet row-group
   min/max statistics act as a sparse primary index for series/time
   predicates.
-- TTL expiry (:meth:`Store.apply_retention`) deletes whole expired
-  ``(retention, vt_month)`` directories, never rewriting data, exactly like
+- TTL expiry (:meth:`Store.apply_retention`) drops whole expired
+  ``(retention, vt_month)`` partitions, never rewriting data, exactly like
   CH's partition-drop TTL with its ``retention != 'forever'`` guard.
+
+:class:`Store` is the one engine behind every table format: the sorted
+partitioned write and its schema-drift guard, which partitions
+:meth:`~Store.compact` rewrites, the footer zone-map skip of
+:meth:`~Store.delete_series`, the TTL expiry rule, and the footer walk
+behind :meth:`~Store.partition_stats` and :meth:`~Store.fast_count`. A
+backend supplies only its storage protocol, through three hooks:
+
+- ``_live_files()`` — the live data files by partition, plus the base a
+  rewrite commit is pinned to;
+- ``_publish_append(stage, ...)`` — make a staged append visible;
+- ``_publish_rewrite(base, op, replace)`` — swap some partitions' files
+  for staged ones (or drop them); ``False`` means a lost race, and the
+  operation is redone against the new live files.
+
+This class is the directory backend: it globs the partition directories,
+publishes appends with per-file renames and rewrites with per-partition
+directory swaps. :class:`~timedb_spark.snapstore.SnapshotStore` commits
+through a manifest instead; :class:`~timedb_spark.deltastore.DeltaStore`
+maps the operations onto delta-spark.
 
 At 100 TB this layout means: a read for one tier + one month touches one
 directory; a read for N series inside it skips row groups via zone maps; a
@@ -44,6 +64,16 @@ from timedb_spark.session import micros_parquet_writes
 
 _SORT_KEY = ["series_id", "valid_time", "knowledge_time", "change_time"]
 
+#: Table read schema: the stored columns plus the derived partition column.
+_READ_SCHEMA = T.StructType(
+    list(SERIES_VALUES_SCHEMA.fields) + [T.StructField("vt_month", T.StringType(), True)]
+)
+#: Columns inside one data file: the partition columns live in the path.
+_FILE_SCHEMA = T.StructType([f for f in SERIES_VALUES_SCHEMA.fields if f.name != "retention"])
+
+#: Rewrite-plan result meaning "drop the whole partition".
+_DROP = object()
+
 
 def _naive_utc(v: datetime) -> datetime:
     """Collapse a tz-aware datetime to naive UTC (identity on naive input).
@@ -56,6 +86,60 @@ def _naive_utc(v: datetime) -> datetime:
     if v.tzinfo is not None:
         return v.astimezone(timezone.utc).replace(tzinfo=None)
     return v
+
+
+def _part_key(part: str) -> tuple[str, str]:
+    """``'retention=<tier>/vt_month=<YYYYMM>'`` → ``(tier, YYYYMM)``."""
+    tier, ym = (kv.split("=", 1)[1] for kv in part.split("/"))
+    return tier, ym
+
+
+def _month_span(ym: str) -> tuple[datetime, datetime]:
+    """``[first instant, first instant of the next month)`` of ``YYYYMM``."""
+    year, month = int(ym[:4]), int(ym[4:])
+    return datetime(year, month, 1), datetime(year + (month == 12), month % 12 + 1, 1)
+
+
+def _expired(tier: str, ym: str, today: date) -> bool:
+    """The TTL rule: a month partition is expired when even its *last* day
+    is past the tier's TTL horizon (matches CH evaluating ``toDate(
+    valid_time) + ttl < today`` for every row in the part). 'forever' has
+    no TTL, like the DDL's ``DELETE WHERE retention != 'forever'`` guard."""
+    ttl_days = RETENTION_TTL_DAYS.get(tier)
+    if ttl_days is None:
+        return False
+    last_day = _month_span(ym)[1].date() - timedelta(days=1)
+    return last_day + timedelta(days=ttl_days) < today
+
+
+def _footer_stats(files: list[Path]) -> tuple[int, dict[str, tuple | None]]:
+    """Row count and ``(min, max)`` of series_id and valid_time from the
+    files' parquet footers — zero data IO. A column's bounds are None when
+    any row group carries no min/max for it (INT96 timestamps carry none):
+    unknown, never a silent partial range. pyarrow returns TIMESTAMP_MICROS
+    (isAdjustedToUTC) stats as tz-AWARE datetimes; they are collapsed to
+    naive UTC like every other value in the system (CORRECTNESS_r06)."""
+    import pyarrow.parquet as pq
+
+    n_rows = 0
+    bounds: dict[str, tuple | None] = {"series_id": None, "valid_time": None}
+    void: set[str] = set()
+    for f in files:
+        md = pq.ParquetFile(f).metadata
+        n_rows += md.num_rows
+        idx = {md.schema.column(i).name: i for i in range(md.num_columns)}
+        for rg in range(md.num_row_groups):
+            for col in bounds:
+                st = md.row_group(rg).column(idx[col]).statistics
+                if st is None or not st.has_min_max:
+                    void.add(col)
+                    continue
+                lo, hi = st.min, st.max
+                if col == "valid_time":
+                    lo, hi = _naive_utc(lo), _naive_utc(hi)
+                cur = bounds[col]
+                bounds[col] = (lo, hi) if cur is None else (min(cur[0], lo), max(cur[1], hi))
+    return n_rows, {c: (None if c in void else b) for c, b in bounds.items()}
 
 
 class Store:
@@ -74,8 +158,7 @@ class Store:
         """Create both tables (empty partitioned datasets)."""
         self.root.mkdir(parents=True, exist_ok=True)
         if not self.values_path.exists():
-            empty = self.spark.createDataFrame([], SERIES_VALUES_SCHEMA)
-            self._write_values(empty)
+            self._write_values(self.spark.createDataFrame([], SERIES_VALUES_SCHEMA))
         if not self.run_series_path.exists():
             empty_rs = self.spark.createDataFrame([], RUN_SERIES_SCHEMA)
             with micros_parquet_writes(self.spark):
@@ -87,10 +170,10 @@ class Store:
             if p.exists():
                 shutil.rmtree(p)
 
-    # -- writes ------------------------------------------------------------
+    # -- storage protocol (the hooks a backend overrides) --------------------
     #
-    # Concurrency: every append writes to its OWN staging directory first,
-    # then publishes the finished files into the dataset with atomic per-file
+    # Concurrency: every write goes to its OWN staging directory first, then
+    # the finished files are published into the dataset with atomic per-file
     # renames. Direct `mode("append")` writes from concurrent jobs share
     # Hadoop's `_temporary/0` staging under the destination — one job's
     # commit/cleanup deletes the other's in-flight task files (observed as
@@ -98,41 +181,89 @@ class Store:
     # the reference's sessionless-parallel-insert guarantee (parallel writers
     # lose nothing); part filenames carry the writing job's UUID so
     # publishers can't collide. Cross-FILE atomicity of one batch is the same
-    # as the v1 committer's (file-at-a-time); a table format (Delta/Iceberg)
-    # is the drop-in upgrade when a 100 TB deployment needs atomic multi-file
+    # as the v1 committer's (file-at-a-time); the snapshot store's manifest
+    # commit is the upgrade when a deployment needs atomic multi-file
     # commits + snapshot isolation.
 
-    def _publish(self, stage: Path, target: Path) -> None:
+    def _live_files(self) -> tuple[object, dict[str, list[Path]]]:
+        """``(base, {'retention=<t>/vt_month=<m>': [file, ...]})`` — the
+        live data files by partition, in partition order. ``base`` is what
+        :meth:`_publish_rewrite` pins its commit to (nothing, here)."""
+        parts: dict[str, list[Path]] = {}
+        for f in sorted(self.values_path.glob("retention=*/vt_month=*/*.parquet")):
+            parts.setdefault(f"{f.parent.parent.name}/{f.parent.name}", []).append(f)
+        return None, parts
+
+    def _publish_append(self, stage: Path) -> None:
+        self._publish(stage, self.values_path)
+
+    def _publish_rewrite(self, base: object, op: str, replace: dict[str, tuple[list[Path], Path | None]]) -> bool:
+        """Per-partition directory swap: each replaced partition's directory
+        becomes its staged directory, or is removed when the stage is None.
+        Readers of OTHER partitions are unaffected, like CH's OPTIMIZE."""
+        for part, (_old, stage) in replace.items():
+            month_dir = self.values_path / part
+            shutil.rmtree(month_dir)
+            if stage is not None:
+                stage.rename(month_dir)
+        return True
+
+    def _publish(self, stage: Path, target: Path) -> list[Path]:
+        """Move the staged parquet files under ``target`` (atomic per-file
+        renames, relative layout kept); returns their new paths."""
         target.mkdir(parents=True, exist_ok=True)
+        moved: list[Path] = []
         for src in sorted(stage.rglob("*.parquet")):
-            rel = src.relative_to(stage)
-            dest = target / rel
+            dest = target / src.relative_to(stage)
             dest.parent.mkdir(parents=True, exist_ok=True)
             os.replace(src, dest)
+            moved.append(dest)
         shutil.rmtree(stage, ignore_errors=True)
+        return moved
 
     def _stage_dir(self) -> Path:
         return self.root / "_staging" / uuid.uuid4().hex
 
-    def _write_values(self, df: DataFrame) -> None:
+    # -- writes ------------------------------------------------------------
+
+    def _partition_sorted(self, df: DataFrame) -> DataFrame:
+        """The table's column contract plus its write layout: repartitioned
+        by ``(retention, vt_month)`` and sorted by the reference ORDER BY key.
+
+        Schema drift guard: the column/type contract is pinned by
+        SERIES_VALUES_SCHEMA; a caller slipping through with retyped columns
+        must fail loudly here, not corrupt the dataset with mixed-schema
+        files readers discover much later."""
+        df = df.select([f.name for f in SERIES_VALUES_SCHEMA.fields])
+        expected = {(f.name, f.dataType.simpleString()) for f in SERIES_VALUES_SCHEMA.fields}
+        got = {(f.name, f.dataType.simpleString()) for f in df.schema.fields}
+        if got != expected:
+            raise ValueError(
+                f"append schema drift: unexpected={sorted(got - expected)} missing={sorted(expected - got)}"
+            )
+        return (
+            df.withColumn("vt_month", F.date_format("valid_time", "yyyyMM"))
+            .repartition("retention", "vt_month")
+            # Partition cols lead the sort so FileFormatWriter's required
+            # per-task ordering (partition cols) is already satisfied and the
+            # writer does NOT re-sort — preserving the (series_id, valid_time,
+            # ...) row order that gives parquet row-group zone maps.
+            .sortWithinPartitions("retention", "vt_month", *_SORT_KEY)
+        )
+
+    def _write_values(self, df: DataFrame, **publish) -> None:
         stage = self._stage_dir()
         with micros_parquet_writes(self.spark):
             (
-                df.withColumn("vt_month", F.date_format("valid_time", "yyyyMM"))
-                .repartition("retention", "vt_month")
-                # Partition cols lead the sort so FileFormatWriter's required
-                # per-task ordering (partition cols) is already satisfied and the
-                # writer does NOT re-sort — preserving the (series_id, valid_time,
-                # ...) row order that gives parquet row-group zone maps.
-                .sortWithinPartitions("retention", "vt_month", *_SORT_KEY)
+                self._partition_sorted(df)
                 .write.partitionBy("retention", "vt_month")
                 .mode("overwrite")
                 .parquet(str(stage))
             )
-        self._publish(stage, self.values_path)
+        self._publish_append(stage, **publish)
 
     def append_values(self, df: DataFrame) -> None:
-        self._write_values(df.select([f.name for f in SERIES_VALUES_SCHEMA.fields]))
+        self._write_values(df)
 
     def append_run_series(self, df: DataFrame) -> None:
         stage = self._stage_dir()
@@ -143,12 +274,7 @@ class Store:
     # -- reads -------------------------------------------------------------
 
     def read_values(self) -> DataFrame:
-        # NOTE: StructType.add mutates in place — build the read schema fresh
-        # so the shared SERIES_VALUES_SCHEMA constant is never modified.
-        read_schema = T.StructType(
-            list(SERIES_VALUES_SCHEMA.fields) + [T.StructField("vt_month", T.StringType(), True)]
-        )
-        return self.spark.read.schema(read_schema).parquet(str(self.values_path))
+        return self.spark.read.schema(_READ_SCHEMA).parquet(str(self.values_path))
 
     def prune_months(self, df: DataFrame, start_valid: datetime | None, end_valid: datetime | None) -> DataFrame:
         """Partition pruning on vt_month derived from a valid_time range —
@@ -165,12 +291,18 @@ class Store:
         raw = self.spark.read.schema(RUN_SERIES_SCHEMA).parquet(str(self.run_series_path))
         return raw.groupBy("series_id", "run_id").agg(F.max("first_seen").alias("first_seen"))
 
+    def _read_files(self, files: list[Path]) -> DataFrame:
+        """One partition's rows (without its path-derived columns)."""
+        return self.spark.read.schema(_FILE_SCHEMA).parquet(*[str(f) for f in files])
+
     # -- metadata-only stats (parquet footers, no data IO) -----------------
 
     def partition_stats(self) -> list[dict]:
         """Per-``(retention, vt_month)`` stats from parquet FOOTERS only:
         row count, file count, and (series_id, valid_time) min/max from
         row-group statistics — the zone maps the sorted write laid down.
+        Only live files count: files awaiting a snapshot store's vacuum must
+        not, or :meth:`fast_count` would overcount.
 
         Zero data IO: answers "how much is where" (the planner/ops
         question behind TTL sizing, compaction scheduling, count(*) by
@@ -178,72 +310,67 @@ class Store:
         :meth:`apply_retention`; on an object store with millions of files
         the same loop distributes as a ``spark.range(n_files)``-keyed map
         over the file list."""
-        import pyarrow.parquet as pq
-
         out: list[dict] = []
-        for tier_dir in sorted(self.values_path.glob("retention=*")):
-            tier = tier_dir.name.split("=", 1)[1]
-            for month_dir in sorted(tier_dir.glob("vt_month=*")):
-                ym = month_dir.name.split("=", 1)[1]
-                n_rows = n_files = 0
-                sid_min = sid_max = vt_min = vt_max = None
-                for f in month_dir.glob("*.parquet"):
-                    md = pq.ParquetFile(f).metadata
-                    n_files += 1
-                    n_rows += md.num_rows
-                    idx = {md.schema.column(i).name: i for i in range(md.num_columns)}
-                    for rg in range(md.num_row_groups):
-                        for col in ("series_id", "valid_time"):
-                            st = md.row_group(rg).column(idx[col]).statistics
-                            if st is None or not st.has_min_max:
-                                continue
-                            if col == "series_id":
-                                sid_min = st.min if sid_min is None else min(sid_min, st.min)
-                                sid_max = st.max if sid_max is None else max(sid_max, st.max)
-                            else:
-                                # pyarrow returns TIMESTAMP_MICROS
-                                # (isAdjustedToUTC, Spark's default output
-                                # type) footer stats as tz-AWARE datetimes;
-                                # every other value in the system is naive
-                                # UTC. Normalize HERE so consumers
-                                # (createDataFrame gate wrappers, the driver
-                                # canonicalizer) never see a mixed class
-                                # (CORRECTNESS_r06 partition_stats hash-red).
-                                mn, mx = _naive_utc(st.min), _naive_utc(st.max)
-                                vt_min = mn if vt_min is None else min(vt_min, mn)
-                                vt_max = mx if vt_max is None else max(vt_max, mx)
-                if n_rows > 0 and (vt_min is None or sid_min is None):
-                    # Never return silent None bounds for a non-empty
-                    # partition: absent footer stats mean the store's zone
-                    # maps are void (r6-r8 this surfaced as three rounds of
-                    # driver-red — INT96 timestamp parquet written under a
-                    # default session carries no min/max statistics).
-                    raise RuntimeError(
-                        f"partition retention={tier}/vt_month={ym} has {n_rows} rows but "
-                        "no parquet footer min/max statistics on "
-                        f"{'valid_time' if vt_min is None else 'series_id'}. The files were "
-                        "likely written with spark.sql.parquet.outputTimestampType=INT96 "
-                        "(Spark's default), which stores NO row-group statistics for "
-                        "timestamps and silently voids the store's zone maps. Rewrite the "
-                        "partition via Store.compact() with a session pinning "
-                        "outputTimestampType=TIMESTAMP_MICROS (timedb_spark.session.get_spark "
-                        "does; Store's own write paths now pin it regardless of session)."
-                    )
-                out.append(
-                    {
-                        "retention": tier,
-                        "vt_month": ym,
-                        "n_rows": n_rows,
-                        "n_files": n_files,
-                        "series_id_min": sid_min,
-                        "series_id_max": sid_max,
-                        "valid_time_min": vt_min,
-                        "valid_time_max": vt_max,
-                    }
+        for part, files in self._live_files()[1].items():
+            tier, ym = _part_key(part)
+            n_rows, b = _footer_stats(files)
+            if n_rows > 0 and None in b.values():
+                # Never return silent None bounds for a non-empty
+                # partition: absent footer stats mean the store's zone
+                # maps are void (r6-r8 this surfaced as three rounds of
+                # driver-red — INT96 timestamp parquet written under a
+                # default session carries no min/max statistics).
+                col = "valid_time" if b["valid_time"] is None else "series_id"
+                raise RuntimeError(
+                    f"partition retention={tier}/vt_month={ym} has {n_rows} rows but "
+                    f"no parquet footer min/max statistics on {col}. The files were "
+                    "likely written with spark.sql.parquet.outputTimestampType=INT96 "
+                    "(Spark's default), which stores NO row-group statistics for "
+                    "timestamps and silently voids the store's zone maps. Rewrite the "
+                    "partition via Store.compact() with a session pinning "
+                    "outputTimestampType=TIMESTAMP_MICROS (timedb_spark.session.get_spark "
+                    "does; Store's own write paths now pin it regardless of session)."
                 )
+            sid, vt = b["series_id"] or (None, None), b["valid_time"] or (None, None)
+            out.append(
+                {
+                    "retention": tier,
+                    "vt_month": ym,
+                    "n_rows": n_rows,
+                    "n_files": len(files),
+                    "series_id_min": sid[0],
+                    "series_id_max": sid[1],
+                    "valid_time_min": vt[0],
+                    "valid_time_max": vt[1],
+                }
+            )
         return out
 
-    # -- compaction (the CH background-merge / OPTIMIZE analogue) ----------
+    # -- partition rewrites: compaction, erasure, TTL -----------------------
+
+    def _rewrite(self, op: str, plan) -> list[str]:
+        """Run ``plan(part, files)`` over every live partition and publish
+        the result as ONE rewrite. The plan returns None to leave the
+        partition alone, ``_DROP`` to drop it, or a DataFrame of its new
+        rows, written partition-at-a-time (bounded memory; any partition is
+        independent, so a 100 TB store rewrites in parallel by partition).
+        A lost commit race redoes the whole scan against the new live files.
+        Returns the rewritten partitions (relative)."""
+        while True:
+            base, parts = self._live_files()
+            replace: dict[str, tuple[list[Path], Path | None]] = {}
+            for part, files in parts.items():
+                new = plan(part, files)
+                if new is None:
+                    continue
+                stage = None
+                if new is not _DROP:
+                    stage = self._stage_dir()
+                    with micros_parquet_writes(self.spark):
+                        new.write.mode("overwrite").parquet(str(stage))
+                replace[part] = (files, stage)
+            if not replace or self._publish_rewrite(base, op, replace):
+                return list(replace)
 
     def _cluster_sort(self, df: DataFrame, cluster: str, target_files: int) -> DataFrame:
         """Compaction clustering strategies: ``linear`` restores the
@@ -269,65 +396,60 @@ class Store:
 
     def compact(self, *, max_files_per_partition: int = 4, target_files: int = 1, cluster: str = "linear") -> list[str]:
         """Rewrite fragmented ``(retention, vt_month)`` partitions into
-        ``target_files`` sorted files each.
+        ``target_files`` sorted files each (the CH background-merge /
+        OPTIMIZE analogue).
 
         Interleaved appends leave many small files per partition AND destroy
         the global (series_id, valid_time, …) clustering inside it — each
         append is sorted only within itself, so row-group zone maps degrade
         as appends accumulate. Compaction restores both: one read + sorted
-        rewrite per fragmented partition, partition-at-a-time (bounded
-        memory; any partition is independent, so a 100 TB store compacts in
-        parallel by partition with no coordination). Readers of OTHER
-        partitions are unaffected; like CH's OPTIMIZE, the swap is per
-        partition. ``cluster`` picks the layout (see :meth:`_cluster_sort`).
-        Returns the rewritten partition dirs (relative)."""
-        compacted: list[str] = []
-        tmp_root = self.root / "_compact_tmp"
-        for tier_dir in sorted(self.values_path.glob("retention=*")):
-            for month_dir in sorted(tier_dir.glob("vt_month=*")):
-                files = list(month_dir.glob("*.parquet"))
-                if len(files) <= max_files_per_partition:
-                    continue
-                tmp = tmp_root / tier_dir.name / month_dir.name
-                with micros_parquet_writes(self.spark):
-                    (
-                        self._cluster_sort(self.spark.read.parquet(str(month_dir)), cluster, target_files)
-                        .write.mode("overwrite")
-                        .parquet(str(tmp))
-                    )
-                shutil.rmtree(month_dir)
-                tmp.rename(month_dir)
-                compacted.append(f"{tier_dir.name}/{month_dir.name}")
-        if tmp_root.exists():
-            shutil.rmtree(tmp_root)
-        return compacted
+        rewrite per fragmented partition. ``cluster`` picks the layout (see
+        :meth:`_cluster_sort`). Returns the rewritten partitions (relative)."""
 
-    # -- TTL (ref DDL TTL ... DELETE WHERE retention != 'forever') ---------
+        def merge(part: str, files: list[Path]):
+            if len(files) <= max_files_per_partition:
+                return None
+            return self._cluster_sort(self._read_files(files), cluster, target_files)
+
+        return self._rewrite("compact", merge)
 
     def apply_retention(self, now: datetime | None = None) -> list[str]:
-        """Drop whole expired (retention, vt_month) partitions.
-
-        A month partition is expired when even its *last* instant is past the
-        tier's TTL horizon (matches CH evaluating ``toDate(valid_time) + ttl
-        < today`` for every row in the part). 'forever' is excluded before
-        any evaluation, like the DDL's DELETE WHERE guard. Returns dropped
-        partition dirs (relative)."""
+        """Drop whole expired ``(retention, vt_month)`` partitions (ref DDL
+        ``TTL ... DELETE WHERE retention != 'forever'``, rule in
+        :func:`_expired`). Metadata work only; returns the dropped
+        partitions (relative)."""
         today = (now or datetime.now(timezone.utc)).date()
-        dropped: list[str] = []
-        for tier_dir in sorted(self.values_path.glob("retention=*")):
-            tier = tier_dir.name.split("=", 1)[1]
-            ttl_days = RETENTION_TTL_DAYS.get(tier)
-            if ttl_days is None:  # 'forever'
-                continue
-            for month_dir in sorted(tier_dir.glob("vt_month=*")):
-                ym = month_dir.name.split("=", 1)[1]
-                year, month = int(ym[:4]), int(ym[4:])
-                nxt = date(year + (month == 12), month % 12 + 1, 1)
-                last_day = nxt - timedelta(days=1)
-                if last_day + timedelta(days=ttl_days) < today:
-                    shutil.rmtree(month_dir)
-                    dropped.append(f"retention={tier}/vt_month={ym}")
-        return dropped
+        return self._rewrite("ttl", lambda part, files: _DROP if _expired(*_part_key(part), today) else None)
+
+    def delete_series(self, series_ids: "set[int] | list[int]") -> list[str]:
+        """Erase specific series everywhere (GDPR / right-to-erasure path):
+        rewrite ONLY the partitions whose footer (series_id min/max) stats
+        can contain a target id — the anti-join rewrite never touches
+        innocent partitions, so at 100 TB the cost is proportional to where
+        the series actually lives, not store size. Returns rewritten
+        partitions (relative)."""
+        targets = sorted(set(int(s) for s in series_ids))
+        if not targets:
+            return []
+
+        def erase(part: str, files: list[Path]):
+            sid = _footer_stats(files)[1]["series_id"]
+            if sid is not None and not any(sid[0] <= t <= sid[1] for t in targets):
+                return None  # zone maps prove the series is absent
+            keep = self._read_files(files).filter(~F.col("series_id").isin(targets))
+            return keep.repartition(1).sortWithinPartitions(*_SORT_KEY)
+
+        rewritten = self._rewrite("delete_series", erase)
+        # The run_series mapping must forget the series too. It is a small
+        # dedup-on-read table, directory-swapped on every backend.
+        if any(self.run_series_path.glob("*.parquet")):
+            stage = self._stage_dir()
+            rs = self.spark.read.schema(RUN_SERIES_SCHEMA).parquet(str(self.run_series_path))
+            with micros_parquet_writes(self.spark):
+                rs.filter(~F.col("series_id").isin(targets)).write.mode("overwrite").parquet(str(stage))
+            shutil.rmtree(self.run_series_path)
+            stage.rename(self.run_series_path)
+        return rewritten
 
     # -- metadata-only query answering --------------------------------------
 
@@ -339,7 +461,7 @@ class Store:
         end_valid: datetime | None = None,
     ) -> int:
         """count(*) under (retention tier, valid_time range) predicates with
-        footer metadata wherever the predicate aligns to partition
+        partition metadata wherever the predicate aligns to partition
         boundaries: months fully inside ``[start_valid, end_valid)`` are
         answered from :meth:`partition_stats` row counts (zero data IO);
         only the boundary months — at most two per tier — fall back to a
@@ -353,10 +475,7 @@ class Store:
         for p in self.partition_stats():
             if tiers is not None and p["retention"] not in tiers:
                 continue
-            ym = p["vt_month"]
-            m_start = datetime(int(ym[:4]), int(ym[4:]), 1)
-            nxt = date(m_start.year + (m_start.month == 12), m_start.month % 12 + 1, 1)
-            m_end = datetime(nxt.year, nxt.month, nxt.day)
+            m_start, m_end = _month_span(p["vt_month"])
             if (end_valid is not None and m_start >= end_valid) or (
                 start_valid is not None and m_end <= start_valid
             ):
@@ -367,7 +486,7 @@ class Store:
             if inside:
                 total += p["n_rows"]
             else:
-                edge_months.append((p["retention"], ym))
+                edge_months.append((p["retention"], p["vt_month"]))
         if edge_months:
             df = self.read_values()
             cond = F.lit(False)
@@ -381,64 +500,3 @@ class Store:
             total += df.count()
         self._last_fast_count_scanned = edge_months  # test/observability hook
         return total
-
-    # -- targeted delete (GDPR / right-to-erasure path) ---------------------
-
-    def delete_series(self, series_ids: "set[int] | list[int]") -> list[str]:
-        """Erase specific series everywhere: rewrite ONLY the partitions
-        whose footer (series_id min/max) stats can contain a target id —
-        the anti-join rewrite never touches innocent partitions, so at
-        100 TB the cost is proportional to where the series actually
-        lives, not store size. Partition-at-a-time like :meth:`compact`
-        (independent partitions ⇒ trivially parallel). Returns rewritten
-        partition dirs (relative)."""
-        targets = sorted(set(int(s) for s in series_ids))
-        if not targets:
-            return []
-        import pyarrow.parquet as pq
-
-        rewritten: list[str] = []
-        tmp_root = self.root / "_delete_tmp"
-        for tier_dir in sorted(self.values_path.glob("retention=*")):
-            for month_dir in sorted(tier_dir.glob("vt_month=*")):
-                lo = hi = None
-                for f in month_dir.glob("*.parquet"):
-                    md = pq.ParquetFile(f).metadata
-                    idx = {md.schema.column(i).name: i for i in range(md.num_columns)}
-                    for rg in range(md.num_row_groups):
-                        st = md.row_group(rg).column(idx["series_id"]).statistics
-                        if st is None or not st.has_min_max:
-                            lo, hi = None, None  # stats missing → must scan
-                            break
-                        lo = st.min if lo is None else min(lo, st.min)
-                        hi = st.max if hi is None else max(hi, st.max)
-                    else:
-                        continue
-                    break
-                if lo is not None and not any(lo <= t <= hi for t in targets):
-                    continue  # zone maps prove the series is absent
-                df = self.spark.read.parquet(str(month_dir)).filter(
-                    ~F.col("series_id").isin(targets)
-                )
-                tmp = tmp_root / tier_dir.name / month_dir.name
-                with micros_parquet_writes(self.spark):
-                    df.repartition(1).sortWithinPartitions(*_SORT_KEY).write.mode(
-                        "overwrite"
-                    ).parquet(str(tmp))
-                shutil.rmtree(month_dir)
-                tmp.rename(month_dir)
-                rewritten.append(f"{tier_dir.name}/{month_dir.name}")
-        if tmp_root.exists():
-            shutil.rmtree(tmp_root)
-        # the run_series mapping must forget the series too
-        if self.run_series_path.exists() and any(self.run_series_path.glob("*.parquet")):
-            rs = self.spark.read.parquet(str(self.run_series_path)).filter(
-                ~F.col("series_id").isin(targets)
-            )
-            tmp_rs = tmp_root / "run_series"
-            with micros_parquet_writes(self.spark):
-                rs.write.mode("overwrite").parquet(str(tmp_rs))
-            shutil.rmtree(self.run_series_path)
-            tmp_rs.rename(self.run_series_path)
-            shutil.rmtree(tmp_root, ignore_errors=True)
-        return rewritten

@@ -670,7 +670,9 @@ class DedupProcessor(StatefulProcessor):
     def init(self, handle: "StatefulProcessorHandle") -> None:
         from timedb_spark.streaming._tws_fastpath import patch_implicit_key, wrap_map_state
 
-        patch_implicit_key(handle, pipeline=True)
+        # No pipelining under TTL: its ProcessingTime mode makes the runner's
+        # stock timestamp reads share the socket with deferred responses.
+        patch_implicit_key(handle, pipeline=not self._ttl)
         if self._ttl:
             self._seen = handle.getMapState(
                 "seen", "text_key STRING", "doc_id LONG, n_dups LONG",
