@@ -97,6 +97,7 @@ def test_every_gate_query_output_schema_is_flat(spark):
         # materialized Spark plan (population b), not driver Python
         "ts_runs_test",
         "ts_ljung_box",
+        "ts_pacf",               # shares ts_ljung_box's pinned _acf chain
         "ts_spectral_entropy",
         "ts_mk_trend",
         "ts_periodogram",

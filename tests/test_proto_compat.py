@@ -17,6 +17,8 @@ import sys
 
 from timedb_spark.streaming import _proto_compat
 
+ROOT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+
 
 def test_probe_result_matches_importability():
     got = _proto_compat.ensure_protobuf()
@@ -54,7 +56,7 @@ def test_failure_message_names_every_candidate_tried():
     (names the tried paths and why each failed)."""
     code = """
 import os, sys
-sys.path.insert(0, "/root/repo")
+sys.path.insert(0, sys.argv[1])  # the checkout under test
 from timedb_spark.streaming import _proto_compat as pc
 pc._probed = None
 pc._CANDIDATE_DIRS[:] = ["/nonexistent/sdk"]
@@ -69,7 +71,7 @@ else:
     print("OK:" + msg[:80])
 """
     env = {k: v for k, v in os.environ.items() if k not in ("PYTHONPATH", "TIMEDB_PROTOBUF_DIR")}
-    out = subprocess.run([sys.executable, "-c", code], capture_output=True, text=True, env=env)
+    out = subprocess.run([sys.executable, "-c", code, ROOT], capture_output=True, text=True, env=env)
     assert out.returncode == 0, out.stderr[-500:]
     assert out.stdout.startswith(("OK:", "PIPINSTALLED"))
 
@@ -120,7 +122,7 @@ def test_probe_opt_out_leaves_environment_untouched():
     code = """
 import os, sys
 os.environ["TIMEDB_NO_PROTOBUF_PROBE"] = "1"
-sys.path.insert(0, "/root/repo")
+sys.path.insert(0, sys.argv[1])  # the checkout under test
 import importlib.util
 from timedb_spark.streaming import _proto_compat as pc
 pc._probed = None
@@ -138,7 +140,7 @@ else:
 print("OK")
 """
     env = {k: v for k, v in os.environ.items() if k not in ("PYTHONPATH", "TIMEDB_PROTOBUF_DIR")}
-    out = subprocess.run([sys.executable, "-c", code], capture_output=True, text=True, env=env)
+    out = subprocess.run([sys.executable, "-c", code, ROOT], capture_output=True, text=True, env=env)
     assert out.returncode == 0, out.stderr[-500:]
     assert out.stdout.strip() == "OK"
 

@@ -13,13 +13,16 @@ subprocess session to pin the addPyFile shipping path.
 import subprocess
 import sys
 import textwrap
+from pathlib import Path
+
+ROOT = str(Path(__file__).resolve().parents[1])
 
 
 def test_worker_import_is_cwd_independent(tmp_path):
     script = textwrap.dedent(
         """
         import sys
-        sys.path.insert(0, "/root/repo")
+        sys.path.insert(0, sys.argv[1])  # the checkout under test
         from pyspark.sql import SparkSession
 
         spark = (
@@ -40,7 +43,7 @@ def test_worker_import_is_cwd_independent(tmp_path):
         """
     )
     r = subprocess.run(
-        [sys.executable, "-c", script],
+        [sys.executable, "-c", script, ROOT],
         cwd=str(tmp_path),
         capture_output=True,
         text=True,

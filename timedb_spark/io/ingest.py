@@ -124,19 +124,23 @@ class IngestResult(NamedTuple):
     quarantined: int
 
 
+def _default_retention(good: DataFrame) -> DataFrame:
+    """Retention precedence for landing rows: per-row column when any row
+    sets it (unset rows take the default), else the column is dropped so
+    the write's own retention applies."""
+    from timedb_spark.schema import DEFAULT_RETENTION
+
+    if good.where(F.col("retention").isNotNull()).isEmpty():
+        return good.drop("retention")
+    return good.withColumn("retention", F.coalesce("retention", F.lit(DEFAULT_RETENTION)))
+
+
 def ingest_landing(db, batch: LandingBatch, **write_kwargs) -> IngestResult:
     """Write a landing batch's good rows through the client write path
     (defaults stamping, run_id, skip_unchanged all apply); count the
-    quarantine. Retention precedence: per-row column when present."""
-    from timedb_spark.schema import DEFAULT_RETENTION
-
-    good = batch.good
-    if good.where(F.col("retention").isNotNull()).isEmpty():
-        good = good.drop("retention")
-    else:  # per-row tiers; unset rows take the default
-        good = good.withColumn("retention", F.coalesce("retention", F.lit(DEFAULT_RETENTION)))
+    quarantine. Retention precedence: :func:`_default_retention`."""
     # valid_time parsed with offset → session-tz instant; store is UTC.
-    res = db.write(good, **write_kwargs)
+    res = db.write(_default_retention(batch.good), **write_kwargs)
     return IngestResult(written=res.written, quarantined=batch.bad.count())
 
 
@@ -181,19 +185,13 @@ def stream_landing_to_store(
 
     Returns the number of foreachBatch invocations this drain executed.
     """
-    from timedb_spark.schema import DEFAULT_RETENTION
-
     n_batches = 0
 
     def _write(batch_df: DataFrame, batch_id: int) -> None:
         nonlocal n_batches
         n_batches += 1
         split = _split_landing(batch_df)
-        good = split.good
-        if good.where(F.col("retention").isNotNull()).isEmpty():
-            good = good.drop("retention")
-        else:
-            good = good.withColumn("retention", F.coalesce("retention", F.lit(DEFAULT_RETENTION)))
+        good = _default_retention(split.good)
         if not good.isEmpty():
             db.write(good, txn=(app_id, int(batch_id)))
         from timedb_spark.session import micros_parquet_writes

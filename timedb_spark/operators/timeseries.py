@@ -16,13 +16,22 @@ Scale posture:
   the O(n·m) broadcast-nested-loop Spark would otherwise pick;
 - rollup uses GROUPING SETS — one shuffle for all resolutions (partial aggs
   combine map-side).
+
+The per-user array operators (theta, cusum, rsi, ljung_box, …) are built
+from a few shared per-series steps: :func:`_cents_history` (each user's
+values as exact integer cents in ``(ts, event_id)`` order, from one sorted
+collect), :func:`_first_diffs` (one-step changes), :func:`_acf` (the
+pinned centre → lag-k autocorrelation chain) with :func:`_ljung_box_q`,
+and :func:`_holdout_maes` (the baseline holdout errors). Their DuckDB
+oracles share the matching SQL fragments (``_CENTS_HIST_SQL``,
+``_ACF_DENOM_SQL``, ``_LB_Q_SQL``).
 """
 
 from __future__ import annotations
 
 import math
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
@@ -33,6 +42,96 @@ from timedb_spark.io.tables import load_table
 
 def _d(col: str):
     return F.col(col).cast("decimal(18,2)")
+
+
+# ---------------------------------------------------------------------------
+# shared per-series steps of the per-user array operators
+# ---------------------------------------------------------------------------
+
+
+def _cents_history(spark: SparkSession, sf_dir: str, min_obs: int | None = None) -> DataFrame:
+    """Per-user ``(user_id, c, n_obs)``: the event values as exact integer
+    cents (``array<long>``) in ``(ts, event_id)`` order, from ONE
+    groupBy(user) sorted collect — the only shuffle of every operator built
+    on it; per-user arrays are bounded by entity history (pre-filter by time
+    for unbounded feeds). ``min_obs`` keeps users with at least that many
+    observations."""
+    ev = load_table(spark, sf_dir, "events")
+    s = F.struct(F.col("ts"), F.col("event_id"), F.col("value"))
+    g = ev.groupBy("user_id").agg(F.array_sort(F.collect_list(s)).alias("hist"))
+    cents = F.transform("hist", lambda r: (r["value"].cast("decimal(18,2)") * 100).cast("long"))
+    g = g.select("user_id", cents.alias("c"), F.size("hist").alias("n_obs"))
+    return g if min_obs is None else g.filter(F.col("n_obs") >= min_obs)
+
+
+#: DuckDB twin of :func:`_cents_history` (without the ``min_obs`` filter):
+#: the ``hist(user_id, c)`` CTE the per-user array oracles start from.
+_CENTS_HIST_SQL = """hist AS (
+    SELECT user_id,
+           list_transform(
+               list_sort(list(struct_pack(ts := ts, e := event_id, v := value))),
+               s -> CAST(CAST(s.v AS DECIMAL(18,2)) * 100 AS BIGINT)) AS c
+    FROM events GROUP BY user_id
+)"""
+
+
+def _first_diffs() -> Column:
+    """One-step changes ``c[i] − c[i−1]`` (i = 2..n_obs) of a
+    :func:`_cents_history` frame, in exact integer cents."""
+    return F.transform(
+        F.sequence(F.lit(2), F.col("n_obs")),
+        lambda i: F.element_at("c", i) - F.element_at("c", i - 1),
+    )
+
+
+def _acf(g: DataFrame, lags: int) -> DataFrame:
+    """Sample autocorrelations ``r1..r{lags}`` of each user's array ``c``
+    (length ``n_obs``): μ from an exact integer fold, the centred series,
+    the squared-deviation denominator, then each lag's cross-product
+    Σ(x_t−μ)(x_{t+k}−μ) as a fixed-order fold over the deviations, divided
+    by the denominator (identical double op order in the list_reduce
+    oracle, :func:`_lb_num_sql`). Zero-variance series drop. Returns
+    ``(user_id, n_obs, r1..r{lags})``.
+
+    The three lazy ``localCheckpoint`` pins hold one row per user — the
+    query's own output cardinality. Without them Catalyst inlines ``mu``
+    (itself a fold) into the ``dev`` lambda per element, ``dev`` into every
+    ``element_at`` of the lag folds (25 fold nodes instead of 7 at five
+    lags), and each r_k into every textual reference downstream (the
+    Ljung–Box Q squares each r_k and is itself referenced twice). The
+    denom > 0 guard runs BEFORE the last pin materializes the ANSI
+    divisions."""
+    zero = F.lit(0).cast("long")
+    mu = F.aggregate("c", zero, lambda acc, x: acc + x).cast("double") / F.col("n_obs").cast("double")
+    g = g.withColumn("mu", mu).localCheckpoint(eager=False)
+    g = g.withColumn("dev", F.transform("c", lambda x: x.cast("double") - F.col("mu")))
+    g = g.withColumn("denom", F.aggregate("dev", F.lit(0.0), lambda acc, x: acc + x * x))
+    g = g.select("user_id", "n_obs", "dev", "denom").localCheckpoint(eager=False)
+
+    def _num(k: int):
+        return F.aggregate(
+            F.sequence(F.lit(1), F.col("n_obs") - k),
+            F.lit(0.0),
+            lambda acc, t: acc
+            + F.element_at("dev", t.cast("int")) * F.element_at("dev", (t + k).cast("int")),
+        )
+
+    g = g.filter(F.col("denom") > 0)
+    return g.select(
+        "user_id",
+        "n_obs",
+        *[(_num(k) / F.col("denom")).alias(f"r{k}") for k in range(1, lags + 1)],
+    ).localCheckpoint(eager=False)
+
+
+def _ljung_box_q() -> Column:
+    """Ljung–Box Q = n(n+2) Σ_{k=1..5} r_k²/(n−k) over :func:`_acf`'s
+    columns."""
+    nd = F.col("n_obs").cast("double")
+    q = F.lit(0.0)
+    for k in range(1, _LB_LAGS + 1):
+        q = q + F.col(f"r{k}") * F.col(f"r{k}") / (nd - float(k))
+    return nd * (nd + 2.0) * q
 
 
 # ---------------------------------------------------------------------------
@@ -1548,9 +1647,7 @@ def theta_forecast(spark: SparkSession, sf_dir: str) -> DataFrame:
     is the canonical model a timedb user runs on a read_latest frame.
 
     Determinism/scale shape (one shuffle, zero Python):
-    - One groupBy(user) with array_sort(collect_list(struct)) — the only
-      shuffle; per-user arrays are bounded by entity history (pre-filter by
-      time for unbounded feeds, as a production fit would).
+    - One :func:`_cents_history` sorted collect — the only shuffle.
     - OLS moments in EXACT integer cents (Σx, Σtx as longs; Σt, Σt² closed
       forms), so slope/intercept are one long→double division per engine —
       no float-summation order dependence.
@@ -1558,18 +1655,11 @@ def theta_forecast(spark: SparkSession, sf_dir: str) -> DataFrame:
       (``F.aggregate`` / ``list_reduce``), identical operation order.
     - Outputs floor-scaled to 6 dp (engine-divergent round() tie modes).
     """
-    ev = load_table(spark, sf_dir, "events")
-    s = F.struct(F.col("ts"), F.col("event_id"), F.col("value"))
-    g = ev.groupBy("user_id").agg(F.array_sort(F.collect_list(s)).alias("hist"))
-    cents = F.transform(
-        "hist", lambda r: (r["value"].cast("decimal(18,2)") * 100).cast("long")
-    )
-    g = g.select("user_id", cents.alias("c"))
-    n = F.size("c").cast("long")
+    g = _cents_history(spark, sf_dir)
     g = g.select(
         "user_id",
         "c",
-        n.alias("n"),
+        F.col("n_obs").cast("long").alias("n"),
         F.aggregate("c", F.lit(0).cast("long"), lambda acc, x: acc + x).alias("sx"),
         F.aggregate(
             F.transform("c", lambda x, i: x * (i.cast("long") + 1)),
@@ -1865,16 +1955,10 @@ def sax_symbolize(spark: SparkSession, sf_dir: str) -> DataFrame:
     is floor((i·w)/n) over exact small ints. Flat-series degenerate
     (std = 0) pins every symbol at 'b'.
     """
-    ev = load_table(spark, sf_dir, "events")
-    s = F.struct(F.col("ts"), F.col("event_id"), F.col("value"))
-    g = ev.groupBy("user_id").agg(F.array_sort(F.collect_list(s)).alias("hist"))
-    cents = F.transform(
-        "hist", lambda r: (r["value"].cast("decimal(18,2)") * 100).cast("long")
-    )
-    g = g.select("user_id", cents.alias("c")).select(
+    g = _cents_history(spark, sf_dir).select(
         "user_id",
         "c",
-        F.size("c").cast("long").alias("n"),
+        F.col("n_obs").cast("long").alias("n"),
         F.aggregate("c", F.lit(0).cast("long"), lambda acc, x: acc + x).alias("sx"),
         F.aggregate(
             F.transform("c", lambda x: x * x),
@@ -1999,15 +2083,9 @@ def cusum(spark: SparkSession, sf_dir: str) -> DataFrame:
     outputs floor-scaled to 6 dp. σ = 0 (constant series) short-circuits
     to z = 0 — no alarms, no NaN.
     """
-    ev = load_table(spark, sf_dir, "events")
-    s = F.struct(F.col("ts"), F.col("event_id"), F.col("value"))
-    g = ev.groupBy("user_id").agg(F.array_sort(F.collect_list(s)).alias("hist"))
-    cents = F.transform(
-        "hist", lambda r: (r["value"].cast("decimal(18,2)") * 100).cast("long")
-    )
-    g = g.select("user_id", cents.alias("c"))
+    g = _cents_history(spark, sf_dir)
     zero = F.lit(0).cast("long")
-    n = F.size("c").cast("long")
+    n = F.col("n_obs").cast("long")
     sx = F.aggregate("c", zero, lambda acc, x: acc + x)
     sxx = F.aggregate("c", zero, lambda acc, x: acc + x * x)
     mu = sx.cast("double") / n.cast("double")
@@ -2154,12 +2232,8 @@ def mk_trend(spark: SparkSession, sf_dir: str) -> DataFrame:
     an explicit sorted-array pick with the same even/odd rule in both
     engines; outputs floor-scaled to 6 dp.
     """
-    ev = load_table(spark, sf_dir, "events")
-    s = F.struct(F.col("ts"), F.col("event_id"), F.col("value"))
-    g = ev.groupBy("user_id").agg(F.array_sort(F.collect_list(s)).alias("hist"))
-    cents = F.transform("hist", lambda r: (r["value"].cast("decimal(18,2)") * 100).cast("long"))
-    g = g.select("user_id", cents.alias("c"), F.size(cents).alias("n"))
-    n = F.col("n")
+    g = _cents_history(spark, sf_dir)
+    n = F.col("n_obs")
     zero = F.lit(0).cast("long")
     empty_l = F.array().cast("array<long>")
     empty_d = F.array().cast("array<double>")
@@ -2203,7 +2277,7 @@ def mk_trend(spark: SparkSession, sf_dir: str) -> DataFrame:
     # sorted pair-slopes array m six times, and the verdict re-references
     # z — unpinned, Catalyst re-evaluated the flatten+sort per reference.
     g = g.select(
-        "user_id", "n", s_stat.alias("s_stat"), slopes.alias("m"), corr.alias("tie_corr")
+        "user_id", "n_obs", s_stat.alias("s_stat"), slopes.alias("m"), corr.alias("tie_corr")
     ).localCheckpoint(eager=False)
     nl = n.cast("long")
     var_s = (nl * (nl - 1) * (2 * nl + 5) - F.col("tie_corr")).cast("double") / 18.0
@@ -2223,7 +2297,7 @@ def mk_trend(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     g = g.select(
         "user_id",
-        F.col("n").alias("n_events"),
+        F.col("n_obs").alias("n_events"),
         "s_stat",
         (F.floor(var_s * 1e6) / 1e6).alias("var_s"),
         (F.floor(z * 1e6) / 1e6).alias("z_stat"),
@@ -2715,21 +2789,13 @@ def permutation_entropy(spark: SparkSession, sf_dir: str) -> DataFrame:
     engine's libm constant enters; ln(p) on identical doubles in
     identical order (the events_entropy convention).
     """
-    ev = load_table(spark, sf_dir, "events")
-    cents = (F.col("value").cast("decimal(18,2)") * 100).cast("long")
-    base = (
-        ev.select("user_id", F.struct("ts", "event_id", cents.alias("c")).alias("s"))
-        .groupBy("user_id")
-        .agg(F.transform(F.array_sort(F.collect_list("s")), lambda s: s.c).alias("vals"))
-        .withColumn("n", F.size("vals"))
-        .filter(F.col("n") >= 3)
-    )
+    base = _cents_history(spark, sf_dir, 3)
 
     def el(i):
-        return F.element_at(F.col("vals"), i)
+        return F.element_at(F.col("c"), i)
 
     pats = F.transform(
-        F.sequence(F.lit(1), F.col("n") - 2),
+        F.sequence(F.lit(1), F.col("n_obs") - 2),
         lambda i: (
             (el(i) <= el(i + 1)).cast("int") * 4
             + (el(i) <= el(i + 2)).cast("int") * 2
@@ -2919,6 +2985,43 @@ _BT_HOLD = 24  # holdout = last 24 observations
 _BT_SEASON = 24
 
 
+def _holdout_maes(g: DataFrame) -> DataFrame:
+    """Holdout MAEs (value units) of the three baselines — naive (last
+    train value), seasonal naive (one season earlier), train mean — over
+    the last ``_BT_HOLD`` observations of a :func:`_cents_history` frame:
+    adds ``mn``, ``ms``, ``mm``. naive/snaive errors are EXACT integer-cent
+    sums with one final division; the mean model's per-point |mean − x|
+    terms accumulate left-to-right in holdout order (identical doubles
+    both engines)."""
+    n = F.col("n_obs")
+    zero = F.lit(0).cast("long")
+    train_sum = F.aggregate(F.slice("c", 1, n - _BT_HOLD), zero, lambda a, x: a + x)
+    g = (
+        g.withColumn("hold", F.slice("c", n - _BT_HOLD + 1, _BT_HOLD))
+        .withColumn("lt", F.element_at("c", n - _BT_HOLD))
+        .withColumn("mu", train_sum.cast("double") / (n - _BT_HOLD).cast("double"))
+    )
+    ae_naive = F.aggregate(F.transform("hold", lambda x: F.abs(x - F.col("lt"))), zero, lambda a, x: a + x)
+    ae_snaive = F.aggregate(
+        F.transform(
+            F.sequence(F.lit(1), F.lit(_BT_HOLD)),
+            lambda j: F.abs(
+                F.element_at("c", n - _BT_HOLD + j) - F.element_at("c", n - _BT_HOLD - _BT_SEASON + j)
+            ),
+        ),
+        zero,
+        lambda a, x: a + x,
+    )
+    ae_mean = F.aggregate(
+        F.transform("hold", lambda x: F.abs(x.cast("double") - F.col("mu"))), F.lit(0.0), lambda a, x: a + x
+    )
+    return (
+        g.withColumn("mn", ae_naive.cast("double") / (100.0 * _BT_HOLD))
+        .withColumn("ms", ae_snaive.cast("double") / (100.0 * _BT_HOLD))
+        .withColumn("mm", ae_mean / (100.0 * _BT_HOLD))
+    )
+
+
 def backtest_models(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Holdout backtest of the three forecasting BASELINES per user
     series — naive (last train value), seasonal naive (value one season
@@ -2937,53 +3040,8 @@ def backtest_models(spark: SparkSession, sf_dir: str) -> DataFrame:
     snaive at equal MAE. Series shorter than 48 observations are
     excluded (no full train season).
     """
-    ev = load_table(spark, sf_dir, "events")
-    s = F.struct(F.col("ts"), F.col("event_id"), F.col("value"))
-    g = ev.groupBy("user_id").agg(F.array_sort(F.collect_list(s)).alias("hist"))
-    cents = F.transform("hist", lambda r: (r["value"].cast("decimal(18,2)") * 100).cast("long"))
-    g = g.select("user_id", cents.alias("c")).withColumn("n", F.size("c")).filter(
-        F.col("n") >= 2 * _BT_SEASON
-    )
-    n = F.col("n")
-    hold = F.slice("c", n - _BT_HOLD + 1, _BT_HOLD)
-    g = g.withColumn("hold", hold).withColumn("n_train", (n - _BT_HOLD).cast("long"))
-    last_train = F.element_at("c", F.col("n") - _BT_HOLD)
-    train_sum = F.aggregate(
-        F.slice("c", 1, F.col("n") - _BT_HOLD), F.lit(0).cast("long"), lambda a, x: a + x
-    )
-    g = g.withColumn("lt", last_train).withColumn(
-        "mu", train_sum.cast("double") / F.col("n_train").cast("double")
-    )
-    # exact integer absolute-error sums for naive / seasonal naive
-    ae_naive = F.aggregate(
-        F.transform("hold", lambda x: F.abs(x - F.col("lt"))),
-        F.lit(0).cast("long"),
-        lambda a, x: a + x,
-    )
-    ae_snaive = F.aggregate(
-        F.transform(
-            F.sequence(F.lit(1), F.lit(_BT_HOLD)),
-            lambda j: F.abs(
-                F.element_at("c", F.col("n") - _BT_HOLD + j)
-                - F.element_at("c", F.col("n") - _BT_HOLD - _BT_SEASON + j)
-            ),
-        ),
-        F.lit(0).cast("long"),
-        lambda a, x: a + x,
-    )
-    ae_mean = F.aggregate(
-        F.transform("hold", lambda x: F.abs(x.cast("double") - F.col("mu"))),
-        F.lit(0.0),
-        lambda a, x: a + x,
-    )
-    g = (
-        g.withColumn("mae_naive_q", ae_naive)
-        .withColumn("mae_snaive_q", ae_snaive)
-        .withColumn("mae_mean_d", ae_mean)
-    )
-    mn = F.col("mae_naive_q").cast("double") / (100.0 * _BT_HOLD)
-    ms = F.col("mae_snaive_q").cast("double") / (100.0 * _BT_HOLD)
-    mm = F.col("mae_mean_d") / (100.0 * _BT_HOLD)
+    g = _holdout_maes(_cents_history(spark, sf_dir, 2 * _BT_SEASON))
+    mn, ms, mm = F.col("mn"), F.col("ms"), F.col("mm")
     best = (
         F.when((mm <= mn) & (mm <= ms), F.lit("mean"))
         .when(mn <= ms, F.lit("naive"))
@@ -2991,7 +3049,7 @@ def backtest_models(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     return g.select(
         F.col("user_id").alias("series_id"),
-        "n_train",
+        (F.col("n_obs") - _BT_HOLD).cast("long").alias("n_train"),
         (F.floor(mn * 1e6) / 1e6).alias("mae_naive"),
         (F.floor(ms * 1e6) / 1e6).alias("mae_snaive"),
         (F.floor(mm * 1e6) / 1e6).alias("mae_mean"),
@@ -3000,13 +3058,7 @@ def backtest_models(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 BACKTEST_MODELS_SQL = f"""
-WITH hist AS (
-    SELECT user_id,
-           list_transform(
-               list_sort(list(struct_pack(ts := ts, e := event_id, v := value))),
-               s -> CAST(CAST(s.v AS DECIMAL(18,2)) * 100 AS BIGINT)) AS c
-    FROM events GROUP BY user_id
-),
+WITH {_CENTS_HIST_SQL},
 base AS (
     SELECT user_id, c, len(c) AS n,
            len(c) - {_BT_HOLD} AS n_train,
@@ -3069,18 +3121,14 @@ def drawdown(spark: SparkSession, sf_dir: str) -> DataFrame:
     single independent `greatest`, which both engines fold correctly.
     Zero Python, no window.
     """
-    ev = load_table(spark, sf_dir, "events")
-    s = F.struct(F.col("ts"), F.col("event_id"), F.col("value"))
-    g = ev.groupBy("user_id").agg(F.array_sort(F.collect_list(s)).alias("hist"))
-    cents = F.transform("hist", lambda r: (r["value"].cast("decimal(18,2)") * 100).cast("long"))
-    g = g.select("user_id", cents.alias("c")).filter(F.size("c") >= 2)
+    g = _cents_history(spark, sf_dir, 2)
     init = F.struct(
         F.lit(0).cast("long").alias("dd"),
         F.lit(0.0).alias("mf"),
         F.element_at(F.col("c"), 1).alias("peak"),
     )
     fold = F.aggregate(
-        F.slice("c", 2, F.size("c") - 1),
+        F.slice("c", 2, F.col("n_obs") - 1),
         init,
         lambda st, x: F.struct(
             F.greatest(st.dd, st.peak - x).alias("dd"),
@@ -3097,21 +3145,15 @@ def drawdown(spark: SparkSession, sf_dir: str) -> DataFrame:
     g = g.withColumn("st", fold)
     return g.select(
         F.col("user_id").alias("series_id"),
-        F.size("c").alias("n_obs"),
+        "n_obs",
         (F.col("st.dd").cast("double") / 100.0).alias("max_drawdown"),
         (F.floor(F.col("st.mf") * 1e6) / 1e6).alias("max_drawdown_frac"),
         (F.col("st.peak").cast("double") / 100.0).alias("final_peak"),
     )
 
 
-DRAWDOWN_SQL = """
-WITH hist AS (
-    SELECT user_id,
-           list_transform(
-               list_sort(list(struct_pack(ts := ts, e := event_id, v := value))),
-               s -> CAST(CAST(s.v AS DECIMAL(18,2)) * 100 AS BIGINT)) AS c
-    FROM events GROUP BY user_id
-),
+DRAWDOWN_SQL = f"""
+WITH {_CENTS_HIST_SQL},
 f AS (
     -- each field is one independent greatest() on purpose: duplicating a
     -- CASE predicate across two struct slots trips a DuckDB v1.0.0
@@ -3163,18 +3205,8 @@ def pi_naive(spark: SparkSession, sf_dir: str) -> DataFrame:
     array pass — a single division at the end. Series with fewer than
     10 observations are excluded (no quantile support).
     """
-    ev = load_table(spark, sf_dir, "events")
-    s = F.struct(F.col("ts"), F.col("event_id"), F.col("value"))
-    g = ev.groupBy("user_id").agg(F.array_sort(F.collect_list(s)).alias("hist"))
-    cents = F.transform("hist", lambda r: (r["value"].cast("decimal(18,2)") * 100).cast("long"))
-    g = g.select("user_id", cents.alias("c")).withColumn("n", F.size("c")).filter(
-        F.col("n") >= _PI_MIN_OBS
-    )
-    resid = F.transform(
-        F.sequence(F.lit(2), F.col("n")),
-        lambda i: F.element_at(F.col("c"), i) - F.element_at(F.col("c"), i - 1),
-    )
-    g = g.withColumn("r", resid).withColumn("m", F.size("r")).withColumn("srt", F.array_sort("r"))
+    g = _cents_history(spark, sf_dir, _PI_MIN_OBS)
+    g = g.withColumn("r", _first_diffs()).withColumn("m", F.size("r")).withColumn("srt", F.array_sort("r"))
 
     def rank_pick(q_num, q_den):
         idx = F.greatest(F.ceil(F.col("m") * q_num / q_den).cast("int"), F.lit(1))
@@ -3186,10 +3218,10 @@ def pi_naive(spark: SparkSession, sf_dir: str) -> DataFrame:
     covered = F.size(
         F.filter("r", lambda x: (x >= F.col("q05")) & (x <= F.col("q95")))
     )
-    last = F.element_at(F.col("c"), F.col("n"))
+    last = F.element_at(F.col("c"), F.col("n_obs"))
     return g.select(
         F.col("user_id").alias("series_id"),
-        F.col("n").alias("n_obs"),
+        "n_obs",
         (F.col("q05").cast("double") / 100.0).alias("q05_resid"),
         (F.col("q95").cast("double") / 100.0).alias("q95_resid"),
         ((last + F.col("q05")).cast("double") / 100.0).alias("pi_lo"),
@@ -3199,13 +3231,7 @@ def pi_naive(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 PI_NAIVE_SQL = f"""
-WITH hist AS (
-    SELECT user_id,
-           list_transform(
-               list_sort(list(struct_pack(ts := ts, e := event_id, v := value))),
-               s -> CAST(CAST(s.v AS DECIMAL(18,2)) * 100 AS BIGINT)) AS c
-    FROM events GROUP BY user_id
-),
+WITH {_CENTS_HIST_SQL},
 base AS (
     SELECT user_id, c, len(c) AS n,
            list_transform(range(2, len(c) + 1), i -> c[i] - c[i-1]) AS r
@@ -3258,16 +3284,10 @@ def hurst(spark: SparkSession, sf_dir: str) -> DataFrame:
     the events_entropy convention). Series shorter than 64 observations
     (4 full blocks at k = 16) are excluded.
     """
-    ev = load_table(spark, sf_dir, "events")
-    s = F.struct(F.col("ts"), F.col("event_id"), F.col("value"))
-    g = ev.groupBy("user_id").agg(F.array_sort(F.collect_list(s)).alias("hist"))
-    cents = F.transform("hist", lambda r: (r["value"].cast("decimal(18,2)") * 100).cast("long"))
-    g = g.select("user_id", cents.alias("c")).withColumn("n", F.size("c")).filter(
-        F.col("n") >= _HURST_MIN_OBS
-    )
+    g = _cents_history(spark, sf_dir, _HURST_MIN_OBS)
 
     def block_var(k: int):
-        nk = (F.col("n") / k).cast("int")
+        nk = (F.col("n_obs") / k).cast("int")
         sums = F.transform(
             F.sequence(F.lit(1), nk),
             lambda j: F.aggregate(
@@ -3305,7 +3325,7 @@ def hurst(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     return g.select(
         "user_id",
-        F.col("n").alias("n_obs"),
+        "n_obs",
         F.when(valid, F.floor(h * 1e6) / 1e6).alias("hurst"),
         F.when(valid, label).alias("character"),
     )
@@ -3327,13 +3347,7 @@ def _hurst_var_sql(k: int) -> str:
 
 
 HURST_SQL = f"""
-WITH hist AS (
-    SELECT user_id,
-           list_transform(
-               list_sort(list(struct_pack(ts := ts, e := event_id, v := value))),
-               s -> CAST(CAST(s.v AS DECIMAL(18,2)) * 100 AS BIGINT)) AS c
-    FROM events GROUP BY user_id
-),
+WITH {_CENTS_HIST_SQL},
 base AS (
     SELECT user_id, len(c) AS n,
            {_hurst_var_sql(1)} AS v1,
@@ -3401,11 +3415,7 @@ def runs_test(spark: SparkSession, sf_dir: str) -> DataFrame:
     filter was re-running ``array_sort`` O(n) times per row) hold the
     per-user frame, one row per user — the query's own output cardinality.
     """
-    ev = load_table(spark, sf_dir, "events")
-    s = F.struct(F.col("ts"), F.col("event_id"), F.col("value"))
-    g = ev.groupBy("user_id").agg(F.array_sort(F.collect_list(s)).alias("hist"))
-    cents = F.transform("hist", lambda r: (r["value"].cast("decimal(18,2)") * 100).cast("long"))
-    g = g.select("user_id", cents.alias("c"), F.size("hist").alias("n_obs"))
+    g = _cents_history(spark, sf_dir)
     cs = F.array_sort("c")
     n = F.col("n_obs")
     med = (
@@ -3466,13 +3476,7 @@ def runs_test(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 RUNS_TEST_SQL = f"""
-WITH hist AS (
-    SELECT user_id,
-           list_transform(
-               list_sort(list(struct_pack(ts := ts, e := event_id, v := value))),
-               s -> CAST(CAST(s.v AS DECIMAL(18,2)) * 100 AS BIGINT)) AS c
-    FROM events GROUP BY user_id
-),
+WITH {_CENTS_HIST_SQL},
 base AS (
     SELECT user_id, c, len(c) AS n_obs, list_sort(c) AS cs FROM hist
 ),
@@ -3547,19 +3551,8 @@ def rsi(spark: SparkSession, sf_dir: str) -> DataFrame:
     DuckDB list_reduce constraint), zero-seeded so the rule is uniform
     from the first delta. Zero Python, per-user cost bounded by history.
     """
-    ev = load_table(spark, sf_dir, "events")
-    s = F.struct(F.col("ts"), F.col("event_id"), F.col("value"))
-    g = ev.groupBy("user_id").agg(F.array_sort(F.collect_list(s)).alias("hist"))
-    cents = F.transform("hist", lambda r: (r["value"].cast("decimal(18,2)") * 100).cast("long"))
-    g = g.select("user_id", cents.alias("c"), F.size("hist").alias("n_obs"))
-    g = g.filter(F.col("n_obs") >= _RSI_MIN_OBS)
-    deltas = F.transform(
-        F.sequence(F.lit(2), F.col("n_obs")),
-        lambda i: (
-            F.element_at("c", i.cast("int")) - F.element_at("c", (i - 1).cast("int"))
-        ).cast("double"),
-    )
-    g = g.withColumn("d", deltas)
+    g = _cents_history(spark, sf_dir, _RSI_MIN_OBS)
+    g = g.withColumn("d", F.transform(_first_diffs(), lambda x: x.cast("double")))
     p = float(_RSI_PERIOD)
     fold = F.aggregate(
         "d",
@@ -3592,13 +3585,7 @@ def rsi(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 RSI_SQL = f"""
-WITH hist AS (
-    SELECT user_id,
-           list_transform(
-               list_sort(list(struct_pack(ts := ts, e := event_id, v := value))),
-               s -> CAST(CAST(s.v AS DECIMAL(18,2)) * 100 AS BIGINT)) AS c
-    FROM events GROUP BY user_id
-),
+WITH {_CENTS_HIST_SQL},
 base AS (
     SELECT user_id, len(c) AS n_obs,
            list_transform(range(2, len(c) + 1),
@@ -3763,69 +3750,18 @@ def ljung_box(spark: SparkSession, sf_dir: str) -> DataFrame:
     "is there autocorrelation at all"; the complement of ts_autocorr's
     per-lag readout with a single calibrated decision).
 
-    One groupBy(user) sorted collect; μ and the squared-deviation
-    denominator come from exact integer-cent folds, each lag's
-    cross-product Σ(x_t−μ)(x_{t+k}−μ) is an unrolled fixed-order
-    ``F.aggregate`` fold over the deviation array (the hurst/periodogram
-    discipline — identical double op order in the list_reduce oracle).
-    Per-user cost is 5 linear passes over a history-bounded array; zero
-    Python, no window.
-
-    The two lazy ``localCheckpoint`` pins keep that contract literal:
-    without them Catalyst inlines ``mu`` (itself a fold) into the ``dev``
-    lambda per element and ``dev`` into every ``element_at`` of the five
-    lag folds — 25 fold nodes in the before-plan instead of 7.
+    One :func:`_cents_history` sorted collect, then the pinned
+    :func:`_acf` chain (exact integer-cent μ, fixed-order lag folds over
+    the deviation array — identical double op order in the list_reduce
+    oracle) and :func:`_ljung_box_q`. Per-user cost is 5 linear passes
+    over a history-bounded array; zero Python, no window.
     """
-    ev = load_table(spark, sf_dir, "events")
-    s = F.struct(F.col("ts"), F.col("event_id"), F.col("value"))
-    g = ev.groupBy("user_id").agg(F.array_sort(F.collect_list(s)).alias("hist"))
-    cents = F.transform("hist", lambda r: (r["value"].cast("decimal(18,2)") * 100).cast("long"))
-    g = g.select("user_id", cents.alias("c"), F.size("hist").alias("n_obs"))
-    g = g.filter(F.col("n_obs") >= _LB_MIN_OBS)
-    zero = F.lit(0).cast("long")
-    sx = F.aggregate("c", zero, lambda acc, x: acc + x)
-    n = F.col("n_obs")
-    mu = sx.cast("double") / n.cast("double")
-    g = g.withColumn("mu", mu)
-    g = g.localCheckpoint(eager=False)
-    dev = F.transform("c", lambda x: x.cast("double") - F.col("mu"))
-    g = g.withColumn("dev", dev)
-    denom = F.aggregate("dev", F.lit(0.0), lambda acc, x: acc + x * x)
-    g = g.withColumn("denom", denom)
-    g = g.select("user_id", "n_obs", "dev", "denom").localCheckpoint(eager=False)
-
-    def _num(k: int):
-        return F.aggregate(
-            F.sequence(F.lit(1), F.col("n_obs") - k),
-            F.lit(0.0),
-            lambda acc, t: acc
-            + F.element_at("dev", t.cast("int")) * F.element_at("dev", (t + k).cast("int")),
-        )
-
-    # Pin each r_k once: q references every r_k twice (r_k²) and is itself
-    # referenced twice (q_stat + verdict), so unpinned lag folds appear
-    # 21× in the plan instead of 5 (each O(n), but 4× the per-row cost).
-    # The denom>0 guard must run BEFORE the pin materializes the ANSI
-    # divisions (unpinned, Catalyst pushed it below them itself).
-    g = g.filter(F.col("denom") > 0)
-    g = g.select(
-        "user_id",
-        "n_obs",
-        *[(_num(k) / F.col("denom")).alias(f"r{k}") for k in range(1, _LB_LAGS + 1)],
-    ).localCheckpoint(eager=False)
-    nd = F.col("n_obs").cast("double")
-    q = F.lit(0.0)
-    r1 = None
-    for k in range(1, _LB_LAGS + 1):
-        rk = F.col(f"r{k}")
-        if k == 1:
-            r1 = rk
-        q = q + rk * rk / (nd - float(k))
-    q = nd * (nd + 2.0) * q
+    g = _acf(_cents_history(spark, sf_dir, _LB_MIN_OBS), _LB_LAGS)
+    q = _ljung_box_q()
     return g.select(
         "user_id",
         "n_obs",
-        (F.floor(r1 * 1e6) / 1e6).alias("acf_lag1"),
+        (F.floor(F.col("r1") * 1e6) / 1e6).alias("acf_lag1"),
         (F.floor(q * 1e6) / 1e6).alias("q_stat"),
         F.when(q > _LB_CRIT, F.lit("correlated")).otherwise(F.lit("white")).alias("verdict"),
     )
@@ -3839,33 +3775,15 @@ def _lb_num_sql(k: int) -> str:
     )
 
 
-LJUNG_BOX_SQL = f"""
-WITH hist AS (
-    SELECT user_id,
-           list_transform(
-               list_sort(list(struct_pack(ts := ts, e := event_id, v := value))),
-               s -> CAST(CAST(s.v AS DECIMAL(18,2)) * 100 AS BIGINT)) AS c
-    FROM events GROUP BY user_id
-),
-base AS (
-    SELECT user_id, len(c) AS n_obs,
-           CAST(list_reduce(list_prepend(CAST(0 AS BIGINT), c), (a, x) -> a + x) AS DOUBLE)
-               / CAST(len(c) AS DOUBLE) AS mu,
-           c
-    FROM hist WHERE len(c) >= {_LB_MIN_OBS}
-),
-dv AS (
-    SELECT user_id, n_obs,
-           list_transform(c, x -> CAST(x AS DOUBLE) - mu) AS dev
-    FROM base
-),
-dn AS (
+#: DuckDB twins of :func:`_acf`'s denominator step (over a ``dv(user_id,
+#: n_obs, dev)`` CTE) and of the five lag folds + :func:`_ljung_box_q`.
+_ACF_DENOM_SQL = """dn AS (
     SELECT user_id, n_obs, dev,
            list_reduce(list_prepend(CAST(0.0 AS DOUBLE),
                                     list_transform(dev, x -> x * x)), (a, b) -> a + b) AS denom
     FROM dv
-),
-rk AS (
+)"""
+_LB_Q_SQL = f"""rk AS (
     SELECT user_id, n_obs, denom,
            {_lb_num_sql(1)} / denom AS r1,
            {_lb_num_sql(2)} / denom AS r2,
@@ -3883,7 +3801,25 @@ q AS (
           + r4 * r4 / (CAST(n_obs AS DOUBLE) - 4.0)
           + r5 * r5 / (CAST(n_obs AS DOUBLE) - 5.0)) AS q_stat
     FROM rk
-)
+)"""
+
+
+LJUNG_BOX_SQL = f"""
+WITH {_CENTS_HIST_SQL},
+base AS (
+    SELECT user_id, len(c) AS n_obs,
+           CAST(list_reduce(list_prepend(CAST(0 AS BIGINT), c), (a, x) -> a + x) AS DOUBLE)
+               / CAST(len(c) AS DOUBLE) AS mu,
+           c
+    FROM hist WHERE len(c) >= {_LB_MIN_OBS}
+),
+dv AS (
+    SELECT user_id, n_obs,
+           list_transform(c, x -> CAST(x AS DOUBLE) - mu) AS dev
+    FROM base
+),
+{_ACF_DENOM_SQL},
+{_LB_Q_SQL}
 SELECT user_id, CAST(n_obs AS INT) AS n_obs,
        floor(r1 * 1e6) / 1e6 AS acf_lag1,
        floor(q_stat * 1e6) / 1e6 AS q_stat,
@@ -4103,13 +4039,11 @@ def anomaly_online(spark: SparkSession, sf_dir: str) -> DataFrame:
     state slots, which a DuckDB list_reduce would duplicate — the CTE's
     lateral aliases evaluate it once per step.
     """
-    ev = load_table(spark, sf_dir, "events")
-    s = F.struct(F.col("ts"), F.col("event_id"), F.col("value"))
-    g = ev.groupBy("user_id").agg(F.array_sort(F.collect_list(s)).alias("hist"))
-    cents = F.transform("hist", lambda r: (r["value"].cast("decimal(18,2)") * 100).cast("long"))
-    g = g.select("user_id", cents.alias("c"), F.size("hist").cast("long").alias("n_events"))
-    xs = F.transform("c", lambda x: x.cast("double"))
-    g = g.withColumn("x", xs)
+    g = _cents_history(spark, sf_dir).select(
+        "user_id",
+        F.transform("c", lambda x: x.cast("double")).alias("x"),
+        F.col("n_obs").cast("long").alias("n_events"),
+    )
 
     def _step(acc, x):
         pred = (
@@ -4146,13 +4080,7 @@ def anomaly_online(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 ANOMALY_ONLINE_SQL = f"""
-WITH RECURSIVE hist AS (
-    SELECT user_id,
-           list_transform(
-               list_sort(list(struct_pack(ts := ts, e := event_id, v := value))),
-               s -> CAST(CAST(s.v AS DECIMAL(18,2)) * 100 AS BIGINT)) AS c
-    FROM events GROUP BY user_id
-),
+WITH RECURSIVE {_CENTS_HIST_SQL},
 m AS (SELECT user_id, c, CAST(len(c) AS BIGINT) AS n_events FROM hist),
 zt AS (
     SELECT user_id,
@@ -4208,38 +4136,12 @@ def pacf(spark: SparkSession, sf_dir: str) -> DataFrame:
     ts_ljung_box read the ACF, this reads the PACF, and `ar_order`
     reports the suggested order directly.
 
-    Same shape as ts_ljung_box: one sorted collect, sample ACF from
-    fixed-order exact-cent folds, then the φ algebra as ONE chained
+    Same shape as ts_ljung_box: one :func:`_cents_history` collect, the
+    pinned :func:`_acf` chain for r1..r3, then the φ algebra as ONE chained
     double expression per lag (identical operation order both engines;
     degenerate denominators NULL via nullif). Zero Python.
     """
-    ev = load_table(spark, sf_dir, "events")
-    s = F.struct(F.col("ts"), F.col("event_id"), F.col("value"))
-    g = ev.groupBy("user_id").agg(F.array_sort(F.collect_list(s)).alias("hist"))
-    cents = F.transform("hist", lambda r: (r["value"].cast("decimal(18,2)") * 100).cast("long"))
-    g = g.select("user_id", cents.alias("c"), F.size("hist").alias("n_obs"))
-    g = g.filter(F.col("n_obs") >= _PACF_MIN_OBS)
-    zero = F.lit(0).cast("long")
-    sx = F.aggregate("c", zero, lambda acc, x: acc + x)
-    mu = sx.cast("double") / F.col("n_obs").cast("double")
-    g = g.withColumn("mu", mu)
-    dev = F.transform("c", lambda x: x.cast("double") - F.col("mu"))
-    g = g.withColumn("dev", dev)
-    denom = F.aggregate("dev", F.lit(0.0), lambda acc, x: acc + x * x)
-    g = g.withColumn("denom", denom).filter(F.col("denom") > 0)
-
-    def _r(k: int):
-        return (
-            F.aggregate(
-                F.sequence(F.lit(1), F.col("n_obs") - k),
-                F.lit(0.0),
-                lambda acc, t: acc
-                + F.element_at("dev", t.cast("int")) * F.element_at("dev", (t + k).cast("int")),
-            )
-            / F.col("denom")
-        )
-
-    g = g.withColumn("r1", _r(1)).withColumn("r2", _r(2)).withColumn("r3", _r(3))
+    g = _acf(_cents_history(spark, sf_dir, _PACF_MIN_OBS), 3)
     r1, r2, r3 = F.col("r1"), F.col("r2"), F.col("r3")
     phi11 = r1
     phi22 = (r2 - phi11 * r1) / F.nullif(F.lit(1.0) - phi11 * r1, F.lit(0.0))
@@ -4271,13 +4173,7 @@ def pacf(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 PACF_SQL = f"""
-WITH hist AS (
-    SELECT user_id,
-           list_transform(
-               list_sort(list(struct_pack(ts := ts, e := event_id, v := value))),
-               s -> CAST(CAST(s.v AS DECIMAL(18,2)) * 100 AS BIGINT)) AS c
-    FROM events GROUP BY user_id
-),
+WITH {_CENTS_HIST_SQL},
 base AS (
     SELECT user_id, len(c) AS n_obs,
            CAST(list_reduce(list_prepend(CAST(0 AS BIGINT), c), (a, x) -> a + x) AS DOUBLE)
@@ -4288,12 +4184,7 @@ base AS (
 dv AS (
     SELECT user_id, n_obs, list_transform(c, x -> CAST(x AS DOUBLE) - mu) AS dev FROM base
 ),
-dn AS (
-    SELECT user_id, n_obs, dev,
-           list_reduce(list_prepend(CAST(0.0 AS DOUBLE),
-                                    list_transform(dev, x -> x * x)), (a, b) -> a + b) AS denom
-    FROM dv
-),
+{_ACF_DENOM_SQL},
 rk AS (
     SELECT user_id, n_obs,
            {_lb_num_sql(1)} / denom AS r1,
@@ -4441,15 +4332,8 @@ def macd(spark: SparkSession, sf_dir: str) -> DataFrame:
     identical expression tree, so the doubles agree bit-for-bit and the
     floor-scale projection hashes clean. Zero Python; per-user cost bounded
     by entity history — the 100 TB shape."""
-    ev = load_table(spark, sf_dir, "events")
-    s = F.struct(F.col("ts"), F.col("event_id"), F.col("value"))
-    g = ev.groupBy("user_id").agg(F.array_sort(F.collect_list(s)).alias("hist"))
-    cents = F.transform(
-        "hist",
-        lambda r: (r["value"].cast("decimal(18,2)") * 100).cast("long").cast("double"),
-    )
-    g = g.select("user_id", cents.alias("x"), F.size("hist").alias("n_obs"))
-    g = g.filter(F.col("n_obs") >= _MACD_MIN_OBS)
+    g = _cents_history(spark, sf_dir, _MACD_MIN_OBS)
+    g = g.select("user_id", F.transform("c", lambda x: x.cast("double")).alias("x"), "n_obs")
     fa, sl, sg = _MACD_FAST, _MACD_SLOW, _MACD_SIG
 
     def _step(st, x):
@@ -4569,17 +4453,8 @@ def sharpe(spark: SparkSession, sf_dir: str) -> DataFrame:
     order-insensitive and the only doubles are the final five projections
     (identical expression trees both engines, floor-scaled). d² ≤ 1e14 and
     per-series Σ ≤ 1e17 stay far under the 2^63 ceiling. Zero Python."""
-    ev = load_table(spark, sf_dir, "events")
-    s = F.struct(F.col("ts"), F.col("event_id"), F.col("value"))
-    g = ev.groupBy("user_id").agg(F.array_sort(F.collect_list(s)).alias("hist"))
-    cents = F.transform("hist", lambda r: (r["value"].cast("decimal(18,2)") * 100).cast("long"))
-    g = g.select("user_id", cents.alias("c"), F.size("hist").alias("n_obs"))
-    g = g.filter(F.col("n_obs") >= _SHARPE_MIN_OBS)
-    deltas = F.transform(
-        F.sequence(F.lit(2), F.col("n_obs")),
-        lambda i: F.element_at("c", i.cast("int")) - F.element_at("c", (i - 1).cast("int")),
-    )
-    g = g.withColumn("d", deltas)
+    g = _cents_history(spark, sf_dir, _SHARPE_MIN_OBS)
+    g = g.withColumn("d", _first_diffs())
     zero = F.lit(0).cast("long")
     fold = F.aggregate(
         "d",
@@ -4608,13 +4483,7 @@ def sharpe(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 SHARPE_SQL = f"""
-WITH hist AS (
-    SELECT user_id,
-           list_transform(
-               list_sort(list(struct_pack(ts := ts, e := event_id, v := value))),
-               s -> CAST(CAST(s.v AS DECIMAL(18,2)) * 100 AS BIGINT)) AS c
-    FROM events GROUP BY user_id
-),
+WITH {_CENTS_HIST_SQL},
 base AS (
     SELECT user_id, len(c) AS n_obs,
            list_transform(range(2, len(c) + 1),
@@ -4932,17 +4801,8 @@ def var_es(spark: SparkSession, sf_dir: str) -> DataFrame:
     sorted once per series (array_sort, per-key cost bounded by history);
     the k-th element and the exact-integer tail sums are array projections
     — zero Python, one shuffle, no global sort."""
-    ev = load_table(spark, sf_dir, "events")
-    s = F.struct(F.col("ts"), F.col("event_id"), F.col("value"))
-    g = ev.groupBy("user_id").agg(F.array_sort(F.collect_list(s)).alias("hist"))
-    cents = F.transform("hist", lambda r: (r["value"].cast("decimal(18,2)") * 100).cast("long"))
-    g = g.select("user_id", cents.alias("c"), F.size("hist").alias("n_obs"))
-    g = g.filter(F.col("n_obs") >= _VAR_MIN_OBS)
-    deltas = F.transform(
-        F.sequence(F.lit(2), F.col("n_obs")),
-        lambda i: F.element_at("c", i.cast("int")) - F.element_at("c", (i - 1).cast("int")),
-    )
-    g = g.select("user_id", F.array_sort(deltas).alias("d"), (F.col("n_obs") - 1).cast("long").alias("n_ret"))
+    g = _cents_history(spark, sf_dir, _VAR_MIN_OBS)
+    g = g.select("user_id", F.array_sort(_first_diffs()).alias("d"), (F.col("n_obs") - 1).cast("long").alias("n_ret"))
     k95 = F.floor((F.col("n_ret") + 19) / 20).cast("int")
     k99 = F.floor((F.col("n_ret") + 99) / 100).cast("int")
     g = g.withColumn("k95", k95).withColumn("k99", k99)
@@ -4966,13 +4826,7 @@ def var_es(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 VAR_ES_SQL = f"""
-WITH hist AS (
-    SELECT user_id,
-           list_transform(
-               list_sort(list(struct_pack(ts := ts, e := event_id, v := value))),
-               s -> CAST(CAST(s.v AS DECIMAL(18,2)) * 100 AS BIGINT)) AS c
-    FROM events GROUP BY user_id
-),
+WITH {_CENTS_HIST_SQL},
 base AS (
     SELECT user_id, CAST(len(c) - 1 AS BIGINT) AS n_ret,
            list_sort(list_transform(range(2, len(c) + 1),
@@ -5076,55 +4930,17 @@ def forecast_ensemble(spark: SparkSession, sf_dir: str) -> DataFrame:
     ts_backtest (docstring there); weights and the blend are final double
     projections in identical op order, floor-scaled. Series shorter than
     two seasons are excluded."""
-    ev = load_table(spark, sf_dir, "events")
-    s = F.struct(F.col("ts"), F.col("event_id"), F.col("value"))
-    g = ev.groupBy("user_id").agg(F.array_sort(F.collect_list(s)).alias("hist"))
-    cents = F.transform("hist", lambda r: (r["value"].cast("decimal(18,2)") * 100).cast("long"))
-    g = g.select("user_id", cents.alias("c")).withColumn("n", F.size("c")).filter(
-        F.col("n") >= 2 * _BT_SEASON
-    )
-    n = F.col("n")
-    g = g.withColumn("hold", F.slice("c", n - _BT_HOLD + 1, _BT_HOLD))
-    last_train = F.element_at("c", F.col("n") - _BT_HOLD)
-    train_sum = F.aggregate(
-        F.slice("c", 1, F.col("n") - _BT_HOLD), F.lit(0).cast("long"), lambda a, x: a + x
-    )
-    g = g.withColumn("lt", last_train).withColumn(
-        "mu", train_sum.cast("double") / (F.col("n") - _BT_HOLD).cast("double")
-    )
-    ae_naive = F.aggregate(
-        F.transform("hold", lambda x: F.abs(x - F.col("lt"))),
-        F.lit(0).cast("long"), lambda a, x: a + x,
-    )
-    ae_snaive = F.aggregate(
-        F.transform(
-            F.sequence(F.lit(1), F.lit(_BT_HOLD)),
-            lambda j: F.abs(
-                F.element_at("c", F.col("n") - _BT_HOLD + j)
-                - F.element_at("c", F.col("n") - _BT_HOLD - _BT_SEASON + j)
-            ),
-        ),
-        F.lit(0).cast("long"), lambda a, x: a + x,
-    )
-    ae_mean = F.aggregate(
-        F.transform("hold", lambda x: F.abs(x.cast("double") - F.col("mu"))),
-        F.lit(0.0), lambda a, x: a + x,
-    )
-    g = (
-        g.withColumn("mn", ae_naive.cast("double") / (100.0 * _BT_HOLD))
-        .withColumn("ms", ae_snaive.cast("double") / (100.0 * _BT_HOLD))
-        .withColumn("mm", ae_mean / (100.0 * _BT_HOLD))
-    )
+    g = _holdout_maes(_cents_history(spark, sf_dir, 2 * _BT_SEASON))
     eps = _ENS_EPS / 100.0  # one cent in value units
     iv_n = 1.0 / (F.col("mn") + eps)
     iv_s = 1.0 / (F.col("ms") + eps)
     iv_m = 1.0 / (F.col("mm") + eps)
     tot = iv_n + iv_s + iv_m
     # one-step-ahead member forecasts (full series)
-    f_naive = F.element_at("c", F.col("n")).cast("double")
-    f_snaive = F.element_at("c", F.col("n") - _BT_SEASON + 1).cast("double")
+    f_naive = F.element_at("c", F.col("n_obs")).cast("double")
+    f_snaive = F.element_at("c", F.col("n_obs") - _BT_SEASON + 1).cast("double")
     full_sum = F.aggregate("c", F.lit(0).cast("long"), lambda a, x: a + x)
-    f_mean = full_sum.cast("double") / F.col("n").cast("double")
+    f_mean = full_sum.cast("double") / F.col("n_obs").cast("double")
     blend = (iv_n * f_naive + iv_s * f_snaive + iv_m * f_mean) / tot
     return g.select(
         F.col("user_id").alias("series_id"),
@@ -5139,13 +4955,7 @@ def forecast_ensemble(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 FORECAST_ENSEMBLE_SQL = f"""
-WITH hist AS (
-    SELECT user_id,
-           list_transform(
-               list_sort(list(struct_pack(ts := ts, e := event_id, v := value))),
-               s -> CAST(CAST(s.v AS DECIMAL(18,2)) * 100 AS BIGINT)) AS c
-    FROM events GROUP BY user_id
-),
+WITH {_CENTS_HIST_SQL},
 base AS (
     SELECT user_id, c, len(c) AS n,
            c[len(c) - {_BT_HOLD} + 1 : len(c)] AS hold,
@@ -5359,12 +5169,8 @@ def load_curve(spark: SparkSession, sf_dir: str) -> DataFrame:
     element picks (integer-div formula, no interpolation-mode ambiguity —
     the ts_var_es convention), mean from the exact integer sum. Doubles
     only in the two final ratios, floor-scaled."""
-    ev = load_table(spark, sf_dir, "events")
-    s = F.struct(F.col("ts"), F.col("event_id"), F.col("value"))
-    g = ev.groupBy("user_id").agg(F.array_sort(F.collect_list(s)).alias("hist"))
-    cents = F.transform("hist", lambda r: (r["value"].cast("decimal(18,2)") * 100).cast("long"))
-    g = g.select("user_id", F.array_sort(cents).alias("asc"), F.size("hist").cast("long").alias("n_obs"))
-    g = g.filter(F.col("n_obs") >= _LDC_MIN_OBS)
+    g = _cents_history(spark, sf_dir, _LDC_MIN_OBS)
+    g = g.select("user_id", F.array_sort("c").alias("asc"), F.col("n_obs").cast("long").alias("n_obs"))
     # descending curve = ascending array read from the top
     n = F.col("n_obs")
 
@@ -5591,9 +5397,10 @@ def arch_test(spark: SparkSession, sf_dir: str) -> DataFrame:
     local-volatility envelope is needed over ts_anomaly_zscore's global
     σ. Verdict at the χ²₅, p = 0.01 critical value.
 
-    Shape and determinism are ts_ljung_box's verbatim (exact integer-cent
-    deltas squared as exact longs, fixed-order deviation folds); only the
-    input sequence differs. The squared deltas come from a row-level lag
+    Past its own squared-change barrier the chain is ts_ljung_box's:
+    :func:`_acf` + :func:`_ljung_box_q` over exact integer-cent deltas
+    squared as exact longs; only the input sequence differs. The squared
+    deltas come from a row-level lag
     window COLLECTED into the per-user array — an aggregation-boundary
     column the folds read physically. Deriving c² as an array transform
     instead lets Catalyst inline the transform into the folds' element
@@ -5606,69 +5413,24 @@ def arch_test(spark: SparkSession, sf_dir: str) -> DataFrame:
     d = d.filter(F.col("d").isNotNull())
     s = F.struct(F.col("ts"), F.col("event_id"), (F.col("d") * F.col("d")).alias("sq"))
     g = d.groupBy("user_id").agg(F.array_sort(F.collect_list(s)).alias("hist"))
-    g = g.select(
-        "user_id",
-        F.transform("hist", lambda r: r["sq"]).alias("c2"),
-        F.size("hist").alias("n_obs"),
-    )
+    g = g.select("user_id", F.transform("hist", lambda r: r["sq"]).alias("c"), F.size("hist").alias("n_obs"))
     g = g.filter(F.col("n_obs") >= _ARCH_MIN_OBS - 1)
-    # materialize c2/n_obs at an exchange-free projection boundary: the
+    # materialize c/n_obs at an exchange-free projection boundary: the
     # transform above is single-referenced downstream, so without the
     # barrier Catalyst would inline it into every fold element access
-    g = g.localCheckpoint(eager=False)
-    zero = F.lit(0).cast("long")
-    sx = F.aggregate("c2", zero, lambda acc, x: acc + x)
-    mu = sx.cast("double") / F.col("n_obs").cast("double")
-    g = g.withColumn("mu", mu)
-    # same ljung_box r14 pins downstream of the c2 barrier: mu (a fold)
-    # would otherwise inline into the dev lambda per element, dev into
-    # every element access of the five lag folds, and each lag fold would
-    # appear 4× through q's textual duplication (q_stat + verdict, r_k²)
-    g = g.localCheckpoint(eager=False)
-    g = g.withColumn("dev", F.transform("c2", lambda x: x.cast("double") - F.col("mu")))
-    g = g.withColumn("denom", F.aggregate("dev", F.lit(0.0), lambda acc, x: acc + x * x))
-    g = g.select("user_id", "n_obs", "dev", "denom").localCheckpoint(eager=False)
-
-    def _num(k: int):
-        return F.aggregate(
-            F.sequence(F.lit(1), F.col("n_obs") - k),
-            F.lit(0.0),
-            lambda acc, t: acc
-            + F.element_at("dev", t.cast("int")) * F.element_at("dev", (t + k).cast("int")),
-        )
-
-    g = g.filter(F.col("denom") > 0)
-    g = g.select(
-        "user_id",
-        "n_obs",
-        *[(_num(k) / F.col("denom")).alias(f"r{k}") for k in range(1, _LB_LAGS + 1)],
-    ).localCheckpoint(eager=False)
-    nd = F.col("n_obs").cast("double")
-    q = F.lit(0.0)
-    r1 = None
-    for k in range(1, _LB_LAGS + 1):
-        rk = F.col(f"r{k}")
-        if k == 1:
-            r1 = rk
-        q = q + rk * rk / (nd - float(k))
-    q = nd * (nd + 2.0) * q
+    g = _acf(g.localCheckpoint(eager=False), _LB_LAGS)
+    q = _ljung_box_q()
     return g.select(
         "user_id",
         F.col("n_obs").cast("long").alias("n_sq_changes"),
-        (F.floor(r1 * 1e6) / 1e6).alias("acf_sq_lag1"),
+        (F.floor(F.col("r1") * 1e6) / 1e6).alias("acf_sq_lag1"),
         (F.floor(q * 1e6) / 1e6).alias("q_stat"),
         F.when(q > _ARCH_CRIT, F.lit("arch_effect")).otherwise(F.lit("homoskedastic")).alias("verdict"),
     )
 
 
 ARCH_TEST_SQL = f"""
-WITH hist AS (
-    SELECT user_id,
-           list_transform(
-               list_sort(list(struct_pack(ts := ts, e := event_id, v := value))),
-               s -> CAST(CAST(s.v AS DECIMAL(18,2)) * 100 AS BIGINT)) AS c
-    FROM events GROUP BY user_id
-),
+WITH {_CENTS_HIST_SQL},
 sq AS (
     SELECT user_id, len(c) - 1 AS n_obs,
            list_transform(range(2, len(c) + 1),
@@ -5688,31 +5450,8 @@ dv AS (
            list_transform(c2, x -> CAST(x AS DOUBLE) - mu) AS dev
     FROM base
 ),
-dn AS (
-    SELECT user_id, n_obs, dev,
-           list_reduce(list_prepend(CAST(0.0 AS DOUBLE),
-                                    list_transform(dev, x -> x * x)), (a, b) -> a + b) AS denom
-    FROM dv
-),
-rk AS (
-    SELECT user_id, n_obs, denom,
-           {_lb_num_sql(1)} / denom AS r1,
-           {_lb_num_sql(2)} / denom AS r2,
-           {_lb_num_sql(3)} / denom AS r3,
-           {_lb_num_sql(4)} / denom AS r4,
-           {_lb_num_sql(5)} / denom AS r5
-    FROM dn WHERE denom > 0
-),
-q AS (
-    SELECT user_id, n_obs, r1,
-           CAST(n_obs AS DOUBLE) * (CAST(n_obs AS DOUBLE) + 2.0) *
-           (r1 * r1 / (CAST(n_obs AS DOUBLE) - 1.0)
-          + r2 * r2 / (CAST(n_obs AS DOUBLE) - 2.0)
-          + r3 * r3 / (CAST(n_obs AS DOUBLE) - 3.0)
-          + r4 * r4 / (CAST(n_obs AS DOUBLE) - 4.0)
-          + r5 * r5 / (CAST(n_obs AS DOUBLE) - 5.0)) AS q_stat
-    FROM rk
-)
+{_ACF_DENOM_SQL},
+{_LB_Q_SQL}
 SELECT user_id, CAST(n_obs AS BIGINT) AS n_sq_changes,
        floor(r1 * 1e6) / 1e6 AS acf_sq_lag1,
        floor(q_stat * 1e6) / 1e6 AS q_stat,
@@ -5742,12 +5481,7 @@ def dist_drift(spark: SparkSession, sf_dir: str) -> DataFrame:
     element picks of the sorted cents; bin counts are exact integer folds
     over each half (strict-inequality binning, deterministic on ties);
     the χ² is the only float, floor-scaled."""
-    ev = load_table(spark, sf_dir, "events")
-    s = F.struct(F.col("ts"), F.col("event_id"), F.col("value"))
-    g = ev.groupBy("user_id").agg(F.array_sort(F.collect_list(s)).alias("hist"))
-    cents = F.transform("hist", lambda r: (r["value"].cast("decimal(18,2)") * 100).cast("long"))
-    g = g.select("user_id", cents.alias("c"), F.size("hist").alias("n_obs"))
-    g = g.filter(F.col("n_obs") >= _DRIFT_MIN_OBS)
+    g = _cents_history(spark, sf_dir, _DRIFT_MIN_OBS)
     n = F.col("n_obs")
     g = g.withColumn("srt", F.array_sort("c")).withColumn("nh", F.floor(n / 2).cast("int"))
 
@@ -5800,13 +5534,7 @@ def dist_drift(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 DIST_DRIFT_SQL = f"""
-WITH hist AS (
-    SELECT user_id,
-           list_transform(
-               list_sort(list(struct_pack(ts := ts, e := event_id, v := value))),
-               s -> CAST(CAST(s.v AS DECIMAL(18,2)) * 100 AS BIGINT)) AS c
-    FROM events GROUP BY user_id
-),
+WITH {_CENTS_HIST_SQL},
 base AS (
     SELECT user_id, c, len(c) AS n_obs, list_sort(c) AS srt,
            CAST(len(c) // 2 AS INT) AS nh

@@ -42,18 +42,7 @@ def run_available_now(stream_df: DataFrame, output_mode: str, timeout_s: int = 6
     all rows on the driver for the session's lifetime — across a 100-query
     sweep the leaked sinks degraded later queries) and the sink's temp view
     is dropped, so each drain's memory is reclaimable once its result is."""
-    spark = stream_df.sparkSession
-    name = "drain_" + uuid.uuid4().hex[:12]
-    q = (
-        stream_df.writeStream.format("memory")
-        .queryName(name)
-        .outputMode(output_mode)
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination(timeout_s)
-    out = _detach(spark, name)
-    return out
+    return run_available_now_progress(stream_df, output_mode, timeout_s)[0]
 
 
 def _detach(spark, name: str) -> DataFrame:

@@ -13,7 +13,8 @@ from __future__ import annotations
 import os
 import sys
 
-sys.path.insert(0, "/root/repo")
+ROOT = os.path.dirname(os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
+sys.path.insert(0, ROOT)
 
 import __spark_entry__ as entrymod  # noqa: E402
 from timedb_spark.session import get_spark  # noqa: E402
@@ -35,7 +36,7 @@ def main() -> None:
     suffix = sys.argv[1] if len(sys.argv) > 1 else "before"
     names = sys.argv[2:] or HEADLINE
     sf_dir = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    out_dir = os.environ.get("SPARK_GRAFT_PLANS_DIR", "/root/repo/plans/r14")
+    out_dir = os.environ.get("SPARK_GRAFT_PLANS_DIR", os.path.join(ROOT, "plans", "r14"))
     os.makedirs(out_dir, exist_ok=True)
 
     spark = get_spark("timedb_spark-plan-capture")

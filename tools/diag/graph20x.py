@@ -10,8 +10,8 @@ import sys
 import time
 import urllib.request
 
-sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.dirname(os.path.abspath(__file__)))))
-sys.path.insert(0, "/root/repo")
+ROOT = os.path.dirname(os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
+sys.path.insert(0, ROOT)
 
 from pyspark.sql import functions as F  # noqa: E402
 
@@ -37,7 +37,7 @@ def main():
     spark = get_spark("timedb-graph-diag", extra_conf={"spark.ui.enabled": "true"})
     spark.sparkContext.setLogLevel("ERROR")
 
-    sys.path.insert(0, "/root/repo/tools")
+    sys.path.insert(0, os.path.join(ROOT, "tools"))
     from scaleprobe import BASE_SF_DIR, build_stress_dir, stress_manifest
 
     stress_dir = f"/tmp/timedb_scaleprobe_x{args.replicas}"

@@ -6,9 +6,11 @@ Usage: python tools/gen_plans_doc.py  (writes docs/PLANS.md at sf0.001)
 
 from __future__ import annotations
 
+import os
 import sys
 
-sys.path.insert(0, "/root/repo")
+ROOT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+sys.path.insert(0, ROOT)
 
 import __spark_entry__ as entrymod  # noqa: E402
 from timedb_spark import plans  # noqa: E402
@@ -128,7 +130,7 @@ def main() -> None:
     for name, note in PICKS:
         tree = plans.formatted_plan(q[name](spark, sf)).split("\n\n")[0]
         out += [f"## {name}", "", note, "", "```", tree.strip(), "```", ""]
-    with open("/root/repo/docs/PLANS.md", "w") as f:
+    with open(os.path.join(ROOT, "docs", "PLANS.md"), "w") as f:
         f.write("\n".join(out))
 
 

@@ -16,10 +16,12 @@ Usage: python tools/keybench.py [sf_dir] [out.json]
 from __future__ import annotations
 
 import json
+import os
 import sys
 import time
 
-sys.path.insert(0, "/root/repo")
+ROOT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+sys.path.insert(0, ROOT)
 
 import __spark_entry__ as entrymod  # noqa: E402
 from timedb_spark.io.tables import bitemporal_frame  # noqa: E402

@@ -22,13 +22,15 @@ window.
 from __future__ import annotations
 
 import math
+import os
 import sys
 import time
 from datetime import date, datetime
 
 import duckdb
 
-sys.path.insert(0, "/root/repo")
+ROOT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+sys.path.insert(0, ROOT)
 
 import __spark_entry__ as entrymod  # noqa: E402
 from timedb_spark.io.tables import TABLE_NAMES  # noqa: E402

@@ -19,10 +19,12 @@ nonzero); absolute times below the noise floor are ignored.
 from __future__ import annotations
 
 import json
+import os
 import sys
 import time
 
-sys.path.insert(0, "/root/repo")
+ROOT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+sys.path.insert(0, ROOT)
 
 import __spark_entry__ as entrymod  # noqa: E402
 from timedb_spark.session import get_spark  # noqa: E402
