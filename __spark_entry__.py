@@ -766,6 +766,16 @@ def _q_multimodal_video(spark: SparkSession, sf_dir: str) -> DataFrame:
 _STORE_CACHE: dict[str, object] = {}
 
 
+def _store_frame(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """The deterministic bitemporal frame the store gates write: it lacks
+    the optional valid_time_end/run_id columns of the full series_values
+    schema, so they are filled null like a write without intervals/runs."""
+    return bitemporal_frame(spark, sf_dir).withColumns({
+        "valid_time_end": F.lit(None).cast("timestamp"),
+        "run_id": F.lit(None).cast("long"),
+    })
+
+
 def _materialized_store(spark: SparkSession, sf_dir: str):
     """One store per (process, sf_dir): Store.create() + append_values of the
     deterministic bitemporal frame. Cached so fast_count and partition_stats
@@ -778,14 +788,7 @@ def _materialized_store(spark: SparkSession, sf_dir: str):
 
         st = Store(spark, tempfile.mkdtemp(prefix="timedb_gate_store_"))
         st.create()
-        # bitemporal_frame lacks the optional valid_time_end/run_id columns
-        # of the full series_values schema; fill them null like a write
-        # without intervals/runs.
-        sv = bitemporal_frame(spark, sf_dir).withColumns({
-            "valid_time_end": F.lit(None).cast("timestamp"),
-            "run_id": F.lit(None).cast("long"),
-        })
-        st.append_values(sv)
+        st.append_values(_store_frame(spark, sf_dir))
         _STORE_CACHE[sf_dir] = st
     return st
 
@@ -851,10 +854,7 @@ def _materialized_snapstore(spark: SparkSession, sf_dir: str):
 
         st = SnapshotStore(spark, tempfile.mkdtemp(prefix="timedb_gate_snap_"))
         st.create()
-        sv = bitemporal_frame(spark, sf_dir).withColumns({
-            "valid_time_end": F.lit(None).cast("timestamp"),
-            "run_id": F.lit(None).cast("long"),
-        })
+        sv = _store_frame(spark, sf_dir)
         st.append_values(sv.filter(F.col("series_id") % 2 == 0))
         v_first = st.versions()[-1]["version"]
         st.append_values(sv.filter(F.col("series_id") % 2 != 0))
@@ -938,6 +938,27 @@ _COMPACT_AGG_SCHEMA = (
 )
 
 
+def _pre_fingerprint(st) -> list[tuple]:
+    """The store's ``("pre", ...)`` fingerprint rows, collected NOW: the
+    read is lazy, so collecting after the rewrite under test would scan
+    the rewritten files and prove nothing. {str,int} cells only (the
+    driver-data convention)."""
+    return [
+        ("pre", str(r["retention"]), str(r["vt_month"]), int(r["n_rows"]),
+         int(r["series_id_min"]), int(r["series_id_max"]),
+         str(r["valid_time_min"]), str(r["valid_time_max"]), int(r["value_cents"]))
+        for r in _compact_partition_agg(st.read_values()).collect()
+    ]
+
+
+def _pre_post(spark: SparkSession, st, pre: list[tuple]) -> DataFrame:
+    """Gate output: the collected pre fingerprint followed by the ``post``
+    fingerprint of a live scan of the store."""
+    pre_df = spark.createDataFrame(pre, _COMPACT_AGG_SCHEMA)
+    post_df = _compact_partition_agg(st.read_values()).select(F.lit("post").alias("phase"), "*")
+    return pre_df.unionByName(post_df)
+
+
 def _materialized_compact_store(spark: SparkSession, sf_dir: str):
     """One compacted store per (process, sf_dir): create + TWO interleaved
     appends (even/odd series_id — every partition ends up fragmented with
@@ -953,18 +974,10 @@ def _materialized_compact_store(spark: SparkSession, sf_dir: str):
 
         st = Store(spark, tempfile.mkdtemp(prefix="timedb_gate_compact_"))
         st.create()
-        sv = bitemporal_frame(spark, sf_dir).withColumns({
-            "valid_time_end": F.lit(None).cast("timestamp"),
-            "run_id": F.lit(None).cast("long"),
-        })
+        sv = _store_frame(spark, sf_dir)
         st.append_values(sv.filter(F.col("series_id") % 2 == 0))
         st.append_values(sv.filter(F.col("series_id") % 2 != 0))
-        pre = [
-            ("pre", str(r["retention"]), str(r["vt_month"]), int(r["n_rows"]),
-             int(r["series_id_min"]), int(r["series_id_max"]),
-             str(r["valid_time_min"]), str(r["valid_time_max"]), int(r["value_cents"]))
-            for r in _compact_partition_agg(st.read_values()).collect()
-        ]
+        pre = _pre_fingerprint(st)
         n_compacted = len(st.compact(max_files_per_partition=1, cluster="zorder"))
         _COMPACT_CACHE[sf_dir] = (st, pre, n_compacted)
     return _COMPACT_CACHE[sf_dir]
@@ -985,13 +998,7 @@ def _q_store_compact_zorder(spark: SparkSession, sf_dir: str) -> DataFrame:
     files live. File-count and zone-map/pruning assertions stay in
     tests/test_store_client.py."""
     st, pre, _n = _materialized_compact_store(spark, sf_dir)
-    pre_df = spark.createDataFrame(pre, _COMPACT_AGG_SCHEMA)
-    post_df = _compact_partition_agg(st.read_values()).select(
-        F.lit("post").alias("phase"),
-        "retention", "vt_month", "n_rows", "series_id_min", "series_id_max",
-        "valid_time_min", "valid_time_max", "value_cents",
-    )
-    return pre_df.unionByName(post_df)
+    return _pre_post(spark, st, pre)
 
 
 _TTL_CACHE: dict[str, tuple] = {}
@@ -1018,17 +1025,8 @@ def _materialized_ttl_store(spark: SparkSession, sf_dir: str):
 
         st = Store(spark, tempfile.mkdtemp(prefix="timedb_gate_ttl_"))
         st.create()
-        sv = bitemporal_frame(spark, sf_dir).withColumns({
-            "valid_time_end": F.lit(None).cast("timestamp"),
-            "run_id": F.lit(None).cast("long"),
-        })
-        st.append_values(sv)
-        pre = [
-            ("pre", str(r["retention"]), str(r["vt_month"]), int(r["n_rows"]),
-             int(r["series_id_min"]), int(r["series_id_max"]),
-             str(r["valid_time_min"]), str(r["valid_time_max"]), int(r["value_cents"]))
-            for r in _compact_partition_agg(st.read_values()).collect()
-        ]
+        st.append_values(_store_frame(spark, sf_dir))
+        pre = _pre_fingerprint(st)
         dropped = st.apply_retention(now=_TTL_NOW)
         _TTL_CACHE[sf_dir] = (st, pre, dropped)
     return _TTL_CACHE[sf_dir]
@@ -1048,13 +1046,7 @@ def _q_store_retention_ttl(spark: SparkSession, sf_dir: str) -> DataFrame:
     survivors are byte-identical. The dropped-directory list and zero-IO
     properties stay pinned in tests/test_store_client.py."""
     st, pre, _dropped = _materialized_ttl_store(spark, sf_dir)
-    pre_df = spark.createDataFrame(pre, _COMPACT_AGG_SCHEMA)
-    post_df = _compact_partition_agg(st.read_values()).select(
-        F.lit("post").alias("phase"),
-        "retention", "vt_month", "n_rows", "series_id_min", "series_id_max",
-        "valid_time_min", "valid_time_max", "value_cents",
-    )
-    return pre_df.unionByName(post_df)
+    return _pre_post(spark, st, pre)
 
 
 _ROLLUP_CACHE: dict[str, object] = {}
@@ -1077,10 +1069,7 @@ def _materialized_rollup(spark: SparkSession, sf_dir: str):
 
         st = SnapshotStore(spark, tempfile.mkdtemp(prefix="timedb_gate_rollup_"))
         st.create()
-        sv = bitemporal_frame(spark, sf_dir).withColumns({
-            "valid_time_end": F.lit(None).cast("timestamp"),
-            "run_id": F.lit(None).cast("long"),
-        })
+        sv = _store_frame(spark, sf_dir)
         ca = ContinuousAggregate(st, name="gate_hourly")
         st.append_values(sv.filter(F.col("series_id") % 2 == 0))
         r1 = ca.refresh()
@@ -1150,10 +1139,7 @@ def _materialized_bt_rollup(spark: SparkSession, sf_dir: str):
 
         st = SnapshotStore(spark, tempfile.mkdtemp(prefix="timedb_gate_btrollup_"))
         st.create()
-        sv = bitemporal_frame(spark, sf_dir).withColumns({
-            "valid_time_end": F.lit(None).cast("timestamp"),
-            "run_id": F.lit(None).cast("long"),
-        })
+        sv = _store_frame(spark, sf_dir)
         off_h = (F.unix_micros("change_time") - F.unix_micros("knowledge_time")) / 3600000000
         ca = BitemporalContinuousAggregate(st, name="gate_hourly_bt")
         st.append_values(sv.filter(off_h.isin(1, 2)))
@@ -1283,10 +1269,7 @@ def _materialized_rollup_ttl(spark: SparkSession, sf_dir: str):
 
         st = SnapshotStore(spark, tempfile.mkdtemp(prefix="timedb_gate_rollupttl_"))
         st.create()
-        sv = bitemporal_frame(spark, sf_dir).withColumns({
-            "valid_time_end": F.lit(None).cast("timestamp"),
-            "run_id": F.lit(None).cast("long"),
-        })
+        sv = _store_frame(spark, sf_dir)
         ca = BitemporalContinuousAggregate(st, name="gate_hourly_ttl")
         st.append_values(sv.filter(F.col("series_id") % 2 == 0))
         r1 = ca.refresh()
@@ -1361,10 +1344,7 @@ def _materialized_vacuum(spark: SparkSession, sf_dir: str):
 
         st = SnapshotStore(spark, tempfile.mkdtemp(prefix="timedb_gate_vacuum_"))
         st.create()
-        sv = bitemporal_frame(spark, sf_dir).withColumns({
-            "valid_time_end": F.lit(None).cast("timestamp"),
-            "run_id": F.lit(None).cast("long"),
-        })
+        sv = _store_frame(spark, sf_dir)
         st.append_values(sv.filter(F.col("series_id") % 2 == 0))
         st.append_values(sv.filter(F.col("series_id") % 2 != 0))
         v_old = st.versions()[0]["version"]
@@ -1711,10 +1691,7 @@ def _materialized_stream_ingest(spark: SparkSession, sf_dir: str):
         from timedb_spark.streaming import stream_append_to_store
 
         root = tempfile.mkdtemp(prefix="timedb_gate_streamingest_")
-        sv = bitemporal_frame(spark, sf_dir).withColumns({
-            "valid_time_end": F.lit(None).cast("timestamp"),
-            "run_id": F.lit(None).cast("long"),
-        }).select([f.name for f in SERIES_VALUES_SCHEMA.fields])
+        sv = _store_frame(spark, sf_dir).select([f.name for f in SERIES_VALUES_SCHEMA.fields])
         landing = f"{root}/landing"
         with micros_parquet_writes(spark):
             sv.repartition(3).write.parquet(landing)
@@ -1810,17 +1787,8 @@ def _materialized_delete_store(spark: SparkSession, sf_dir: str):
 
         st = Store(spark, tempfile.mkdtemp(prefix="timedb_gate_delete_"))
         st.create()
-        sv = bitemporal_frame(spark, sf_dir).withColumns({
-            "valid_time_end": F.lit(None).cast("timestamp"),
-            "run_id": F.lit(None).cast("long"),
-        })
-        st.append_values(sv)
-        pre = [
-            ("pre", str(r["retention"]), str(r["vt_month"]), int(r["n_rows"]),
-             int(r["series_id_min"]), int(r["series_id_max"]),
-             str(r["valid_time_min"]), str(r["valid_time_max"]), int(r["value_cents"]))
-            for r in _compact_partition_agg(st.read_values()).collect()
-        ]
+        st.append_values(_store_frame(spark, sf_dir))
+        pre = _pre_fingerprint(st)
         rewritten = st.delete_series(_DELETE_TARGETS)
         _DELETE_CACHE[sf_dir] = (st, pre, rewritten)
     return _DELETE_CACHE[sf_dir]
@@ -1839,13 +1807,7 @@ def _q_store_delete_series(spark: SparkSession, sf_dir: str) -> DataFrame:
     leaves every surviving row byte-identical. Zone-map pruning (innocent
     partitions untouched) stays pinned in tests/test_store_client.py."""
     st, pre, _rewritten = _materialized_delete_store(spark, sf_dir)
-    pre_df = spark.createDataFrame(pre, _COMPACT_AGG_SCHEMA)
-    post_df = _compact_partition_agg(st.read_values()).select(
-        F.lit("post").alias("phase"),
-        "retention", "vt_month", "n_rows", "series_id_min", "series_id_max",
-        "valid_time_min", "valid_time_max", "value_cents",
-    )
-    return pre_df.unionByName(post_df)
+    return _pre_post(spark, st, pre)
 
 
 def _q_embed_quantize(spark: SparkSession, sf_dir: str) -> DataFrame:

@@ -12,6 +12,17 @@ decimal sum (as double) by the count — one deterministic double division.
 Scale notes: every query keeps filters ahead of joins (pushdown), broadcasts
 dimension tables explicitly, and aggregates with map-side combine. No UDFs,
 no collects.
+
+The graph_* operators and basket_pairs share one co-purchase input:
+:func:`_order_parts` (the distinct (order, part) incidence of lineitem),
+:func:`_copurchase_pairs` (the order-key self-join, one row per order and
+part pair pa < pb), :func:`_copurchase_edges` (the distinct edge list,
+unpinned — callers whose edges feed several join sides pin it) and
+:func:`_undirected` (both orientations). Their oracles share the ``op`` +
+edges/pairs CTE fragment (``_EDGES_SQL``, ``_PAIRS_SQL``). graph_triangles
+and graph_clustering share :func:`_node_triangles` (orientation choice,
+broadcast-or-shuffled wedge joins, per-node counts). Sorted-array medians
+come from :func:`timedb_spark.functions.arrays.sorted_median`.
 """
 
 from __future__ import annotations
@@ -21,6 +32,7 @@ import math
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
+from timedb_spark.functions.arrays import sorted_median, sorted_median_sql
 from timedb_spark.functions.ordering import packed_lex
 from timedb_spark.io.tables import load_table
 
@@ -72,6 +84,56 @@ FROM lineitem
 WHERE l_shipdate <= TIMESTAMP '1998-09-02 00:00:00'
 GROUP BY l_returnflag, l_linestatus
 """
+
+
+# ---------------------------------------------------------------------------
+# co-purchase part graph — the input every graph_* operator shares
+# ---------------------------------------------------------------------------
+
+
+def _order_parts(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """Distinct (l_orderkey, l_partkey) incidence of lineitem."""
+    return load_table(spark, sf_dir, "lineitem").select("l_orderkey", "l_partkey").distinct()
+
+
+def _copurchase_pairs(li: DataFrame) -> DataFrame:
+    """One (ok, pa, pb) row per order holding parts pa < pb, from a
+    two-column (order, part) incidence frame — the lineitem self-join on
+    the order key, bounded per order by its line count (O(k²) per basket,
+    never O(n²) global)."""
+    ok, pk = li.columns
+    a = li.select(F.col(ok).alias("ok"), F.col(pk).alias("pa"))
+    b = li.select(F.col(ok).alias("ok"), F.col(pk).alias("pb"))
+    return a.join(b, "ok").filter(F.col("pa") < F.col("pb"))
+
+
+def _copurchase_edges(li: DataFrame) -> DataFrame:
+    """Distinct co-purchase part edges (pa, pb), pa < pb. Unpinned: a
+    caller whose edge list feeds several join sides cuts the lineage
+    itself, since Spark does not share common subplans across branches."""
+    return _copurchase_pairs(li).select("pa", "pb").distinct()
+
+
+def _undirected(edges: DataFrame) -> DataFrame:
+    """Both orientations (pa, pb) and (pb, pa) of a pa < pb edge list."""
+    return edges.unionByName(edges.select(F.col("pb").alias("pa"), F.col("pa").alias("pb")))
+
+
+#: oracle side of :func:`_order_parts` / :func:`_copurchase_edges`
+_OP_SQL = "op AS (SELECT DISTINCT l_orderkey, l_partkey FROM lineitem)"
+
+
+def _copurchase_sql(name: str, a: str, b: str) -> str:
+    """``op`` plus the distinct edge CTE ``name(a, b)``, a < b."""
+    return f"""{_OP_SQL},
+{name} AS (
+    SELECT DISTINCT a.l_partkey AS {a}, b.l_partkey AS {b}
+    FROM op a JOIN op b ON a.l_orderkey = b.l_orderkey AND a.l_partkey < b.l_partkey
+)"""
+
+
+_EDGES_SQL = _copurchase_sql("edges", "pa", "pb")
+_PAIRS_SQL = _copurchase_sql("pairs", "part_a", "part_b")
 
 
 # ---------------------------------------------------------------------------
@@ -537,19 +599,16 @@ def basket_pairs(spark: SparkSession, sf_dir: str, *, min_support: int = 2) -> D
     deduped (order, part) frame shrinks the join inputs first; support
     filtering happens in the same final partial-agg pass.
     """
-    li = load_table(spark, sf_dir, "lineitem").select("l_orderkey", "l_partkey").distinct()
-    a = li.select(F.col("l_orderkey").alias("ok"), F.col("l_partkey").alias("part_a"))
-    b = li.select(F.col("l_orderkey").alias("ok"), F.col("l_partkey").alias("part_b"))
-    pairs = a.join(b, "ok").filter(F.col("part_a") < F.col("part_b"))
+    pairs = _copurchase_pairs(_order_parts(spark, sf_dir))
     return (
-        pairs.groupBy("part_a", "part_b")
+        pairs.groupBy(F.col("pa").alias("part_a"), F.col("pb").alias("part_b"))
         .agg(F.count(F.lit(1)).alias("support"))
         .filter(F.col("support") >= min_support)
     )
 
 
-BASKET_PAIRS_SQL = """
-WITH op AS (SELECT DISTINCT l_orderkey, l_partkey FROM lineitem)
+BASKET_PAIRS_SQL = f"""
+WITH {_OP_SQL}
 SELECT a.l_partkey AS part_a, b.l_partkey AS part_b, count(*) AS support
 FROM op a JOIN op b ON a.l_orderkey = b.l_orderkey AND a.l_partkey < b.l_partkey
 GROUP BY 1, 2
@@ -735,13 +794,7 @@ def graph_pagerank(spark: SparkSession, sf_dir: str) -> DataFrame:
     at 100 TB, persist/checkpoint the degree-annotated edge list (and
     localCheckpoint ranks to truncate lineage); at 3 iterations the chained
     plan evaluates in one pass and a persist barrier measured net-negative."""
-    li = load_table(spark, sf_dir, "lineitem").select("l_orderkey", "l_partkey").distinct()
-    a = li.select(F.col("l_orderkey").alias("ok"), F.col("l_partkey").alias("part_a"))
-    b = li.select(F.col("l_orderkey").alias("ok"), F.col("l_partkey").alias("part_b"))
-    pairs = a.join(b, "ok").filter(F.col("part_a") < F.col("part_b")).select("part_a", "part_b").distinct()
-    edges = pairs.select(F.col("part_a").alias("src"), F.col("part_b").alias("dst")).unionByName(
-        pairs.select(F.col("part_b").alias("src"), F.col("part_a").alias("dst"))
-    )
+    edges = _undirected(_copurchase_edges(_order_parts(spark, sf_dir))).toDF("src", "dst")
     deg = edges.groupBy("src").agg(F.count(F.lit(1)).alias("deg"))
     ed = edges.join(deg, "src")
     ranks = deg.select(F.col("src").alias("node"), F.lit(_PR_SCALE).cast("long").alias("r"))
@@ -767,11 +820,7 @@ def _pr_iter_sql(prev: str, out: str) -> str:
 
 
 GRAPH_PAGERANK_SQL = f"""
-WITH op AS (SELECT DISTINCT l_orderkey, l_partkey FROM lineitem),
-pairs AS (
-    SELECT DISTINCT a.l_partkey AS part_a, b.l_partkey AS part_b
-    FROM op a JOIN op b ON a.l_orderkey = b.l_orderkey AND a.l_partkey < b.l_partkey
-),
+WITH {_PAIRS_SQL},
 edges AS (
     SELECT part_a AS src, part_b AS dst FROM pairs
     UNION
@@ -829,17 +878,6 @@ def _shj_parts(conf_parts: int, m: int) -> int:
     return max(conf_parts, math.ceil(m / _SHJ_EDGES_PER_PART))
 
 
-def _copurchase_edges(li: DataFrame) -> DataFrame:
-    """Distinct co-purchase part edges (pa < pb) from an (l_orderkey,
-    l_partkey) incidence frame, lineage-cut once: the edge list feeds
-    multiple join sides (wedge legs, closing edge, degrees) and Spark does
-    not share common subplans across branches."""
-    a = li.select(F.col("l_orderkey").alias("ok"), F.col("l_partkey").alias("pa"))
-    b = li.select(F.col("l_orderkey").alias("ok"), F.col("l_partkey").alias("pb"))
-    return (
-        a.join(b, "ok").filter(F.col("pa") < F.col("pb")).select("pa", "pb").distinct()
-        .localCheckpoint(eager=False)
-    )
 
 
 def _edge_stats(edges: DataFrame):
@@ -854,19 +892,20 @@ def _edge_stats(edges: DataFrame):
     )
 
 
-def _oriented_triangles(
-    edges: DataFrame, orient: str, broadcast_edges: bool, m: int,
-    deg: DataFrame | None = None,
-) -> DataFrame:
-    """Triangle corners (x, y, z) via oriented wedge enumeration — the
-    shared core of :func:`graph_triangles` and :func:`graph_clustering`.
-    Every triangle is generated by exactly ONE wedge at its lowest-rank
-    corner (two equi-joins: wedge at the shared source + the closing
-    oriented edge; never a cartesian). ``orient`` is "id" or "degree"
-    (resolve "auto" with :func:`select_orientation` BEFORE calling); a
-    caller that already built node degrees (graph_clustering's lcc pass)
-    hands them in as ``deg`` (node, deg) so the degree path doesn't
-    recompute them.
+def _node_triangles(edges: DataFrame, orient: str, stats, deg: DataFrame | None = None) -> DataFrame:
+    """Per-node triangle counts (node, n_triangles) via oriented wedge
+    enumeration — the shared core of :func:`graph_triangles` and
+    :func:`graph_clustering`. Every triangle is generated by exactly ONE
+    wedge at its lowest-rank corner (two equi-joins: wedge at the shared
+    source + the closing oriented edge; never a cartesian), and its three
+    corners count through one explode + map-side-combined count.
+    ``orient`` is "id", "degree" or "auto"; ``stats`` holds the planning
+    scalars ``max_deg`` and ``m`` (edge count). "auto" resolves with
+    :func:`select_orientation` and broadcasts the edge list when it has
+    at most ``_TRI_BROADCAST_EDGES`` edges; a forced orientation always
+    takes the shuffled path. A caller that already built node degrees
+    (graph_clustering's lcc pass) hands them in as ``deg`` (node, deg) so
+    the degree path doesn't recompute them.
 
     Join strategy — the part that decides whether the plan survives scale:
 
@@ -893,10 +932,14 @@ def _oriented_triangles(
       ~10-15 MB at any scale; measured post-fix ratios live in
       SCALEPROBE_r13_x20.json.
     """
+    m = stats.m or 0
+    broadcast_edges = False
+    if orient == "auto":
+        orient = select_orientation(stats.max_deg or 0, m)
+        broadcast_edges = m <= _TRI_BROADCAST_EDGES
     if orient == "degree":
         if deg is None:
-            und = edges.unionByName(edges.select(F.col("pb").alias("pa"), F.col("pa").alias("pb")))
-            deg = und.groupBy(F.col("pa").alias("node")).agg(F.count(F.lit(1)).alias("deg"))
+            deg = _undirected(edges).groupBy(F.col("pa").alias("node")).agg(F.count(F.lit(1)).alias("deg"))
         ranked = (
             edges.join(deg.select(F.col("node").alias("pa"), F.col("deg").alias("da")), "pa")
             .join(deg.select(F.col("node").alias("pb"), F.col("deg").alias("db")), "pb")
@@ -930,8 +973,10 @@ def _oriented_triangles(
             o1.join(o2, F.col("src") == F.col("src2")).filter(v_lower)
             .select("src", "v", "w").repartition(n_parts, "v", "w")
         )
-    return wedges.join(closing, ["v", "w"]).select(
-        F.col("src").alias("x"), F.col("v").alias("y"), F.col("w").alias("z")
+    return (
+        wedges.join(closing, ["v", "w"])
+        .select(F.explode(F.array("src", "v", "w")).alias("node"))
+        .groupBy("node").agg(F.count(F.lit(1)).alias("n_triangles"))
     )
 
 
@@ -976,33 +1021,20 @@ def graph_triangles(spark: SparkSession, sf_dir: str, *, top_n: int = 20, orient
     Shuffling the wedges was the whole cost (measured 30 s → 6.7 s at
     sf0.1). Past the threshold (the 100 TB graph) it falls back to shuffle
     joins, where the degree orientation keeps wedge volume at O(m^1.5)."""
-    li = load_table(spark, sf_dir, "lineitem").select("l_orderkey", "l_partkey").distinct()
-    edges = _copurchase_edges(li)
-    # the 2-scalar stats collect feeds orientation, the broadcast-vs-SHJ
-    # choice AND the SHJ partition-count derivation, so a forced orient
-    # still pays it (one tiny job over the checkpointed edge list).
-    stats = _edge_stats(edges)
-    m = stats.m or 0
-    broadcast_edges = False
-    if orient == "auto":
-        orient = select_orientation(stats.max_deg or 0, m)
-        broadcast_edges = m <= _TRI_BROADCAST_EDGES
-    tri = _oriented_triangles(edges, orient, broadcast_edges, m)
-    nodes = tri.select(F.explode(F.array("x", "y", "z")).alias("node"))
+    # pinned: the edge list feeds the stats collect and every wedge/closing
+    # side. The 2-scalar stats collect feeds orientation, the
+    # broadcast-vs-SHJ choice AND the SHJ partition-count derivation, so a
+    # forced orient still pays it (one tiny job over the pinned edges).
+    edges = _copurchase_edges(_order_parts(spark, sf_dir)).localCheckpoint(eager=False)
     return (
-        nodes.groupBy("node")
-        .agg(F.count(F.lit(1)).alias("n_triangles"))
+        _node_triangles(edges, orient, _edge_stats(edges))
         .orderBy(F.col("n_triangles").desc(), F.col("node"))
         .limit(top_n)
     )
 
 
-GRAPH_TRIANGLES_SQL = """
-WITH op AS (SELECT DISTINCT l_orderkey, l_partkey FROM lineitem),
-edges AS (
-    SELECT DISTINCT a.l_partkey AS pa, b.l_partkey AS pb
-    FROM op a JOIN op b ON a.l_orderkey = b.l_orderkey AND a.l_partkey < b.l_partkey
-),
+GRAPH_TRIANGLES_SQL = f"""
+WITH {_EDGES_SQL},
 tri AS (
     SELECT e1.pa AS x, e1.pb AS y, e2.pb AS z
     FROM edges e1
@@ -1452,13 +1484,8 @@ def _link_predict_pairs(
 ) -> DataFrame:
     """Core RA-index link prediction over an (ok, pk) order↔part incidence
     frame — factored from graph_link_predict so tests can plant hubs."""
-    a = li.select(F.col("ok"), F.col("pk").alias("pa"))
-    b = li.select(F.col("ok"), F.col("pk").alias("pb"))
-    edges = (
-        a.join(b, "ok").filter(F.col("pa") < F.col("pb")).select("pa", "pb").distinct()
-        .localCheckpoint(eager=False)
-    )
-    und = edges.unionByName(edges.select(F.col("pb").alias("pa"), F.col("pa").alias("pb")))
+    edges = _copurchase_edges(li).localCheckpoint(eager=False)
+    und = _undirected(edges)
     deg = und.groupBy(F.col("pa").alias("node")).agg(F.count(F.lit(1)).alias("deg"))
     cap = max_middle_degree
     if cap is None and wedge_budget is not None:
@@ -1534,22 +1561,14 @@ def graph_link_predict(
     budget-derived cap is a pure function of the degree histogram, so the
     SQL oracle recomputes it bit-for-bit.
     """
-    li = (
-        load_table(spark, sf_dir, "lineitem")
-        .select(F.col("l_orderkey").alias("ok"), F.col("l_partkey").alias("pk"))
-        .distinct()
-    )
     return _link_predict_pairs(
-        li, top_n=top_n, max_middle_degree=max_middle_degree, wedge_budget=wedge_budget
+        _order_parts(spark, sf_dir),
+        top_n=top_n, max_middle_degree=max_middle_degree, wedge_budget=wedge_budget,
     )
 
 
 GRAPH_LINK_PREDICT_SQL = f"""
-WITH op AS (SELECT DISTINCT l_orderkey, l_partkey FROM lineitem),
-edges AS (
-    SELECT DISTINCT a.l_partkey AS pa, b.l_partkey AS pb
-    FROM op a JOIN op b ON a.l_orderkey = b.l_orderkey AND a.l_partkey < b.l_partkey
-),
+WITH {_EDGES_SQL},
 und AS (
     SELECT pa AS v, pb AS nb FROM edges
     UNION ALL SELECT pb, pa FROM edges
@@ -1600,19 +1619,11 @@ def _lp_run(spark: SparkSession, sf_dir: str):
     directed edge list, final label table) after ``_LP_ROUNDS`` synchronous
     rounds — used by :func:`graph_label_prop` (community readout) and
     :func:`graph_modularity` (partition quality)."""
-    li = load_table(spark, sf_dir, "lineitem").select("l_orderkey", "l_partkey").distinct()
-    a = li.select(F.col("l_orderkey").alias("ok"), F.col("l_partkey").alias("part_a"))
-    b = li.select(F.col("l_orderkey").alias("ok"), F.col("l_partkey").alias("part_b"))
-    pairs = (
-        a.join(b, "ok").filter(F.col("part_a") < F.col("part_b")).select("part_a", "part_b").distinct()
-        # pairs feeds the edge list AND graph_modularity's internal-edge /
-        # edge-count branches — cut the lineage here so the lineitem
-        # self-join runs once, not once per consumer.
-        .localCheckpoint(eager=False)
-    )
-    edges = pairs.select(F.col("part_a").alias("src"), F.col("part_b").alias("dst")).unionByName(
-        pairs.select(F.col("part_b").alias("src"), F.col("part_a").alias("dst"))
-    ).localCheckpoint(eager=False)
+    # pairs feeds the edge list AND graph_modularity's internal-edge /
+    # edge-count branches — cut the lineage here so the lineitem self-join
+    # runs once, not once per consumer.
+    pairs = _copurchase_edges(_order_parts(spark, sf_dir)).localCheckpoint(eager=False)
+    edges = _undirected(pairs).toDF("src", "dst").localCheckpoint(eager=False)
     labels = edges.select(F.col("src").alias("node")).distinct().withColumn("lbl", F.col("node"))
     # Per-round argmax by (c DESC, lbl ASC) as max_by over a packed
     # DECIMAL(38,0) key (r14: was a row_number window — full shuffle+sort
@@ -1681,11 +1692,7 @@ def _lp_iter_sql(prev: str, out: str) -> str:
 
 
 GRAPH_LABEL_PROP_SQL = f"""
-WITH op AS (SELECT DISTINCT l_orderkey, l_partkey FROM lineitem),
-pairs AS (
-    SELECT DISTINCT a.l_partkey AS part_a, b.l_partkey AS part_b
-    FROM op a JOIN op b ON a.l_orderkey = b.l_orderkey AND a.l_partkey < b.l_partkey
-),
+WITH {_PAIRS_SQL},
 edges AS (
     SELECT part_a AS src, part_b AS dst FROM pairs
     UNION
@@ -1897,10 +1904,7 @@ def graph_degree_profile(spark: SparkSession, sf_dir: str) -> DataFrame:
     order (ln on identical doubles — the events_entropy convention).
     Degree-histogram volume is #nodes, trivially bounded.
     """
-    li = load_table(spark, sf_dir, "lineitem").select("l_orderkey", "l_partkey").distinct()
-    a = li.select(F.col("l_orderkey").alias("ok"), F.col("l_partkey").alias("pa"))
-    b = li.select(F.col("l_orderkey").alias("ok"), F.col("l_partkey").alias("pb"))
-    edges = a.join(b, "ok").filter(F.col("pa") < F.col("pb")).select("pa", "pb").distinct()
+    edges = _copurchase_edges(_order_parts(spark, sf_dir))
     deg = (
         edges.select(F.explode(F.array("pa", "pb")).alias("node"))
         .groupBy("node")
@@ -1913,16 +1917,7 @@ def graph_degree_profile(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.array_sort(F.collect_list("deg")).alias("ds"),
     )
 
-    p = F.size("ds")
-    med = F.when(
-        p % 2 == 1, F.element_at(F.col("ds"), ((p + 1) / 2).cast("int")).cast("double")
-    ).otherwise(
-        (F.element_at(F.col("ds"), (p / 2).cast("int")) + F.element_at(F.col("ds"), (p / 2).cast("int") + 1)).cast(
-            "double"
-        )
-        / 2.0
-    )
-    g = g.withColumn("median_deg", med)
+    g = g.withColumn("median_deg", sorted_median("ds"))
     tail = F.filter("ds", lambda d: d.cast("double") >= F.col("median_deg"))
     lnsum = F.aggregate(
         tail, F.lit(0.0), lambda acc, d: acc + F.log(d.cast("double") / F.col("median_deg"))
@@ -1941,12 +1936,8 @@ def graph_degree_profile(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-GRAPH_DEGREE_PROFILE_SQL = """
-WITH op AS (SELECT DISTINCT l_orderkey, l_partkey FROM lineitem),
-edges AS (
-    SELECT DISTINCT a.l_partkey AS pa, b.l_partkey AS pb
-    FROM op a JOIN op b ON a.l_orderkey = b.l_orderkey AND a.l_partkey < b.l_partkey
-),
+GRAPH_DEGREE_PROFILE_SQL = f"""
+WITH {_EDGES_SQL},
 deg AS (
     SELECT node, count(*) AS deg FROM (
         SELECT pa AS node FROM edges UNION ALL SELECT pb AS node FROM edges
@@ -1958,8 +1949,7 @@ g AS (
     FROM deg
 ),
 m AS (
-    SELECT *, CASE WHEN len(ds) % 2 = 1 THEN CAST(ds[(len(ds) + 1) // 2] AS DOUBLE)
-                   ELSE CAST(ds[len(ds) // 2] + ds[len(ds) // 2 + 1] AS DOUBLE) / 2.0 END AS median_deg
+    SELECT *, {sorted_median_sql("ds")} AS median_deg
     FROM g
 ),
 t AS (
@@ -2030,11 +2020,7 @@ def events_interarrival(spark: SparkSession, sf_dir: str) -> DataFrame:
         idx = F.ceil(F.size(arr) * q_num / q_den).cast("int")
         return F.element_at(arr, F.greatest(idx, F.lit(1)))
 
-    med = F.when(
-        F.col("m") % 2 == 1, F.element_at(srt, ((F.col("m") + 1) / 2).cast("int")).cast("double")
-    ).otherwise(
-        (F.element_at(srt, (F.col("m") / 2).cast("int")) + F.element_at(srt, (F.col("m") / 2).cast("int") + 1)).cast("double") / 2.0
-    )
+    med = sorted_median(srt, F.col("m"))
     # lag-1 memory: corr of (g1..g_{m-1}) vs (g2..g_m), pinned-order sums
     a1 = F.slice("gp", 1, F.col("m") - 1)
     a2 = F.slice("gp", 2, F.col("m") - 1)
@@ -2239,6 +2225,10 @@ FROM g
 
 _KCORE_ROUNDS = 8
 
+#: broadcast each round's survivor set when the graph has at most this
+#: many nodes (one long per node ⇒ ≲40 MB broadcast)
+_KCORE_BROADCAST_NODES = 5_000_000
+
 
 def graph_kcore(
     spark: SparkSession,
@@ -2252,9 +2242,8 @@ def graph_kcore(
     they carry (Seidman 1983) — the dense backbone behind community
     seeding, recommendation candidate pools, and graph-size reduction
     before the expensive operators (a wedge join over the core alone is
-    far smaller). k defaults to the exact interpolated MEDIAN of the
-    initial degree distribution, so the threshold adapts to scale instead
-    of trivializing (the TPC-H co-purchase graph is near-uniform: any
+    far smaller). k defaults to floor(0.7 × the mean initial degree),
+    so the threshold adapts to scale instead of trivializing (the TPC-H co-purchase graph is near-uniform: any
     fixed small k peels nothing).
 
     Each round is one degree aggregation + two semi-joins on the edge
@@ -2265,15 +2254,8 @@ def graph_kcore(
     localCheckpoint so the plan stays flat. The oracle replays the same R
     rounds as chained CTEs; counts and joins are exact integers.
     """
-    li = load_table(spark, sf_dir, "lineitem").select("l_orderkey", "l_partkey").distinct()
-    a = li.select(F.col("l_orderkey").alias("ok"), F.col("l_partkey").alias("pa"))
-    b = li.select(F.col("l_orderkey").alias("ok"), F.col("l_partkey").alias("pb"))
-    edges = (
-        a.join(b, "ok").filter(F.col("pa") < F.col("pb")).select("pa", "pb").distinct()
-        .localCheckpoint(eager=False)
-    )
-    und = edges.unionByName(edges.select(F.col("pb").alias("pa"), F.col("pa").alias("pb")))
-    und = und.select(F.col("pa").alias("v"), F.col("pb").alias("w"))
+    edges = _copurchase_edges(_order_parts(spark, sf_dir)).localCheckpoint(eager=False)
+    und = _undirected(edges).toDF("v", "w")
     deg0 = und.groupBy("v").agg(F.count(F.lit(1)).alias("deg0"))
     bc_keep = False
     if k is None:
@@ -2286,7 +2268,7 @@ def graph_kcore(
         # two per-round semi-joins need NO edge-list shuffle (the same
         # measured-size decision as the triangles orientation stats; a
         # blanket hint would be a local-only "win" that OOMs at scale).
-        bc_keep = float(row["n"]) <= _TRI_BROADCAST_EDGES
+        bc_keep = float(row["n"]) <= _KCORE_BROADCAST_NODES
     cur = und
     for _ in range(rounds):
         # NOTE (r14): pinning this survivor set with a per-round
@@ -2298,13 +2280,15 @@ def graph_kcore(
             .filter(F.col("d") >= F.lit(k))
             .select("v")
         )
-        keep_v = F.broadcast(keep) if bc_keep else keep
-        keep_w = keep.withColumnRenamed("v", "w")
         if bc_keep:
-            keep_w = F.broadcast(keep_w)
+            keep = F.broadcast(keep)
+        # both endpoints probe the SAME survivor frame through a join
+        # condition (no renamed copy), so the round plans one broadcast
+        # and the second semi-join reuses its exchange
         cur = (
-            cur.join(keep_v, "v", "left_semi")
-            .join(keep_w, "w", "left_semi")
+            cur.alias("e")
+            .join(keep.alias("kv"), F.col("e.v") == F.col("kv.v"), "left_semi")
+            .join(keep.alias("kw"), F.col("e.w") == F.col("kw.v"), "left_semi")
             .select("v", "w")
             .localCheckpoint(eager=False)
         )
@@ -2318,12 +2302,8 @@ def graph_kcore(
 
 
 def graph_kcore_sql(rounds: int = _KCORE_ROUNDS) -> str:
-    body = """
-WITH op AS (SELECT DISTINCT l_orderkey, l_partkey FROM lineitem),
-edges AS (
-    SELECT DISTINCT a.l_partkey AS pa, b.l_partkey AS pb
-    FROM op a JOIN op b ON a.l_orderkey = b.l_orderkey AND a.l_partkey < b.l_partkey
-),
+    body = f"""
+WITH {_EDGES_SQL},
 e0 AS MATERIALIZED (
     SELECT pa AS v, pb AS w FROM edges
     UNION ALL SELECT pb, pa FROM edges
@@ -2552,11 +2532,11 @@ def graph_modularity(spark: SparkSession, sf_dir: str) -> DataFrame:
         .groupBy("lbl")
         .agg(F.count(F.lit(1)).alias("community_size"), F.sum("deg").alias("degree_sum"))
     )
-    la = labels.select(F.col("node").alias("part_a"), F.col("lbl").alias("lbl_a"))
-    lb = labels.select(F.col("node").alias("part_b"), F.col("lbl").alias("lbl_b"))
+    la = labels.select(F.col("node").alias("pa"), F.col("lbl").alias("lbl_a"))
+    lb = labels.select(F.col("node").alias("pb"), F.col("lbl").alias("lbl_b"))
     internal = (
-        pairs.join(la, "part_a")
-        .join(lb, "part_b")
+        pairs.join(la, "pa")
+        .join(lb, "pb")
         .filter(F.col("lbl_a") == F.col("lbl_b"))
         .groupBy(F.col("lbl_a").alias("lbl"))
         .agg(F.count(F.lit(1)).alias("internal_edges"))
@@ -2611,11 +2591,7 @@ def graph_modularity(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 GRAPH_MODULARITY_SQL = f"""
-WITH op AS (SELECT DISTINCT l_orderkey, l_partkey FROM lineitem),
-pairs AS (
-    SELECT DISTINCT a.l_partkey AS part_a, b.l_partkey AS part_b
-    FROM op a JOIN op b ON a.l_orderkey = b.l_orderkey AND a.l_partkey < b.l_partkey
-),
+WITH {_PAIRS_SQL},
 edges AS (
     SELECT part_a AS src, part_b AS dst FROM pairs
     UNION
@@ -2675,7 +2651,7 @@ def graph_clustering(spark: SparkSession, sf_dir: str, *, top_n: int = 20, orien
     a hub can still have a sparse neighborhood; lcc normalizes by the
     possible pairs).
 
-    Shares graph_triangles' oriented-wedge core (:func:`_oriented_triangles`
+    Shares graph_triangles' oriented-wedge core (:func:`_node_triangles`
     — every triangle generated once at its lowest corner, two equi-joins,
     never cartesian) INCLUDING its ``orient="auto"`` degree-orientation
     flip (r13, VERDICT r12: this operator used to hardcode id orientation
@@ -2689,13 +2665,11 @@ def graph_clustering(spark: SparkSession, sf_dir: str, *, top_n: int = 20, orien
     division (a float average over nodes would be partial-order-sensitive
     across engines). Degrees left-join the triangle counts so
     triangle-free nodes keep lcc = 0."""
-    li = load_table(spark, sf_dir, "lineitem").select("l_orderkey", "l_partkey").distinct()
-    edges = _copurchase_edges(li)
-    und = edges.unionByName(edges.select(F.col("pb").alias("pa"), F.col("pa").alias("pb")))
+    edges = _copurchase_edges(_order_parts(spark, sf_dir)).localCheckpoint(eager=False)
     deg = (
-        und.groupBy(F.col("pa").alias("node")).agg(F.count(F.lit(1)).alias("degree"))
+        _undirected(edges).groupBy(F.col("pa").alias("node")).agg(F.count(F.lit(1)).alias("degree"))
         # ONE degrees pass serves the stats collect, the degree-orientation
-        # ranking inside _oriented_triangles AND the lcc join-back — cut
+        # ranking inside _node_triangles AND the lcc join-back — cut
         # the lineage so each use doesn't re-shuffle the edge list.
         .localCheckpoint(eager=False)
     )
@@ -2705,19 +2679,7 @@ def graph_clustering(spark: SparkSession, sf_dir: str, *, top_n: int = 20, orien
     stats = deg.agg(
         F.max("degree").alias("max_deg"), (F.sum("degree") / 2).cast("long").alias("m")
     ).collect()[0]
-    m = stats.m or 0
-    broadcast_edges = False
-    if orient == "auto":
-        orient = select_orientation(stats.max_deg or 0, m)
-        broadcast_edges = m <= _TRI_BROADCAST_EDGES
-    tri = _oriented_triangles(
-        edges, orient, broadcast_edges, m,
-        deg=deg.select("node", F.col("degree").alias("deg")),
-    )
-    tcounts = (
-        tri.select(F.explode(F.array("x", "y", "z")).alias("node"))
-        .groupBy("node").agg(F.count(F.lit(1)).alias("n_triangles"))
-    )
+    tcounts = _node_triangles(edges, orient, stats, deg=deg.select("node", F.col("degree").alias("deg")))
     nodes = (
         deg.join(tcounts, "node", "left")
         .withColumn("n_triangles", F.coalesce("n_triangles", F.lit(0)).cast("long"))
@@ -2752,12 +2714,8 @@ def graph_clustering(spark: SparkSession, sf_dir: str, *, top_n: int = 20, orien
     )
 
 
-GRAPH_CLUSTERING_SQL = """
-WITH op AS (SELECT DISTINCT l_orderkey, l_partkey FROM lineitem),
-edges AS (
-    SELECT DISTINCT a.l_partkey AS pa, b.l_partkey AS pb
-    FROM op a JOIN op b ON a.l_orderkey = b.l_orderkey AND a.l_partkey < b.l_partkey
-),
+GRAPH_CLUSTERING_SQL = f"""
+WITH {_EDGES_SQL},
 und AS (SELECT pa, pb FROM edges UNION ALL SELECT pb, pa FROM edges),
 deg AS (SELECT pa AS node, count(*) AS degree FROM und GROUP BY pa),
 tri AS (
@@ -3222,14 +3180,8 @@ def graph_assortativity(spark: SparkSession, sf_dir: str) -> DataFrame:
     sums exact; both directions included so x/y are symmetric and r is
     orientation-free). Two node-keyed joins of the KB-sized degree table,
     one map-side-combined rollup, one final double projection."""
-    li = load_table(spark, sf_dir, "lineitem").select("l_orderkey", "l_partkey").distinct()
-    a = li.select(F.col("l_orderkey").alias("ok"), F.col("l_partkey").alias("pa"))
-    b = li.select(F.col("l_orderkey").alias("ok"), F.col("l_partkey").alias("pb"))
-    edges = (
-        a.join(b, "ok").filter(F.col("pa") < F.col("pb")).select("pa", "pb").distinct()
-        .localCheckpoint(eager=False)  # feeds the degree agg AND the edge join
-    )
-    und = edges.unionByName(edges.select(F.col("pb").alias("pa"), F.col("pa").alias("pb")))
+    # the edge list feeds the degree agg AND the edge join
+    und = _undirected(_copurchase_edges(_order_parts(spark, sf_dir)).localCheckpoint(eager=False))
     deg = und.groupBy(F.col("pa").alias("node")).agg(F.count(F.lit(1)).alias("deg"))
     j = (
         und.join(F.broadcast(deg.select(F.col("node").alias("pa"), F.col("deg").alias("dx"))), "pa")
@@ -3262,11 +3214,7 @@ def graph_assortativity(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 GRAPH_ASSORTATIVITY_SQL = f"""
-WITH op AS (SELECT DISTINCT l_orderkey, l_partkey FROM lineitem),
-edges AS (
-    SELECT DISTINCT a.l_partkey AS pa, b.l_partkey AS pb
-    FROM op a JOIN op b ON a.l_orderkey = b.l_orderkey AND a.l_partkey < b.l_partkey
-),
+WITH {_EDGES_SQL},
 und AS (SELECT pa, pb FROM edges UNION ALL SELECT pb, pa FROM edges),
 deg AS (SELECT pa AS node, count(*) AS deg FROM und GROUP BY pa),
 j AS (

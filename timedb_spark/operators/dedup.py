@@ -11,6 +11,15 @@ Scale design: every candidate-pair generator is a *blocked* self-join
 O(n²) cross join. The verify step runs only on the candidate set. All
 hashing is md5-based column arithmetic: JVM codegen on Spark, bit-equal in
 the oracle.
+
+The shingle-set operators share their steps: :func:`_shingled` (the
+persisted per-doc shingle set), :func:`_overlap` (``(doc_a, doc_b, inter,
+na, nb)`` — intersection counts and set sizes over the blocked all-pairs
+self-join or over a candidate-pair frame), :func:`_jaccard_pairs` (the
+floor-scaled Jaccard ≥ τ filter), :func:`_signatures` (minhash) and
+:func:`_lsh_candidates` (the band join). The oracles share the matching
+fragments (``_BLOCKED_INTER_SQL``, :func:`_cand_inter_sql`,
+``_JACCARD_PAIRS_SQL``).
 """
 
 from __future__ import annotations
@@ -93,13 +102,12 @@ _JACCARD_TAU = 0.5
 _SHINGLE_N = 5
 
 def _jac_f6_sql(inter: str, sa: str, sb: str) -> str:
-    """Shared jaccard twin — the guarded floor-scale convention, generated
-    once per template. Takes the embedding template's intersection column
-    and size-CTE aliases EXPLICITLY (ADVICE r12): the three templates that
-    embed this (DEDUP_NGRAM_SQL, DEDUP_MINHASH_SQL, lsh_tuning's
-    true-pairs CTE) each pass their own names, so renaming an alias in one
-    template breaks at ITS call site in Python, not at DuckDB parse time
-    three templates away."""
+    """Shared jaccard twin — the guarded floor-scale convention. Takes the
+    embedding template's intersection column and size-CTE aliases
+    EXPLICITLY (ADVICE r12): the two templates that embed this
+    (``_JACCARD_PAIRS_SQL`` and lsh_tuning's true-pairs CTE) each pass
+    their own names, so renaming an alias in one breaks at ITS call site
+    in Python, not at DuckDB parse time."""
     return floor6_sql(f"CAST({inter} AS DOUBLE) / ({sa}.n_sh + {sb}.n_sh - {inter})")
 
 
@@ -124,35 +132,54 @@ def _shingled(corpus: DataFrame) -> DataFrame:
     )
 
 
+def _overlap(sh: DataFrame, cand: DataFrame | None = None) -> DataFrame:
+    """Shingle overlap (doc_a, doc_b, inter, na, nb) off the persisted
+    shingle frame: ``inter`` = |sh(a) ∩ sh(b)| from ONE groupBy over an
+    equi-join on the shingle key, ``na``/``nb`` the two set sizes.
+
+    Without ``cand`` every pair sharing a shingle is counted (the blocked
+    all-pairs self-join, doc_a < doc_b); with a (doc_a, doc_b) candidate
+    frame only those pairs are (the verify step after LSH banding).
+
+    Merge hints: the exploded-shingle frame's Catalyst size estimate is the
+    PRE-explode scan size, so without the hint a side gets STATICALLY
+    broadcast (AQE cannot demote it) — ~128 MB driver build at 10x sf0.1
+    (tools/scaleprobe.py r12), a driver OOM at 100 TB. Sort-merge makes no
+    memory assumption; explode-derived sides never broadcast."""
+    sizes = sh.select("doc_id", F.size("sh").alias("n_sh"))
+    ex = sh.select("doc_id", F.explode("sh").alias("s"))
+    if cand is None:
+        a, b = ex.alias("a"), ex.alias("b").hint("merge")
+        inter = (
+            a.join(b, (F.col("a.s") == F.col("b.s")) & (F.col("a.doc_id") < F.col("b.doc_id")))
+            .groupBy(F.col("a.doc_id").alias("doc_a"), F.col("b.doc_id").alias("doc_b"))
+            .agg(F.count(F.lit(1)).alias("inter"))
+        )
+    else:
+        inter = (
+            ex.alias("x")
+            .join(cand.hint("merge"), F.col("x.doc_id") == F.col("doc_a"))
+            .join(ex.alias("y").hint("merge"), (F.col("y.doc_id") == F.col("doc_b")) & (F.col("x.s") == F.col("y.s")))
+            .groupBy("doc_a", "doc_b")
+            .agg(F.count(F.lit(1)).alias("inter"))
+        )
+    sa = sizes.select(F.col("doc_id").alias("doc_a"), F.col("n_sh").alias("na"))
+    sb = sizes.select(F.col("doc_id").alias("doc_b"), F.col("n_sh").alias("nb"))
+    return inter.join(sa, "doc_a").join(sb, "doc_b")
+
+
+def _jaccard_pairs(ov: DataFrame) -> DataFrame:
+    """(doc_a, doc_b, jaccard) pairs of an :func:`_overlap` frame whose
+    floor-scaled Jaccard reaches τ."""
+    jac = F.col("inter").cast("double") / (F.col("na") + F.col("nb") - F.col("inter"))
+    return ov.select("doc_a", "doc_b", floor6(jac).alias("jaccard")).filter(F.col("jaccard") >= _JACCARD_TAU)
+
+
 def dedup_ngram_jaccard(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Exact Jaccard ≥ τ over word-5-gram shingle sets; candidate pairs are
     blocked on shared shingles (equi-join, shuffle on shingle key) so the
     pair space is bounded by co-occurrence, not n²."""
-    sh = _shingled(doc_corpus(spark, sf_dir))
-    sizes = sh.select("doc_id", F.size("sh").alias("n_sh"))
-    ex = sh.select("doc_id", F.explode("sh").alias("s"))
-    a = ex.alias("a")
-    # merge hint: the exploded-shingle frame's Catalyst size estimate is the
-    # PRE-explode scan size, so without the hint a side gets STATICALLY
-    # broadcast (AQE cannot demote it) — ~128 MB driver build at 10x sf0.1
-    # (tools/scaleprobe.py r12), a driver OOM at 100 TB. Sort-merge makes
-    # no memory assumption; "explode-derived sides never broadcast" is the
-    # rule across all shingle-blocked legs below.
-    b = ex.alias("b").hint("merge")
-    inter = (
-        a.join(b, (F.col("a.s") == F.col("b.s")) & (F.col("a.doc_id") < F.col("b.doc_id")))
-        .groupBy(F.col("a.doc_id").alias("doc_a"), F.col("b.doc_id").alias("doc_b"))
-        .agg(F.count(F.lit(1)).alias("inter"))
-    )
-    sa = sizes.select(F.col("doc_id").alias("doc_a"), F.col("n_sh").alias("na"))
-    sb = sizes.select(F.col("doc_id").alias("doc_b"), F.col("n_sh").alias("nb"))
-    jac = F.col("inter").cast("double") / (F.col("na") + F.col("nb") - F.col("inter"))
-    return (
-        inter.join(sa, "doc_a")
-        .join(sb, "doc_b")
-        .select("doc_a", "doc_b", floor6(jac).alias("jaccard"))
-        .filter(F.col("jaccard") >= _JACCARD_TAU)
-    )
+    return _jaccard_pairs(_overlap(_shingled(doc_corpus(spark, sf_dir))))
 
 
 _SHINGLED_SQL = rf"""
@@ -163,22 +190,44 @@ SELECT doc_id,
 FROM (SELECT doc_id, string_split_regex(trim(text), '\s+') AS w FROM corpus)
 """
 
-DEDUP_NGRAM_SQL = rf"""
-WITH corpus AS ({DOC_CORPUS_SQL}),
-shingled AS ({_SHINGLED_SQL}),
-sizes AS (SELECT doc_id, len(sh) AS n_sh FROM shingled),
-ex AS (SELECT doc_id, unnest(sh) AS s FROM shingled),
+#: oracle side of :func:`_overlap`: the set sizes, the exploded
+#: shingles, and ``inter`` over all blocked pairs or over a candidate CTE
+_SIZES_SQL = "sizes AS (SELECT doc_id, len(sh) AS n_sh FROM shingled)"
+_EX_SQL = "ex AS (SELECT doc_id, unnest(sh) AS s FROM shingled)"
+_BLOCKED_INTER_SQL = f"""{_SIZES_SQL},
+{_EX_SQL},
 inter AS (
     SELECT a.doc_id AS doc_a, b.doc_id AS doc_b, count(*) AS inter
     FROM ex a JOIN ex b ON a.s = b.s AND a.doc_id < b.doc_id
     GROUP BY a.doc_id, b.doc_id
-)
-SELECT doc_a, doc_b,
+)"""
+
+
+def _cand_inter_sql(cand: str) -> str:
+    return f"""{_EX_SQL},
+{_SIZES_SQL},
+inter AS (
+    SELECT c.doc_a, c.doc_b, count(*) AS inter
+    FROM {cand} c
+    JOIN ex x ON x.doc_id = c.doc_a
+    JOIN ex y ON y.doc_id = c.doc_b AND y.s = x.s
+    GROUP BY c.doc_a, c.doc_b
+)"""
+
+
+#: oracle side of :func:`_jaccard_pairs` over ``inter``
+_JACCARD_PAIRS_SQL = f"""SELECT doc_a, doc_b,
        {_jac_f6_sql('inter', 'sa', 'sb')} AS jaccard
 FROM inter
 JOIN sizes sa ON sa.doc_id = doc_a
 JOIN sizes sb ON sb.doc_id = doc_b
-WHERE {_jac_f6_sql('inter', 'sa', 'sb')} >= {_JACCARD_TAU}
+WHERE {_jac_f6_sql('inter', 'sa', 'sb')} >= {_JACCARD_TAU}"""
+
+DEDUP_NGRAM_SQL = rf"""
+WITH corpus AS ({DOC_CORPUS_SQL}),
+shingled AS ({_SHINGLED_SQL}),
+{_BLOCKED_INTER_SQL}
+{_JACCARD_PAIRS_SQL}
 """
 
 
@@ -201,8 +250,20 @@ def dedup_minhash(spark: SparkSession, sf_dir: str) -> DataFrame:
     shingle (materialized base-hash column) + k affine mixes — not k salted
     md5 passes."""
     sh = _shingled(doc_corpus(spark, sf_dir))
+    return _jaccard_pairs(_overlap(sh, _lsh_candidates(_signatures(sh), _MH_BANDS, _MH_ROWS)))
+
+
+def _signatures(sh: DataFrame) -> DataFrame:
+    """(doc_id, sh, sig): k=16 minhash signature per shingle set."""
     based = sh.select("doc_id", "sh", F.transform("sh", tt.base_hash).alias("hs"))
-    sig = based.select("doc_id", "sh", tt.minhash_signature(F.col("hs"), _MH_K).alias("sig"))
+    return based.select("doc_id", "sh", tt.minhash_signature(F.col("hs"), _MH_K).alias("sig"))
+
+
+def _lsh_candidates(sig: DataFrame, b: int, r: int) -> DataFrame:
+    """Distinct (doc_a, doc_b) pairs, doc_a < doc_b, whose signatures
+    collide on any of ``b`` bands of ``r`` rows: one equi-join on
+    (band_idx, band_key). Merge hint: the banded frame carries the
+    pre-explode size estimate (see :func:`_overlap`)."""
     bands = sig.select(
         "doc_id",
         F.explode(
@@ -213,50 +274,25 @@ def dedup_minhash(spark: SparkSession, sf_dir: str) -> DataFrame:
                         F.md5(
                             F.concat_ws(
                                 "|",
-                                F.transform(
-                                    F.slice(F.col("sig"), i * _MH_ROWS + 1, _MH_ROWS), lambda x: x.cast("string")
-                                ),
+                                F.transform(F.slice(F.col("sig"), i * r + 1, r), lambda x: x.cast("string")),
                             )
                         ).alias("band_key"),
                     )
-                    for i in range(_MH_BANDS)
+                    for i in range(b)
                 ]
             )
         ).alias("band"),
     ).select("doc_id", "band.band_idx", "band.band_key")
-    a = bands.alias("a")
-    # merge hints: see dedup_ngram_jaccard — the banded-signature and
-    # exploded-shingle frames carry pre-explode size estimates, so without
-    # them a side gets statically broadcast (driver OOM class at scale,
-    # found by tools/scaleprobe.py r12).
-    b = bands.alias("b").hint("merge")
-    cand = (
+    a, bb = bands.alias("a"), bands.alias("b").hint("merge")
+    return (
         a.join(
-            b,
+            bb,
             (F.col("a.band_idx") == F.col("b.band_idx"))
             & (F.col("a.band_key") == F.col("b.band_key"))
             & (F.col("a.doc_id") < F.col("b.doc_id")),
         )
         .select(F.col("a.doc_id").alias("doc_a"), F.col("b.doc_id").alias("doc_b"))
         .distinct()
-    )
-    sizes = sh.select("doc_id", F.size("sh").alias("n_sh"))
-    ex = sh.select("doc_id", F.explode("sh").alias("s"))
-    inter = (
-        ex.alias("x")
-        .join(cand.hint("merge"), F.col("x.doc_id") == F.col("doc_a"))
-        .join(ex.alias("y").hint("merge"), (F.col("y.doc_id") == F.col("doc_b")) & (F.col("x.s") == F.col("y.s")))
-        .groupBy("doc_a", "doc_b")
-        .agg(F.count(F.lit(1)).alias("inter"))
-    )
-    sa = sizes.select(F.col("doc_id").alias("doc_a"), F.col("n_sh").alias("na"))
-    sb = sizes.select(F.col("doc_id").alias("doc_b"), F.col("n_sh").alias("nb"))
-    jac = F.col("inter").cast("double") / (F.col("na") + F.col("nb") - F.col("inter"))
-    return (
-        inter.join(sa, "doc_a")
-        .join(sb, "doc_b")
-        .select("doc_a", "doc_b", floor6(jac).alias("jaccard"))
-        .filter(F.col("jaccard") >= _JACCARD_TAU)
     )
 
 
@@ -280,21 +316,8 @@ cand AS (
     FROM bands a JOIN bands b
       ON a.band_idx = b.band_idx AND a.band_key = b.band_key AND a.doc_id < b.doc_id
 ),
-ex AS (SELECT doc_id, unnest(sh) AS s FROM shingled),
-sizes AS (SELECT doc_id, len(sh) AS n_sh FROM shingled),
-inter AS (
-    SELECT c.doc_a, c.doc_b, count(*) AS inter
-    FROM cand c
-    JOIN ex x ON x.doc_id = c.doc_a
-    JOIN ex y ON y.doc_id = c.doc_b AND y.s = x.s
-    GROUP BY c.doc_a, c.doc_b
-)
-SELECT doc_a, doc_b,
-       {_jac_f6_sql('inter', 'sa', 'sb')} AS jaccard
-FROM inter
-JOIN sizes sa ON sa.doc_id = doc_a
-JOIN sizes sb ON sb.doc_id = doc_b
-WHERE {_jac_f6_sql('inter', 'sa', 'sb')} >= {_JACCARD_TAU}
+{_cand_inter_sql("cand")}
+{_JACCARD_PAIRS_SQL}
 """
 
 
@@ -791,21 +814,7 @@ def dedup_containment(spark: SparkSession, sf_dir: str) -> DataFrame:
     same intersection row (no second join). Exact integer counts; the one
     division is floor-scaled to 6 dp in both engines (the gate convention).
     """
-    sh = _shingled(doc_corpus(spark, sf_dir))
-    sizes = sh.select("doc_id", F.size("sh").alias("n_sh"))
-    ex = sh.select("doc_id", F.explode("sh").alias("s"))
-    a = ex.alias("a")
-    # merge hint: explode-derived sides never broadcast (see
-    # dedup_ngram_jaccard — the scaleprobe r12 driver-OOM class)
-    b = ex.alias("b").hint("merge")
-    inter = (
-        a.join(b, (F.col("a.s") == F.col("b.s")) & (F.col("a.doc_id") < F.col("b.doc_id")))
-        .groupBy(F.col("a.doc_id").alias("doc_a"), F.col("b.doc_id").alias("doc_b"))
-        .agg(F.count(F.lit(1)).alias("inter"))
-    )
-    sa = sizes.select(F.col("doc_id").alias("doc_a"), F.col("n_sh").alias("na"))
-    sb = sizes.select(F.col("doc_id").alias("doc_b"), F.col("n_sh").alias("nb"))
-    j = inter.join(sa, "doc_a").join(sb, "doc_b")
+    j = _overlap(_shingled(doc_corpus(spark, sf_dir)))
     # floor-scale, never round(x, 6) — the documented gate convention
     c_ab = F.floor(F.col("inter").cast("double") / F.col("na") * 1e6) / 1e6
     c_ba = F.floor(F.col("inter").cast("double") / F.col("nb") * 1e6) / 1e6
@@ -825,13 +834,7 @@ def dedup_containment(spark: SparkSession, sf_dir: str) -> DataFrame:
 DEDUP_CONTAINMENT_SQL = rf"""
 WITH corpus AS ({DOC_CORPUS_SQL}),
 shingled AS ({_SHINGLED_SQL}),
-sizes AS (SELECT doc_id, len(sh) AS n_sh FROM shingled),
-ex AS (SELECT doc_id, unnest(sh) AS s FROM shingled),
-inter AS (
-    SELECT a.doc_id AS doc_a, b.doc_id AS doc_b, count(*) AS inter
-    FROM ex a JOIN ex b ON a.s = b.s AND a.doc_id < b.doc_id
-    GROUP BY a.doc_id, b.doc_id
-),
+{_BLOCKED_INTER_SQL},
 j AS (
     SELECT doc_a, doc_b, inter, sa.n_sh AS na, sb.n_sh AS nb
     FROM inter
@@ -992,67 +995,13 @@ def dedup_lsh_tuning(spark: SparkSession, sf_dir: str) -> DataFrame:
     semi-join against it. Counts exact; two floor-scaled divisions.
     """
     sh = _shingled(doc_corpus(spark, sf_dir))
-    based = sh.select("doc_id", "sh", F.transform("sh", tt.base_hash).alias("hs"))
-    sig = based.select("doc_id", "sh", tt.minhash_signature(F.col("hs"), _MH_K).alias("sig"))
-    sig = sig.localCheckpoint(eager=False)
-
-    def _cand(b: int, r: int) -> DataFrame:
-        bands = sig.select(
-            "doc_id",
-            F.explode(
-                F.array(
-                    *[
-                        F.struct(
-                            F.lit(i).alias("band_idx"),
-                            F.md5(
-                                F.concat_ws(
-                                    "|",
-                                    F.transform(
-                                        F.slice(F.col("sig"), i * r + 1, r),
-                                        lambda x: x.cast("string"),
-                                    ),
-                                )
-                            ).alias("band_key"),
-                        )
-                        for i in range(b)
-                    ]
-                )
-            ).alias("band"),
-        ).select("doc_id", "band.band_idx", "band.band_key")
-        a, bb = bands.alias("a"), bands.alias("b").hint("merge")
-        return (
-            a.join(
-                bb,
-                (F.col("a.band_idx") == F.col("b.band_idx"))
-                & (F.col("a.band_key") == F.col("b.band_key"))
-                & (F.col("a.doc_id") < F.col("b.doc_id")),
-            )
-            .select(F.col("a.doc_id").alias("doc_a"), F.col("b.doc_id").alias("doc_b"))
-            .distinct()
-        )
-
+    sig = _signatures(sh).localCheckpoint(eager=False)
     # loosest split = superset candidates; verify exact Jaccard once
-    loosest = _cand(_MH_K, 1).localCheckpoint(eager=False)
-    sizes = sh.select("doc_id", F.size("sh").alias("n_sh"))
-    ex = sh.select("doc_id", F.explode("sh").alias("s"))
-    inter = (
-        ex.alias("x")
-        .join(loosest.hint("merge"), F.col("x.doc_id") == F.col("doc_a"))
-        .join(ex.alias("y").hint("merge"), (F.col("y.doc_id") == F.col("doc_b")) & (F.col("x.s") == F.col("y.s")))
-        .groupBy("doc_a", "doc_b")
-        .agg(F.count(F.lit(1)).alias("inter"))
-    )
-    jac = F.col("inter").cast("double") / (F.col("na") + F.col("nb") - F.col("inter"))
-    true_pairs = (
-        inter.join(sizes.select(F.col("doc_id").alias("doc_a"), F.col("n_sh").alias("na")), "doc_a")
-        .join(sizes.select(F.col("doc_id").alias("doc_b"), F.col("n_sh").alias("nb")), "doc_b")
-        .filter(floor6(jac) >= _JACCARD_TAU)
-        .select("doc_a", "doc_b")
-        .localCheckpoint(eager=False)
-    )
+    loosest = _lsh_candidates(sig, _MH_K, 1).localCheckpoint(eager=False)
+    true_pairs = _jaccard_pairs(_overlap(sh, loosest)).select("doc_a", "doc_b").localCheckpoint(eager=False)
     frames = []
     for b, r, s50 in _LSH_CONFIGS:
-        cand = _cand(b, r) if b != _MH_K else loosest
+        cand = _lsh_candidates(sig, b, r) if b != _MH_K else loosest
         verified = cand.join(true_pairs, ["doc_a", "doc_b"], "left_semi")
         row = (
             cand.agg(F.count(F.lit(1)).alias("n_candidates"))
@@ -1118,15 +1067,7 @@ WITH corpus AS ({DOC_CORPUS_SQL}),
 shingled AS ({_SHINGLED_SQL}),
 sig AS MATERIALIZED ({_SIG_SQL}),
 {",".join(_lsh_cand_sql(b, r, f"b{b}").lstrip() for b, r, _ in _LSH_CONFIGS)},
-ex AS (SELECT doc_id, unnest(sh) AS s FROM shingled),
-sizes AS (SELECT doc_id, len(sh) AS n_sh FROM shingled),
-inter AS (
-    SELECT c.doc_a, c.doc_b, count(*) AS inter
-    FROM cand_b16 c
-    JOIN ex x ON x.doc_id = c.doc_a
-    JOIN ex y ON y.doc_id = c.doc_b AND y.s = x.s
-    GROUP BY c.doc_a, c.doc_b
-),
+{_cand_inter_sql("cand_b16")},
 true_pairs AS MATERIALIZED (
     SELECT doc_a, doc_b FROM inter
     JOIN sizes sa ON sa.doc_id = doc_a
