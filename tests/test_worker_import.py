@@ -7,9 +7,12 @@ silently relied on the driver's cwd being the repo root (workers inherit
 cwd on sys.path in local mode) — a driver-session run from any other
 directory died with ``ModuleNotFoundError: timedb_spark`` inside the task.
 This test runs a Pandas-UDF-backed query from a foreign cwd in a bare
-subprocess session to pin the addPyFile shipping path.
+subprocess session to pin the addPyFile shipping path. The v2 state API
+adds a driver-side runner that sees no addPyFile include; the second test
+drains a ``stream_latest_state_v2`` query from a foreign cwd to pin it.
 """
 
+import os
 import subprocess
 import sys
 import textwrap
@@ -50,3 +53,47 @@ def test_worker_import_is_cwd_independent(tmp_path):
         timeout=300,
     )
     assert "WORKER_IMPORT_OK" in r.stdout, (r.stdout[-1000:], r.stderr[-3000:])
+
+
+def test_v2_driver_runner_import_is_cwd_independent(tmp_path):
+    script = textwrap.dedent(
+        """
+        import sys
+        sys.path.insert(0, sys.argv[1])  # the checkout under test
+        from pyspark.sql import functions as F
+        from timedb_spark.session import get_spark
+        from timedb_spark.streaming import run_available_now
+        from timedb_spark.streaming.state_v2 import stream_latest_state_v2
+
+        spark = get_spark("v2-cwd-independence", extra_conf={
+            "spark.sql.shuffle.partitions": "2",
+            "spark.sql.streaming.stateStore.providerClass":
+                "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider",
+        })
+        rows = [(1, "2024-01-01 00:00", "2024-01-01 00:00", 1.0),
+                (1, "2024-01-01 01:00", "2024-01-02 00:00", 2.0),
+                (2, "2024-01-01 00:00", "2024-01-01 00:00", 3.0)]
+        sv = spark.createDataFrame(rows, "series_id long, vt string, kt string, value double").select(
+            "series_id", F.to_timestamp("vt").alias("valid_time"),
+            F.to_timestamp("kt").alias("knowledge_time"),
+            F.to_timestamp("kt").alias("change_time"), "value")
+        sv.write.parquet(sys.argv[2])
+        stream = spark.readStream.schema(sv.schema).parquet(sys.argv[2])
+        got = sorted((r.series_id, r.value) for r in
+                     run_available_now(stream_latest_state_v2(stream), "update").collect())
+        assert got == [(1, 2.0), (2, 3.0)], got
+        spark.stop()
+        print("V2_DRIVER_IMPORT_OK")
+        """
+    )
+    # a PYTHONPATH naming the checkout would hide the bug this pins
+    env = {k: v for k, v in os.environ.items() if k != "PYTHONPATH"}
+    r = subprocess.run(
+        [sys.executable, "-c", script, ROOT, str(tmp_path / "sv")],
+        cwd=str(tmp_path),
+        env=env,
+        capture_output=True,
+        text=True,
+        timeout=300,
+    )
+    assert "V2_DRIVER_IMPORT_OK" in r.stdout, (r.stdout[-1000:], r.stderr[-3000:])

@@ -17,11 +17,8 @@ Two actions, both no-ops when not needed:
 1. Append ``TIMEDB_PROTOBUF_DIR`` to ``sys.path`` (APPEND, not prepend: a
    real site-packages protobuf always wins).
 2. Make the protobuf gencode/runtime version check lenient WITHIN a major
-   version: PySpark's generated ``StateMessage_pb2`` is built by a protoc
-   one minor ahead of the vendorable runtime (e.g. gencode 6.33 vs runtime
-   6.32) and ``ValidateProtobufRuntimeVersion`` rejects that formally even
-   though the generated code only uses the stable builder API. Cross-MAJOR
-   mismatches still raise.
+   version, for PySpark's own pb2 modules only (``timedb_protobuf_leniency``
+   beside this file; the driver loads the same module).
 """
 
 import os
@@ -32,26 +29,10 @@ if _d and os.path.isdir(os.path.join(_d, "google", "protobuf")) and _d not in sy
     sys.path.append(_d)
 
 try:
-    from google.protobuf import runtime_version as _rv
+    from timedb_protobuf_leniency import patch_validator
 
-    _orig_validate = _rv.ValidateProtobufRuntimeVersion
-
-    # Leniency is SCOPED to PySpark-generated pb2 modules via the proto-file
-    # location argument; every other protobuf user in the process keeps the
-    # strict upstream check (keep in sync with _proto_compat.
-    # LENIENT_PROTO_LOCATIONS — this file runs standalone and cannot import
-    # the package).
-    _LENIENT_LOCATIONS = ("org/apache/spark/", "spark/connect/")
-
-    def _lenient_validate(domain, major, minor, patch, suffix, location):
-        try:
-            _orig_validate(domain, major, minor, patch, suffix, location)
-        except _rv.VersionError:
-            if major != _rv.MAJOR or not str(location).startswith(_LENIENT_LOCATIONS):
-                raise
-
-    _rv.ValidateProtobufRuntimeVersion = _lenient_validate
-except Exception:  # pragma: no cover - no protobuf at all; probe reports it
+    patch_validator()
+except Exception:  # pragma: no cover - a broken runtime must not kill start-up
     pass
 
 # Chain-load the sitecustomize this shim shadows, if any: Python imports

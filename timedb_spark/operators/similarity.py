@@ -1105,8 +1105,7 @@ def ann_mmr(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     def _step(st, _e):
         n_sel = (F.size(st) / 2).cast("int")
-        sel = F.transform(F.sequence(F.lit(1), n_sel), lambda r: F.element_at(st, 2 * r).cast("int")) \
-            if True else None
+        sel = F.transform(F.sequence(F.lit(1), n_sel), lambda r: F.element_at(st, 2 * r).cast("int"))
         # guard: sequence(1, 0) would descend — empty state means no selected
         sel = F.when(n_sel > 0, sel).otherwise(F.array().cast("array<int>"))
 

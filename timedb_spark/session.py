@@ -73,6 +73,11 @@ def ensure_package_shipped(spark: SparkSession) -> None:
     worker's ``sys.path`` — the Spark-idiomatic deploy path for driver-side
     Python dependencies (same mechanism as ``spark-submit --py-files``).
 
+    The driver-side transformWithState runner (the fresh Python process that
+    plans each v2 stream's first batch) reads no ``addPyFile`` include; it
+    takes ``PYTHONPATH`` from the environment every Python function carries
+    (``sc.environment``), so the directory holding the package goes there.
+
     Once per SparkContext; a no-op when already shipped.
     """
     sc = spark.sparkContext
@@ -90,6 +95,8 @@ def ensure_package_shipped(spark: SparkSession) -> None:
                     rel = os.path.join("timedb_spark", os.path.relpath(full, pkg_dir))
                     zf.write(full, rel)
     sc.addPyFile(zpath)
+    prev = sc.environment.get("PYTHONPATH")
+    sc.environment["PYTHONPATH"] = os.path.dirname(pkg_dir) + (os.pathsep + prev if prev else "")
     _SHIPPED_APPS.add(app)
 
 

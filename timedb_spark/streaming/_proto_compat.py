@@ -11,7 +11,7 @@ version, one minor behind). ``ensure_protobuf()``:
 2. Otherwise scans ``TIMEDB_PROTOBUF_DIR`` (user override) then a short
    list of known public-SDK locations for a ``google/protobuf`` tree,
    appends the first importable one to ``sys.path``, applies the lenient
-   same-major version check (see ``_protoshim/sitecustomize.py``), and
+   same-major version check (``_protoshim/timedb_protobuf_leniency.py``), and
    exports ``TIMEDB_PROTOBUF_DIR`` + prepends the shim directory to
    ``PYTHONPATH`` so Python workers forked by a LATER-started JVM pick the
    runtime up via ``sitecustomize`` (the one import hook that runs during
@@ -26,7 +26,7 @@ worker environments are frozen when the JVM launches.
 
 from __future__ import annotations
 
-import glob
+import importlib.util
 import os
 import sys
 
@@ -39,40 +39,19 @@ _CANDIDATE_DIRS = [
 
 _SHIM_DIR = os.path.join(os.path.dirname(os.path.dirname(os.path.abspath(__file__))), "_protoshim")
 
-#: proto-file location prefixes of PySpark-generated pb2 modules — the ONLY
-#: gencode the lenient version check applies to. Any other protobuf user in
-#: the process keeps the strict upstream validation (keep in sync with
-#: _protoshim/sitecustomize.py, which cannot import this module).
-LENIENT_PROTO_LOCATIONS = ("org/apache/spark/", "spark/connect/")
-
 _probed: str | None = None
 
 
 def _patch_validator() -> None:
-    """Same-major leniency for gencode newer than runtime (minor skew),
-    SCOPED to PySpark's own pb2 modules via the proto-file ``location``
-    argument (e.g. ``org/apache/spark/.../StateMessage.proto``) — every
-    other protobuf consumer in the process still gets the strict check.
-
-    Guarded: runtime_version only exists from protobuf 5.27 — an older
-    vendored runtime simply has nothing to patch (and will fail the pb2
-    probe with its own precise error, which state_v2 records); it must not
-    crash ``import timedb_spark``."""
-    try:
-        from google.protobuf import runtime_version as _rv
-    except ImportError:
-        return
-
-    _orig = _rv.ValidateProtobufRuntimeVersion
-
-    def _lenient(domain, major, minor, patch, suffix, location):
-        try:
-            _orig(domain, major, minor, patch, suffix, location)
-        except _rv.VersionError:
-            if major != _rv.MAJOR or not str(location).startswith(LENIENT_PROTO_LOCATIONS):
-                raise
-
-    _rv.ValidateProtobufRuntimeVersion = _lenient
+    """Apply the same-major leniency, scoped to PySpark's own pb2 modules,
+    in this process: the shim directory's ``timedb_protobuf_leniency`` (the
+    module workers import from ``sitecustomize``), loaded by path."""
+    name = "timedb_protobuf_leniency"
+    if name not in sys.modules:
+        spec = importlib.util.spec_from_file_location(name, os.path.join(_SHIM_DIR, name + ".py"))
+        sys.modules[name] = importlib.util.module_from_spec(spec)
+        spec.loader.exec_module(sys.modules[name])
+    sys.modules[name].patch_validator()
 
 
 def ensure_protobuf() -> str:

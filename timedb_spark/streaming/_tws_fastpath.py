@@ -1,46 +1,50 @@
-"""Hand-rolled wire fast path for the v2 state API's hot RPCs (guide §4:
-shrink the Python boundary's per-call constant).
+"""Fast paths for the v2 state API's Python boundary, each cutting a
+per-call or per-key constant. Three drop-ins for stock pyspark pieces:
 
-``transformWithStateInPandas`` pays one protobuf round-trip to the JVM
-state server per state access per grouping key, plus one implicit-key
-set/remove pair per key. With only a pure-Python protobuf runtime
-available (no compiled ``_message``), *building* each request costs more
-than the socket round-trip itself — measured r14 on this host:
+- **wire codec** — ``transformWithStateInPandas`` pays one protobuf
+  round-trip to the JVM state server per state access per grouping key,
+  plus one implicit-key set/remove pair per key. With only a pure-Python
+  protobuf runtime, *building* each request costs more than the socket
+  round-trip itself (measured r14: ValueStateCall get ~123 µs, update
+  ~136 µs, SetImplicitKey ~57 µs, StateResponse parse ~8 µs). The hot
+  messages are tiny and fixed-shape, so :class:`_Codec` writes them as
+  wire bytes (field numbers read from the generated descriptors) and
+  parses ``StateResponse`` with a short field walk: the same bytes, ~10×
+  less Python time. Applied from the processors' ``init()`` through
+  :func:`wrap_value_state`, :func:`wrap_map_state` and
+  :func:`patch_implicit_key`;
+- **input chunker** — ``load_stream`` without per-row Python;
+- **output coalescer** — ``dump_stream`` with ~256× fewer Arrow batches.
+  The last two are installed process-wide by :func:`patch_serializers`.
 
-====================================  ==========
-message-object build + serialize       ~cost/call
-====================================  ==========
-ValueStateCall get                      ~123 µs
-ValueStateCall update                   ~136 µs
-SetImplicitKey                           ~57 µs
-StateResponse parse                       ~8 µs
-====================================  ==========
-
-The hot-path messages are tiny and fixed-shape, so this module encodes
-them directly as wire bytes (plain varint framing) and parses
-``StateResponse`` with a 30-line field walk. Field numbers are read from
-the generated descriptors — nothing is hard-coded — and every encoder is
-**byte-verified against the pb2 serializer for representative payloads at
-wrap time**; any mismatch (a future pyspark/proto change) silently leaves
-the stock client in place. Results cannot change: the bytes on the wire
-are identical by construction, only the Python time to produce them
-drops (~10×).
-
-Two integration points, both applied from the processors' ``init()``
-(i.e. inside the Spark Python worker, after pyspark is fully imported):
-
-- :func:`wrap_value_state` — returns a drop-in ``get``/``update``/
-  ``clear``/``exists`` handle for a ``ValueState``;
-- :func:`patch_implicit_key` — rebinds the *instance* methods
-  ``set_implicit_key`` / ``remove_implicit_key`` of one
-  ``StatefulProcessorApiClient`` (called by the pyspark runner once per
-  key, for every state-v2 operator).
+One engagement rule covers all three: they engage only when the installed
+pyspark, pandas and pyarrow versions equal :data:`TESTED_VERSIONS`, the
+versions ``tests/test_tws_fastpath.py`` passed on (it compares each piece
+case by case with the stock pb2 serializer and the stock pyspark
+serializers); the codec also needs the protobuf runtime version to match.
+On any other versions stock pyspark stays in place: correct, only slower.
 """
 
 from __future__ import annotations
 
+import functools
+import importlib
 import struct
 from typing import Any, Optional, Tuple
+
+#: The versions the equivalence tests in tests/test_tws_fastpath.py passed
+#: on. To move to a new version: run those tests on it, then bump the entry
+#: here (test_tested_versions_are_installed fails until then).
+TESTED_VERSIONS = {
+    "pyspark": "4.1.2",
+    "pandas": "2.2.2",
+    "pyarrow": "16.1.0",
+    "google.protobuf": "6.32.0",
+}
+
+
+def _tested(*modules: str) -> bool:
+    return all(importlib.import_module(m).__version__ == TESTED_VERSIONS[m] for m in modules)
 
 
 def _varint(n: int) -> bytes:
@@ -68,7 +72,7 @@ def _bytes_field(field_no: int, payload: bytes) -> bytes:
 
 
 class _Codec:
-    """Field numbers + verified encoders for one api-client's hot calls."""
+    """Field numbers + encoders for one api-client's hot calls."""
 
     def __init__(self) -> None:
         import pyspark.sql.streaming.proto.StateMessage_pb2 as SM
@@ -180,99 +184,12 @@ class _Codec:
                 return msg.statusCode, msg.errorMessage, msg.value
         return status, err, value
 
-    # ---- self-verification --------------------------------------------
-    def verify(self) -> bool:
-        """Byte-compare every encoder against pb2 and round-trip the
-        parser on representative payloads. False ⇒ caller must keep the
-        stock client."""
-        SM = self.SM
-        try:
-            for name in ("latest", "cusum", "open_session", "x" * 40):
-                ref = SM.StateRequest(
-                    stateVariableRequest=SM.StateVariableRequest(
-                        valueStateCall=SM.ValueStateCall(stateName=name, get=SM.Get())
-                    )
-                ).SerializeToString()
-                if self.enc_value_get(name) != ref:
-                    return False
-                ref = SM.StateRequest(
-                    stateVariableRequest=SM.StateVariableRequest(
-                        valueStateCall=SM.ValueStateCall(stateName=name, clear=SM.Clear())
-                    )
-                ).SerializeToString()
-                if self.enc_value_clear(name) != ref:
-                    return False
-            for payload in (b"", b"a", b"x" * 40, b"y" * 300, b"z" * 20000):
-                ref = SM.StateRequest(
-                    stateVariableRequest=SM.StateVariableRequest(
-                        valueStateCall=SM.ValueStateCall(
-                            stateName="latest",
-                            valueStateUpdate=SM.ValueStateUpdate(value=payload),
-                        )
-                    )
-                ).SerializeToString()
-                if self.enc_value_update("latest", payload) != ref:
-                    return False
-                ref = SM.StateRequest(
-                    implicitGroupingKeyRequest=SM.ImplicitGroupingKeyRequest(
-                        setImplicitKey=SM.SetImplicitKey(key=payload)
-                    )
-                ).SerializeToString()
-                if self.enc_set_key(payload) != ref:
-                    return False
-            ref = SM.StateRequest(
-                implicitGroupingKeyRequest=SM.ImplicitGroupingKeyRequest(
-                    removeImplicitKey=SM.RemoveImplicitKey()
-                )
-            ).SerializeToString()
-            if self.enc_remove_key() != ref:
-                return False
-            for key in (b"", b"k", b"k" * 200):
-                ref = SM.StateRequest(
-                    stateVariableRequest=SM.StateVariableRequest(
-                        mapStateCall=SM.MapStateCall(
-                            stateName="counts", getValue=SM.GetValue(userKey=key)
-                        )
-                    )
-                ).SerializeToString()
-                if self.enc_map_get("counts", key) != ref:
-                    return False
-                for value in (b"", b"v" * 40, b"v" * 300):
-                    ref = SM.StateRequest(
-                        stateVariableRequest=SM.StateVariableRequest(
-                            mapStateCall=SM.MapStateCall(
-                                stateName="counts",
-                                updateValue=SM.UpdateValue(userKey=key, value=value),
-                            )
-                        )
-                    ).SerializeToString()
-                    if self.enc_map_update("counts", key, value) != ref:
-                        return False
-            for status, err, value in ((0, "", b""), (2, "", b""), (1, "boom", b"\x01\x02"), (0, "", b"v" * 300)):
-                resp = SM.StateResponse(
-                    statusCode=status, errorMessage=err, value=value
-                ).SerializeToString()
-                if self.parse_response(resp) != (status, err, value):
-                    return False
-            return True
-        except Exception:
-            return False
 
-
-_codec: Optional[_Codec] = None
-_codec_ok: Optional[bool] = None
-
-
+@functools.cache
 def _get_codec() -> Optional[_Codec]:
-    global _codec, _codec_ok
-    if _codec_ok is None:
-        try:
-            c = _Codec()
-            _codec_ok = c.verify()
-            _codec = c if _codec_ok else None
-        except Exception:
-            _codec_ok, _codec = False, None
-    return _codec
+    """The wire codec on the :data:`TESTED_VERSIONS` (protobuf included);
+    None, i.e. the stock client, on any other."""
+    return _Codec() if _tested(*TESTED_VERSIONS) else None
 
 
 def _roundtrip(api: Any, msg: bytes, codec: _Codec) -> Tuple[int, str, bytes]:
@@ -470,8 +387,8 @@ class FastMapState:
 
 
 def wrap_map_state(map_state: Any) -> Any:
-    """Return a fast handle for a stock ``MapState`` when the byte-level
-    self-check passes; the stock object itself otherwise."""
+    """Return a fast handle for a stock ``MapState`` on the tested
+    versions; the stock object itself otherwise."""
     codec = _get_codec()
     if codec is None:
         return map_state
@@ -486,8 +403,8 @@ def wrap_map_state(map_state: Any) -> Any:
 
 
 def wrap_value_state(value_state: Any) -> Any:
-    """Return a fast handle for a stock ``ValueState`` when the byte-level
-    self-check passes; the stock object itself otherwise."""
+    """Return a fast handle for a stock ``ValueState`` on the tested
+    versions; the stock object itself otherwise."""
     codec = _get_codec()
     if codec is None:
         return value_state
@@ -516,8 +433,7 @@ def wrap_value_state(value_state: Any) -> Any:
 # detection over the key columns plus positional ``iloc`` row-slices of the
 # batch frame — no per-row Python work at all.
 #
-# Equivalence contract (verified at patch time, see _verify_input_fastpath,
-# and pinned by tests/test_tws_fastpath.py):
+# Equivalence contract (tests/test_tws_fastpath.py):
 #   - identical (key, chunk) sequence, including CHUNK BOUNDARIES: the
 #     stock per-append emission rule (arrow_max_records_per_batch and the
 #     average-row-size byte budget, whose average updates at batch starts
@@ -532,9 +448,6 @@ def wrap_value_state(value_state: Any) -> Any:
 #     RangeIndex;
 #   - identical key tuples (``Series.iat`` yields the same scalar types
 #     itertuples does).
-# Any verification failure or unexpected shape leaves the stock serializer
-# untouched (the wire-codec posture). TIMEDB_SPARK_NO_TWS_INPUT_FASTPATH=1
-# disables the patch for A/B measurement.
 # ---------------------------------------------------------------------------
 
 _UNLIMITED_BYTES = 2**31 - 1
@@ -680,141 +593,6 @@ def _fast_load_stream(self: Any, stream: Any) -> Any:
     yield (TransformWithStateInPandasFuncMode.COMPLETE, None, None)
 
 
-def _drain_modes(load_stream: Any, ser: Any, ipc_bytes: bytes) -> list:
-    """Materialize a load_stream generator fully: [(mode, key, [chunks])]."""
-    import io
-
-    out = []
-    for mode, key, group in load_stream(ser, io.BytesIO(ipc_bytes)):
-        chunks = None
-        if group is not None:
-            chunks = [pdf for _, pdf in group]
-        out.append((mode, key, chunks))
-    return out
-
-
-def _verify_input_fastpath(stock_load_stream: Any, serializer_cls: Any) -> bool:
-    """Replay representative streams through the stock and fast
-    load_stream implementations and require IDENTICAL output: same modes,
-    same keys (values and scalar types), same chunk boundaries, and
-    frame-equal chunks (values, dtypes, columns, index). False ⇒ caller
-    must leave the stock serializer in place."""
-    import io
-
-    import numpy as np
-    import pandas as pd
-    import pyarrow as pa
-
-    def ipc(schema: Any, batches: list) -> bytes:
-        buf = io.BytesIO()
-        with pa.ipc.new_stream(buf, schema) as w:
-            for b in batches:
-                w.write_batch(b)
-        return buf.getvalue()
-
-    def mk_ser(max_records: int = 10_000, max_bytes: int = _UNLIMITED_BYTES) -> Any:
-        s = serializer_cls("UTC", False, True, max_records, max_bytes, False)
-        s.key_offsets = None
-        return s
-
-    try:
-        cases = []
-        # 1. int64 key, runs of mixed sizes, a key straddling the batch
-        #    boundary, tight record chunking (max_records=3)
-        sch = pa.schema([("k", pa.int64()), ("v", pa.float64())])
-        b1 = pa.record_batch(
-            [pa.array([1, 2, 2, 2, 2, 3, 3]), pa.array([0.5, 1.0, 1.5, 2.0, 2.5, 3.0, 3.5])],
-            schema=sch,
-        )
-        b2 = pa.record_batch(
-            [pa.array([3, 3, 3, 3, 4]), pa.array([4.0, 4.5, 5.0, 5.5, 6.0])], schema=sch
-        )
-        cases.append((ipc(sch, [b1, b2]), [0], 3, _UNLIMITED_BYTES))
-        # 2. two-column key (int64 + timestamp), string payload, no chunking
-        sch2 = pa.schema(
-            [("sid", pa.int64()), ("vt", pa.timestamp("us")), ("txt", pa.string())]
-        )
-        ts = [1_700_000_000_000_000 + i * 3_600_000_000 for i in (0, 0, 1, 1, 2)]
-        b = pa.record_batch(
-            [
-                pa.array([7, 7, 7, 8, 8]),
-                pa.array(ts, type=pa.timestamp("us")),
-                pa.array(["a", "b", "c", "d", "e"]),
-            ],
-            schema=sch2,
-        )
-        cases.append((ipc(sch2, [b]), [0, 1], 10_000, _UNLIMITED_BYTES))
-        # 3. byte-budget chunking: two batches with different row widths so
-        #    the cumulative average (and thus tau) changes mid-key
-        sch3 = pa.schema([("k", pa.int64()), ("s", pa.string())])
-        b1 = pa.record_batch([pa.array([1] * 6), pa.array(["x" * 40] * 6)], schema=sch3)
-        b2 = pa.record_batch([pa.array([1] * 5 + [2]), pa.array(["y"] * 6)], schema=sch3)
-        cases.append((ipc(sch3, [b1, b2]), [0], 10_000, 200))
-        # 4. nulls: int column nullable in one batch only (dtype promotion
-        #    on the straddling concat), NaT timestamp key rows
-        sch4 = pa.schema([("k", pa.timestamp("us")), ("x", pa.int64())])
-        b1 = pa.record_batch(
-            [pa.array([ts[0], ts[0], None], type=pa.timestamp("us")), pa.array([1, None, 3])],
-            schema=sch4,
-        )
-        b2 = pa.record_batch(
-            [pa.array([ts[2]] * 2, type=pa.timestamp("us")), pa.array([4, 5])], schema=sch4
-        )
-        cases.append((ipc(sch4, [b1, b2]), [0], 10_000, _UNLIMITED_BYTES))
-        # 5. renamed columns: keyword / leading underscore / duplicate
-        sch5 = pa.schema(
-            [("k", pa.int64()), ("class", pa.int64()), ("_v", pa.float64()), ("k", pa.int64())]
-        )
-        b = pa.record_batch(
-            [pa.array([1, 1, 2]), pa.array([9, 8, 7]), pa.array([0.1, 0.2, 0.3]), pa.array([5, 6, 7])],
-            schema=sch5,
-        )
-        cases.append((ipc(sch5, [b]), [0], 2, _UNLIMITED_BYTES))
-        # 6. empty batch mid-stream + single-row tail batch
-        sch6 = pa.schema([("k", pa.int64()), ("v", pa.float64())])
-        b1 = pa.record_batch([pa.array([1, 2]), pa.array([1.0, 2.0])], schema=sch6)
-        b_empty = pa.record_batch(
-            [pa.array([], type=pa.int64()), pa.array([], type=pa.float64())], schema=sch6
-        )
-        b3 = pa.record_batch([pa.array([2]), pa.array([3.0])], schema=sch6)
-        cases.append((ipc(sch6, [b1, b_empty, b3]), [0], 10_000, _UNLIMITED_BYTES))
-
-        for ipc_bytes, offsets, max_records, max_bytes in cases:
-            s_stock, s_fast = mk_ser(max_records, max_bytes), mk_ser(max_records, max_bytes)
-            s_stock.key_offsets = offsets
-            s_fast.key_offsets = offsets
-            ref = _drain_modes(stock_load_stream, s_stock, ipc_bytes)
-            got = _drain_modes(_fast_load_stream, s_fast, ipc_bytes)
-            if len(ref) != len(got):
-                return False
-            for (m1, k1, c1), (m2, k2, c2) in zip(ref, got):
-                if m1 != m2 or k1 != k2:
-                    return False
-                if k1 is not None and tuple(map(type, k1)) != tuple(map(type, k2)):
-                    return False
-                if (c1 is None) != (c2 is None):
-                    return False
-                if c1 is None:
-                    continue
-                if len(c1) != len(c2):
-                    return False
-                for p1, p2 in zip(c1, c2):
-                    pd.testing.assert_frame_equal(p1, p2, check_exact=True)
-            # the byte accounting state must evolve identically too
-            if (
-                s_stock.total_bytes != s_fast.total_bytes
-                or s_stock.total_rows != s_fast.total_rows
-                or s_stock.average_arrow_row_size != s_fast.average_arrow_row_size
-            ):
-                return False
-        # run detection must split numpy NaN/NaT exactly like tuple
-        # comparison does (never merge): covered by case 4's NaT rows
-        _ = np
-        return True
-    except Exception:
-        return False
-
-
 # ---------------------------------------------------------------------------
 # Output-boundary fast path: batch coalescing for
 # TransformWithStateInPandasSerializer.dump_stream. The stock path runs one
@@ -828,8 +606,7 @@ def _verify_input_fastpath(stock_load_stream: Any, serializer_cls: Any) -> bool:
 # batches. Unlike the wire codec this is NOT byte-identical — batch
 # framing is the thing being amortized — so the equivalence contract is
 # row-level: the decoded (schema, row sequence) of the produced IPC stream
-# is asserted identical to stock at patch time (and in the pytest suite),
-# and any failure leaves stock pyspark in place.
+# is identical to stock (tests/test_tws_fastpath.py).
 #
 # The dtype gate is load-bearing, not cosmetic: concatenating an int64
 # frame into a float64 run would promote through float64 and can round
@@ -895,174 +672,30 @@ def _fast_dump_stream(self: Any, iterator: Any, stream: Any) -> Any:
     return ArrowStreamPandasUDFSerializer.dump_stream(self, coalesced(), stream)
 
 
-def _decode_arrow_stream(raw: bytes) -> Any:
-    """(schema, rows-frame) of a worker output stream; None for empty."""
-    import io as _io
-
-    import pyarrow as pa
-
-    if not raw:
-        return None
-    # strip the out-of-band START_ARROW_STREAM marker ``dump_stream``
-    # writes before the first batch
-    body = raw[4:]
-    rd = pa.ipc.open_stream(_io.BytesIO(body))
-    batches = list(rd)
-    tbl = pa.Table.from_batches(batches, schema=rd.schema)
-    return (tbl.schema, tbl.to_pandas())
-
-
-def _verify_output_fastpath(stock_dump_stream: Any, serializer_cls: Any) -> bool:
-    """Replay representative emission streams through stock and coalescing
-    dump_stream and require identical DECODED output: same arrow schema,
-    same rows in the same order (batch framing is allowed — and expected —
-    to differ). False ⇒ caller must leave the stock serializer in place."""
-    import io
-
-    import numpy as np
-    import pandas as pd
-
-    try:
-        from pyspark.sql.pandas.types import to_arrow_type
-        from pyspark.sql import types as T
-
-        atype_a = to_arrow_type(
-            T.StructType(
-                [
-                    T.StructField("sid", T.LongType()),
-                    T.StructField("vt", T.TimestampType()),
-                    T.StructField("v", T.DoubleType()),
-                ]
-            )
-        )
-
-        def frame_a(i: int, rows: int = 1, as_float: bool = False) -> Any:
-            vals = np.arange(rows, dtype="int64") + i
-            return pd.DataFrame(
-                {
-                    "sid": vals.astype("float64") if as_float else vals,
-                    "vt": np.array(["2024-01-01"] * rows, dtype="datetime64[us]"),
-                    "v": np.full(rows, 0.5),
-                },
-                copy=False,
-            )
-
-        def frame_a_reordered(i: int) -> Any:
-            # same columns, different ORDER: create_batch assigns by name,
-            # so rows are identical — but a naive concat would misalign;
-            # the columns gate must keep these in separate batches
-            return frame_a(i)[["v", "vt", "sid"]]
-
-        def packed(entries: list) -> Any:
-            # entries: list of (list_of_frames, atype) — one per UDF call
-            for frames, t in entries:
-                yield [(iter(frames), t)]
-
-        big = 2**60  # would round if promoted through float64
-        big_frame = pd.DataFrame(
-            {
-                "sid": np.array([big, big + 1], dtype="int64"),
-                "vt": np.array(["2024-01-01"] * 2, dtype="datetime64[us]"),
-                "v": np.array([1.0, 2.0]),
-            }
-        )
-        cases = [
-            # per-key one-row emitters past the 256-frame flush
-            [([frame_a(i)], atype_a) for i in range(300)],
-            # column-order flip mid-stream (same arrow type; stock assigns
-            # by name) + return to the first order
-            [([frame_a(0), frame_a(1)], atype_a), ([frame_a_reordered(7)], atype_a), ([frame_a(2)], atype_a)],
-            # dtype flip on identical columns: int64 > 2^53 next to float64
-            # frames — MUST stay in separate batches
-            [([big_frame], atype_a), ([frame_a(3, as_float=True)], atype_a), ([big_frame], atype_a)],
-            # mixed sizes: oversized frame (no split, like stock), empties
-            [([frame_a(0, rows=15_000)], atype_a), ([frame_a(1, rows=0)], atype_a), ([frame_a(2, rows=3)], atype_a)],
-            # a UDF call emitting several frames + calls emitting none
-            [([frame_a(0), frame_a(1), frame_a(2)], atype_a), ([], atype_a), ([frame_a(3)], atype_a)],
-            # nothing emitted at all
-            [],
-        ]
-        for entries in cases:
-            s_stock = serializer_cls("UTC", False, True, 10_000, _UNLIMITED_BYTES, False)
-            s_fast = serializer_cls("UTC", False, True, 10_000, _UNLIMITED_BYTES, False)
-            b_stock, b_fast = io.BytesIO(), io.BytesIO()
-            stock_dump_stream(s_stock, packed(entries), b_stock)
-            _fast_dump_stream(s_fast, packed(entries), b_fast)
-            ref = _decode_arrow_stream(b_stock.getvalue())
-            got = _decode_arrow_stream(b_fast.getvalue())
-            if (ref is None) != (got is None):
-                return False
-            if ref is None:
-                continue
-            if ref[0] != got[0]:  # arrow schema
-                return False
-            pd.testing.assert_frame_equal(ref[1], got[1], check_exact=True)
-        return True
-    except Exception:
-        return False
-
-
-def patch_output_serializer() -> None:
-    """Swap TransformWithStateInPandasSerializer.dump_stream for the
-    coalescing writer after the row-level equivalence replay passes.
-    Idempotent; any failure (or TIMEDB_SPARK_NO_TWS_OUTPUT_FASTPATH=1)
-    leaves stock pyspark untouched. Applied at module import like
-    :func:`patch_input_serializer` (and for the same reason)."""
-    import os
-
-    if os.environ.get("TIMEDB_SPARK_NO_TWS_OUTPUT_FASTPATH"):
-        return
-    try:
-        from pyspark.sql.pandas.serializers import TransformWithStateInPandasSerializer as _S
-    except Exception:
-        return
-    if getattr(_S, "_tws_fast_output", False):
-        return
-    try:
-        stock = _S.dump_stream
-        if not _verify_output_fastpath(stock, _S):
-            return
-        _S._tws_stock_dump_stream = stock
-        _S.dump_stream = _fast_dump_stream
-        _S._tws_fast_output = True
-    except Exception:
-        pass
-
-
-def patch_input_serializer() -> None:
-    """Swap TransformWithStateInPandasSerializer.load_stream for the
-    vectorized chunker after the equivalence replay passes. Idempotent;
-    any failure (or TIMEDB_SPARK_NO_TWS_INPUT_FASTPATH=1) leaves stock
-    pyspark untouched. Must run at MODULE IMPORT in the worker (unpickling
-    the processor imports state_v2, which calls this) — by the time a
+def patch_serializers() -> None:
+    """Swap TransformWithStateInPandasSerializer's ``load_stream`` for the
+    vectorized chunker and its ``dump_stream`` for the coalescing writer,
+    process-wide, when pyspark, pandas and pyarrow are the
+    :data:`TESTED_VERSIONS`; on any other versions stock pyspark stays.
+    Idempotent. Must run at MODULE IMPORT in the worker (unpickling the
+    processor imports state_v2, which calls this): by the time a
     processor's init() runs, the partition's stock load_stream generator
     is already executing and a class patch could not reach it."""
-    import os
+    if not _tested("pyspark", "pandas", "pyarrow"):
+        return
+    from pyspark.sql.pandas.serializers import TransformWithStateInPandasSerializer as S
 
-    if os.environ.get("TIMEDB_SPARK_NO_TWS_INPUT_FASTPATH"):
+    if "_tws_stock_load_stream" in vars(S):
         return
-    try:
-        from pyspark.sql.pandas.serializers import TransformWithStateInPandasSerializer as _S
-    except Exception:
-        return
-    if getattr(_S, "_tws_fast_input", False):
-        return
-    try:
-        stock = _S.load_stream
-        if not _verify_input_fastpath(stock, _S):
-            return
-        _S._tws_stock_load_stream = stock
-        _S.load_stream = _fast_load_stream
-        _S._tws_fast_input = True
-    except Exception:
-        pass
+    S._tws_stock_load_stream, S._tws_stock_dump_stream = S.load_stream, S.dump_stream
+    S.load_stream, S.dump_stream = _fast_load_stream, _fast_dump_stream
 
 
 def patch_implicit_key(handle: Any, pipeline: bool = False) -> None:
     """Rebind ``set_implicit_key``/``remove_implicit_key`` on the ONE
     api-client instance behind ``handle`` with precomputed framing —
     these run once per grouping key for every state-v2 operator. No-op
-    unless the codec self-check passes.
+    off the tested versions.
 
     ``pipeline=True`` additionally defers their response reads (see
     :class:`_Pipeline`) — ONLY legal for processors whose every RPC flows

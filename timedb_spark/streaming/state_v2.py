@@ -50,24 +50,26 @@ if not _TWS_MISSING:
 _HAVE_TWS = not _TWS_MISSING
 if not _HAVE_TWS:
     StatefulProcessor = object  # type: ignore[assignment,misc]
+else:
+    # The serializer fast paths must land at MODULE IMPORT: unpickling the
+    # processor in a Spark Python worker imports this module before the
+    # worker starts pulling the stock load_stream generator (init() runs
+    # too late for the current task). They patch pyspark's TWS serializer
+    # for the whole process, on the versions _tws_fastpath.TESTED_VERSIONS
+    # names only.
+    from timedb_spark.streaming._tws_fastpath import patch_serializers
 
-if _HAVE_TWS:
-    # Input-boundary fast path (guide §4): must be applied at MODULE IMPORT
-    # so it lands in the Spark Python worker while the processor UDF is
-    # being unpickled — i.e. BEFORE the worker starts pulling the stock
-    # load_stream generator (init() runs too late for the current task).
-    # Equivalence-verified at patch time; a failed check or
-    # TIMEDB_SPARK_NO_TWS_INPUT_FASTPATH=1 leaves stock pyspark in place.
-    try:
-        from timedb_spark.streaming._tws_fastpath import (
-            patch_input_serializer,
-            patch_output_serializer,
+    patch_serializers()
+
+
+def _require_tws() -> None:
+    """The v2 builders' gate: the precise unmet precondition, if any."""
+    if not _HAVE_TWS:
+        raise NotImplementedError(
+            f"transformWithStateInPandas unavailable: missing {_TWS_MISSING} "
+            "(re-probed at import; install the dep to unlock the v2 path)"
         )
 
-        patch_input_serializer()
-        patch_output_serializer()
-    except Exception:  # pragma: no cover - never block the gate on a perf patch
-        pass
 
 #: per-key scalar state: the current argmax observation. v1's STATE_SCHEMA
 #: is array-shaped (it keys by series_id and tracks every valid_time in one
@@ -79,62 +81,6 @@ V2_STATE_SCHEMA = T.StructType(
         T.StructField("value", T.DoubleType()),
     ]
 )
-
-
-class LatestStateProcessor(StatefulProcessor):
-    """argmax-by-(kt, ct) per key, ValueState-backed.
-
-    Per-key constants are the wall-clock here (one Python dispatch + state
-    RPCs + one emitted frame PER KEY) — r14 trims all three: the
-    ``_tws_fastpath`` wire codec replaces the pure-Python protobuf builds
-    (~120-140 µs/call → ~10 µs, identical bytes), and the emitted one-row
-    frame is built from typed numpy arrays with ``copy=False`` (measured
-    1,040 µs → 270 µs vs dtype-inferred lists-of-Timestamps)."""
-
-    def init(self, handle: "StatefulProcessorHandle") -> None:
-        from timedb_spark.streaming._tws_fastpath import patch_implicit_key, wrap_value_state
-
-        patch_implicit_key(handle, pipeline=True)
-        self._state = wrap_value_state(handle.getValueState("latest", V2_STATE_SCHEMA))
-
-    def handleInputRows(
-        self, key: tuple, rows: Iterator[pd.DataFrame], timerValues
-    ) -> Iterator[pd.DataFrame]:
-        import numpy as np
-
-        # one get() instead of exists()+get(): every state access is a
-        # protobuf round-trip to the JVM state server, and get() already
-        # encodes absence as None — per key per batch this is the hot path.
-        cur = self._state.get()
-        best = tuple(cur) if cur is not None else None
-        changed = False
-        for pdf in rows:
-            if not len(pdf):
-                continue
-            kt = pdf["knowledge_time"].values.astype("datetime64[us]").astype("int64")
-            ct = pdf["change_time"].values.astype("datetime64[us]").astype("int64")
-            i = int(np.lexsort((ct, kt))[-1])
-            cand = (int(kt[i]), int(ct[i]), float(pdf["value"].iloc[i]))
-            if best is None or cand[:2] > best[:2]:
-                best = cand
-                changed = True
-        if changed and best is not None:
-            self._state.update(best)
-            sid, vt = key
-            yield pd.DataFrame(
-                {
-                    "series_id": np.array([int(sid)], dtype="int64"),
-                    "valid_time": np.array([vt], dtype="datetime64[us]"),
-                    "value": np.array([best[2]], dtype="float64"),
-                    "knowledge_time": np.array([best[0]], dtype="datetime64[us]"),
-                    "change_time": np.array([best[1]], dtype="datetime64[us]"),
-                },
-                copy=False,
-            )
-
-    def close(self) -> None:
-        pass
-
 
 #: series-keyed variant: ``valid_time`` rides as DATA (the winning row's
 #: hour), so state carries it alongside the argmax observation.
@@ -148,50 +94,69 @@ V2_SERIES_STATE_SCHEMA = T.StructType(
 )
 
 
-class SeriesLatestProcessor(StatefulProcessor):
-    """argmax-by-(kt, ct) per SERIES (valid_time is payload, not key).
-    Same per-key fast path as :class:`LatestStateProcessor`."""
+def _us(col: pd.Series):
+    return col.values.astype("datetime64[us]").astype("int64")
+
+
+class LatestProcessor(StatefulProcessor):
+    """argmax-by-(kt, ct) per key, ValueState-backed. Keyed by
+    ``(series_id, valid_time)`` (state :data:`V2_STATE_SCHEMA`) or, with
+    ``per_valid_time=False``, by ``series_id`` alone, the winning row's
+    valid_time riding in state (:data:`V2_SERIES_STATE_SCHEMA`).
+
+    Per-key constants are the wall-clock here (one Python dispatch + state
+    RPCs + one emitted frame PER KEY) — r14 trims all three: the
+    ``_tws_fastpath`` wire codec replaces the pure-Python protobuf builds
+    (~120-140 µs/call → ~10 µs, identical bytes), and the emitted one-row
+    frame is built from typed numpy arrays with ``copy=False`` (measured
+    1,040 µs → 270 µs vs dtype-inferred lists-of-Timestamps)."""
+
+    def __init__(self, per_valid_time: bool):
+        self._per_vt = per_valid_time
 
     def init(self, handle: "StatefulProcessorHandle") -> None:
         from timedb_spark.streaming._tws_fastpath import patch_implicit_key, wrap_value_state
 
         patch_implicit_key(handle, pipeline=True)
-        self._state = wrap_value_state(handle.getValueState("latest", V2_SERIES_STATE_SCHEMA))
+        schema = V2_STATE_SCHEMA if self._per_vt else V2_SERIES_STATE_SCHEMA
+        self._state = wrap_value_state(handle.getValueState("latest", schema))
 
     def handleInputRows(
         self, key: tuple, rows: Iterator[pd.DataFrame], timerValues
     ) -> Iterator[pd.DataFrame]:
         import numpy as np
 
+        # one get() instead of exists()+get(): every state access is a
+        # protobuf round-trip to the JVM state server, and get() already
+        # encodes absence as None — per key per batch this is the hot path.
+        # State is (kt, ct, value), or (kt, ct, vt, value) when series-keyed.
         cur = self._state.get()
         best = tuple(cur) if cur is not None else None
         changed = False
         for pdf in rows:
             if not len(pdf):
                 continue
-            kt = pdf["knowledge_time"].values.astype("datetime64[us]").astype("int64")
-            ct = pdf["change_time"].values.astype("datetime64[us]").astype("int64")
+            kt, ct = _us(pdf["knowledge_time"]), _us(pdf["change_time"])
             i = int(np.lexsort((ct, kt))[-1])
-            vt = int(pdf["valid_time"].values.astype("datetime64[us]").astype("int64")[i])
-            cand = (int(kt[i]), int(ct[i]), vt, float(pdf["value"].iloc[i]))
+            vt = () if self._per_vt else (int(_us(pdf["valid_time"])[i]),)
+            cand = (int(kt[i]), int(ct[i]), *vt, float(pdf["value"].iloc[i]))
             if best is None or cand[:2] > best[:2]:
                 best = cand
                 changed = True
-        if changed and best is not None:
+        if changed:
             self._state.update(best)
             yield pd.DataFrame(
                 {
                     "series_id": np.array([int(key[0])], dtype="int64"),
-                    "valid_time": np.array([best[2]], dtype="datetime64[us]"),
-                    "value": np.array([best[3]], dtype="float64"),
+                    "valid_time": np.array(
+                        [key[1] if self._per_vt else best[2]], dtype="datetime64[us]"
+                    ),
+                    "value": np.array([best[-1]], dtype="float64"),
                     "knowledge_time": np.array([best[0]], dtype="datetime64[us]"),
                     "change_time": np.array([best[1]], dtype="datetime64[us]"),
                 },
                 copy=False,
             )
-
-    def close(self) -> None:
-        pass
 
 
 def stream_latest_state_v2(sv_stream: DataFrame, *, per_valid_time: bool = False) -> DataFrame:
@@ -209,20 +174,10 @@ def stream_latest_state_v2(sv_stream: DataFrame, *, per_valid_time: bool = False
     the fine-grained key for semantics parity with v1 — but at that
     granularity prefer v1 (``applyInPandasWithState`` ships state in-band
     in Arrow batches, no per-key RPC: 6 s on the same 95k keys)."""
-    if not _HAVE_TWS:
-        raise NotImplementedError(
-            f"transformWithStateInPandas unavailable: missing {_TWS_MISSING} "
-            "(re-probed at import; install the dep to unlock the v2 path)"
-        )
-    if per_valid_time:
-        return sv_stream.groupBy("series_id", "valid_time").transformWithStateInPandas(
-            statefulProcessor=LatestStateProcessor(),
-            outputStructType=OUTPUT_SCHEMA,
-            outputMode="Update",
-            timeMode="None",
-        )
-    return sv_stream.groupBy("series_id").transformWithStateInPandas(
-        statefulProcessor=SeriesLatestProcessor(),
+    _require_tws()
+    keys = ("series_id", "valid_time") if per_valid_time else ("series_id",)
+    return sv_stream.groupBy(*keys).transformWithStateInPandas(
+        statefulProcessor=LatestProcessor(per_valid_time),
         outputStructType=OUTPUT_SCHEMA,
         outputMode="Update",
         timeMode="None",
@@ -314,9 +269,6 @@ class SessionizeProcessor(StatefulProcessor):
             yield _emit_row(user_id, st[:4])
             self._state.clear()
 
-    def close(self) -> None:
-        pass
-
 
 def stream_sessionize_v2(
     events_stream: DataFrame, *, gap_minutes: int = 30, delay: str = "0 seconds"
@@ -328,11 +280,7 @@ def stream_sessionize_v2(
     store provider."""
     from timedb_spark.streaming.sessions import OUTPUT_SCHEMA as SESSION_OUTPUT_SCHEMA
 
-    if not _HAVE_TWS:
-        raise NotImplementedError(
-            f"transformWithStateInPandas unavailable: missing {_TWS_MISSING} "
-            "(re-probed at import; install the dep to unlock the v2 path)"
-        )
+    _require_tws()
     return (
         events_stream.withWatermark("ts", delay)
         .groupBy("user_id")
@@ -483,9 +431,6 @@ class FunnelProcessor(StatefulProcessor):
         self._persist(s1, s2)
         yield from self._emit(user_id, out)
 
-    def close(self) -> None:
-        pass
-
 
 def stream_funnel_v2(events_stream: DataFrame, *, delay: str = "0 seconds") -> DataFrame:
     """events-shaped stream → completed/finalized funnels on the v2 state
@@ -494,11 +439,7 @@ def stream_funnel_v2(events_stream: DataFrame, *, delay: str = "0 seconds") -> D
     provider."""
     from timedb_spark.streaming.funnel import OUTPUT_SCHEMA as FUNNEL_OUTPUT_SCHEMA
 
-    if not _HAVE_TWS:
-        raise NotImplementedError(
-            f"transformWithStateInPandas unavailable: missing {_TWS_MISSING} "
-            "(re-probed at import; install the dep to unlock the v2 path)"
-        )
+    _require_tws()
     return (
         events_stream.withWatermark("ts", delay)
         .groupBy("user_id")
@@ -593,20 +534,13 @@ class TopKUsersProcessor(StatefulProcessor):
                 }
             )
 
-    def close(self) -> None:
-        pass
-
 
 def stream_topk_users_v2(events_stream: DataFrame, *, k: int = 10) -> DataFrame:
     """events-shaped stream → per-event_type running top-k users by event
     count (update mode; last emission per (event_type, rank) after a drain
     equals the exact batch top-k). Caller must enable the RocksDB state
     store provider."""
-    if not _HAVE_TWS:
-        raise NotImplementedError(
-            f"transformWithStateInPandas unavailable: missing {_TWS_MISSING} "
-            "(re-probed at import; install the dep to unlock the v2 path)"
-        )
+    _require_tws()
     return events_stream.groupBy("event_type").transformWithStateInPandas(
         statefulProcessor=TopKUsersProcessor(k),
         outputStructType=TOPK_OUTPUT_SCHEMA,
@@ -650,7 +584,7 @@ class DedupProcessor(StatefulProcessor):
     """First-arrival exact dedup: emit a document only the first time its
     normalized-text md5 is seen; later copies only bump a dup counter.
 
-    Keying (the r5 cardinality lesson, see ``SeriesLatestProcessor``): the
+    Keying (the r5 cardinality lesson, see ``stream_latest_state_v2``): the
     stream groups by a ``_DEDUP_BUCKET_CHARS``-hex-char prefix of the key —
     256 buckets — NOT by the full md5. Per-key grouping would make the v2
     per-key Python dispatch + state RPC count scale with distinct documents
@@ -713,9 +647,6 @@ class DedupProcessor(StatefulProcessor):
         if out_keys:
             yield pd.DataFrame({"text_key": out_keys, "doc_id": out_docs})
 
-    def close(self) -> None:
-        pass
-
 
 def stream_dedup_v2(docs_stream: DataFrame) -> DataFrame:
     """documents-shaped stream → first arrival per normalized-text key;
@@ -731,11 +662,7 @@ def stream_dedup_v2(docs_stream: DataFrame) -> DataFrame:
 
     from timedb_spark.streaming.dedup import text_key
 
-    if not _HAVE_TWS:
-        raise NotImplementedError(
-            f"transformWithStateInPandas unavailable: missing {_TWS_MISSING} "
-            "(re-probed at import; install the dep to unlock the v2 path)"
-        )
+    _require_tws()
     # NB: plain (non-underscore) column names — the v2 Arrow transfer
     # renames leading-underscore columns positionally (observed: _k -> _1).
     keyed = docs_stream.select(
@@ -857,9 +784,6 @@ class CusumProcessor(StatefulProcessor):
             copy=False,
         )
 
-    def close(self) -> None:
-        pass
-
 
 def stream_cusum_v2(events_with_params: DataFrame) -> DataFrame:
     """events stream carrying (user_id, ts, event_id, c cents, mu, sigma)
@@ -867,11 +791,7 @@ def stream_cusum_v2(events_with_params: DataFrame) -> DataFrame:
     never terminates an availableNow drain — the stream_dedup_v2 lesson);
     the drain collapses to each key's LAST emission, which equals batch
     ts_cusum. Caller must enable the RocksDB state store provider."""
-    if not _HAVE_TWS:
-        raise NotImplementedError(
-            f"transformWithStateInPandas unavailable: missing {_TWS_MISSING} "
-            "(re-probed at import; install the dep to unlock the v2 path)"
-        )
+    _require_tws()
     return events_with_params.groupBy("user_id").transformWithStateInPandas(
         statefulProcessor=CusumProcessor(),
         outputStructType=CUSUM_OUTPUT_SCHEMA,
@@ -969,19 +889,12 @@ class AnomalyProcessor(StatefulProcessor):
             copy=False,
         )
 
-    def close(self) -> None:
-        pass
-
 
 def stream_anomaly_v2(events: DataFrame) -> DataFrame:
     """events stream carrying (user_id, ts, event_id, c cents) → online
     Welford z-score anomaly state per user. Update mode + timeMode None
     (the stream_dedup_v2 drain lesson); RocksDB state store required."""
-    if not _HAVE_TWS:
-        raise NotImplementedError(
-            f"transformWithStateInPandas unavailable: missing {_TWS_MISSING} "
-            "(re-probed at import; install the dep to unlock the v2 path)"
-        )
+    _require_tws()
     return events.groupBy("user_id").transformWithStateInPandas(
         statefulProcessor=AnomalyProcessor(),
         outputStructType=ANOM_OUTPUT_SCHEMA,
