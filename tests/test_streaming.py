@@ -517,6 +517,31 @@ def test_detach_independent_of_arrow_conf(spark, events_dir):
     assert all(r.view_id is None or isinstance(r.view_id, int) for r in rows)
 
 
+def test_drain_timeout_stops_query_and_raises(spark, events_dir):
+    """A drain that outlives its timeout must not hand back the batches
+    that happened to finish as if they were the answer: the query is
+    stopped, its sink view dropped, and TimeoutError names the query."""
+    from timedb_spark.streaming import run_available_now_progress
+    from timedb_spark.streaming.windows import EVENTS_STREAM_SCHEMA
+
+    def slow(batches):
+        for pdf in batches:
+            time.sleep(2)
+            yield pdf
+
+    stream = (
+        spark.readStream.schema(EVENTS_STREAM_SCHEMA)
+        .option("maxFilesPerTrigger", 1)
+        .parquet(events_dir)
+        .mapInPandas(slow, EVENTS_STREAM_SCHEMA)
+    )
+    with pytest.raises(TimeoutError, match=r"stream drain 'drain_\w+' did not finish within 3 s") as exc:
+        run_available_now_progress(stream, "append", timeout_s=3)
+    name = str(exc.value).split("'")[1]
+    assert all(q.name != name for q in spark.streams.active)
+    assert not spark.catalog.tableExists(name)
+
+
 def test_stream_sessionize_v2_matches_v1_drain(spark, sf_dir, events_dir):
     """The v2-API sessionizer (transformWithStateInPandas, event-time
     TIMERS, RocksDB store) emits exactly the v1 drain contract: sessions

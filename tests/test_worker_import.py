@@ -9,7 +9,8 @@ directory died with ``ModuleNotFoundError: timedb_spark`` inside the task.
 This test runs a Pandas-UDF-backed query from a foreign cwd in a bare
 subprocess session to pin the addPyFile shipping path. The v2 state API
 adds a driver-side runner that sees no addPyFile include; the second test
-drains a ``stream_latest_state_v2`` query from a foreign cwd to pin it.
+drains a ``stream_latest_state_v2`` query from a foreign cwd to pin it. The
+third pins that sessions share one shipped zip.
 """
 
 import os
@@ -97,3 +98,29 @@ def test_v2_driver_runner_import_is_cwd_independent(tmp_path):
         timeout=300,
     )
     assert "V2_DRIVER_IMPORT_OK" in r.stdout, (r.stdout[-1000:], r.stderr[-3000:])
+
+
+def test_package_zip_is_reused_across_sessions(tmp_path):
+    """Each SparkContext ships the package as a zip that executors fetch
+    from its path; sessions of one checkout share one hash-named zip
+    instead of leaving a new one in the temp directory per session."""
+    script = textwrap.dedent(
+        """
+        import sys
+        sys.path.insert(0, sys.argv[1])  # the checkout under test
+        from timedb_spark.session import get_spark
+
+        for i in range(2):
+            spark = get_spark(f"zip-reuse-{i}", extra_conf={"spark.sql.shuffle.partitions": "2"})
+            assert spark.range(3).count() == 3
+            spark.stop()
+        print("ZIP_CYCLES_OK")
+        """
+    )
+    env = dict(os.environ, TMPDIR=str(tmp_path))
+    r = subprocess.run(
+        [sys.executable, "-c", script, ROOT], env=env, capture_output=True, text=True, timeout=300
+    )
+    assert "ZIP_CYCLES_OK" in r.stdout, (r.stdout[-1000:], r.stderr[-3000:])
+    shipped = sorted(p.name for p in tmp_path.iterdir() if p.name.startswith("timedb_spark_pkg_"))
+    assert len(shipped) == 1 and shipped[0].endswith(".zip"), shipped

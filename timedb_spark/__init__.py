@@ -16,8 +16,9 @@ Reference parity map: see SURVEY.md §2; per-function docstrings cite
 reference file:line.
 """
 
+import importlib
+
 from timedb_spark import profiling
-from timedb_spark.client import TimeDB, UnchangedScope, WriteResult
 
 # Probe for a google.protobuf runtime at package import: the state API v2
 # needs it in every Spark Python worker, and the worker environment
@@ -36,9 +37,31 @@ from timedb_spark.streaming._proto_compat import ensure_protobuf as _ensure_prot
 
 _ensure_protobuf()
 del _ensure_protobuf
-from timedb_spark.operators.bitemporal import SeriesMeta
-from timedb_spark.schema import RETENTION_TIERS
-from timedb_spark.session import get_spark
+
+#: the rest of the public surface, imported on first access (PEP 562): a
+#: Spark Python process that unpickles a function or processor defined in
+#: this package imports it, and ``client`` pulls in pandas.
+_LAZY = {
+    "RETENTION_TIERS": "timedb_spark.schema",
+    "SeriesMeta": "timedb_spark.operators.bitemporal",
+    "TimeDB": "timedb_spark.client",
+    "UnchangedScope": "timedb_spark.client",
+    "WriteResult": "timedb_spark.client",
+    "get_spark": "timedb_spark.session",
+}
+
+
+def __getattr__(name: str):
+    if name not in _LAZY:
+        raise AttributeError(f"module {__name__!r} has no attribute {name!r}")
+    value = getattr(importlib.import_module(_LAZY[name]), name)
+    globals()[name] = value
+    return value
+
+
+def __dir__() -> list[str]:
+    return sorted(set(globals()) | set(_LAZY))
+
 
 #: mirrors the reference's public surface (timedb/__init__.py:24-31):
 #: PgEngineMeta → SeriesMeta, TimeDBClient → TimeDB, rest one-to-one.

@@ -1,39 +1,51 @@
-"""Worker-side protobuf shim for the Spark 4 state API v2.
+"""Start-up hook for the Python processes Spark starts.
 
-``transformWithStateInPandas`` talks a protobuf-framed protocol between the
-Python worker and the JVM state server, so every Spark Python process needs
-``google.protobuf`` importable. In environments without the pip package but
-with a vendorable pure-Python runtime on disk (e.g. a public SDK bundle),
-``timedb_spark.streaming._proto_compat.ensure_protobuf`` discovers the
-runtime, exports its directory as ``TIMEDB_PROTOBUF_DIR``, and puts THIS
-directory on ``PYTHONPATH`` before the JVM (and hence every Python worker it
-forks) starts. Python imports ``sitecustomize`` automatically at interpreter
-startup, which makes this the one hook that runs in the TWS "driver worker"
-and the regular task workers alike — processes ``addPyFile`` does not reach
-early enough (the pb2 modules import during worker bootstrap).
+Python imports ``sitecustomize`` automatically at interpreter start-up, so
+a directory holding one runs it in every process whose ``PYTHONPATH``
+names that directory: the TWS "driver worker", the worker daemon and the
+task workers alike, before any of them imports pyspark. Two routes put
+THIS directory there:
 
-Two actions, both no-ops when not needed:
+- ``timedb_spark.session.ensure_package_shipped`` adds it to
+  ``sc.environment["PYTHONPATH"]``, which Spark hands to every Python
+  process it starts for the session's functions;
+- ``timedb_spark.streaming._proto_compat.ensure_protobuf`` prepends it to
+  the process's own ``PYTHONPATH`` when it vendors a protobuf runtime,
+  before the JVM (and hence every Python process it forks) starts.
 
-1. Append ``TIMEDB_PROTOBUF_DIR`` to ``sys.path`` (APPEND, not prepend: a
-   real site-packages protobuf always wins).
-2. Make the protobuf gencode/runtime version check lenient WITHIN a major
-   version, for PySpark's own pb2 modules only (``timedb_protobuf_leniency``
-   beside this file; the driver loads the same module).
+Two actions:
+
+1. Always: load pyspark and py4j from an installed copy's bytecode rather
+   than from Spark's source zips, when that copy is the same version
+   (``timedb_pyspark_bytecode`` beside this file); otherwise ``sys.path``
+   stays as it is.
+2. Only when ``TIMEDB_PROTOBUF_DIR`` is set (``ensure_protobuf`` exports
+   it): append that directory to ``sys.path`` (APPEND, not prepend: a real
+   site-packages protobuf always wins), and make the protobuf
+   gencode/runtime version check lenient WITHIN a major version, for
+   PySpark's own pb2 modules only (``timedb_protobuf_leniency`` beside
+   this file; the driver loads the same module).
+
+Then it chain-loads the ``sitecustomize`` this one shadows, if any.
 """
 
 import os
 import sys
 
+from timedb_pyspark_bytecode import prefer_installed_pyspark
+
+prefer_installed_pyspark(sys.path)
+
 _d = os.environ.get("TIMEDB_PROTOBUF_DIR")
-if _d and os.path.isdir(os.path.join(_d, "google", "protobuf")) and _d not in sys.path:
-    sys.path.append(_d)
+if _d:
+    if os.path.isdir(os.path.join(_d, "google", "protobuf")) and _d not in sys.path:
+        sys.path.append(_d)
+    try:
+        from timedb_protobuf_leniency import patch_validator
 
-try:
-    from timedb_protobuf_leniency import patch_validator
-
-    patch_validator()
-except Exception:  # pragma: no cover - a broken runtime must not kill start-up
-    pass
+        patch_validator()
+    except Exception:  # pragma: no cover - a broken runtime must not kill start-up
+        pass
 
 # Chain-load the sitecustomize this shim shadows, if any: Python imports
 # only ONE sitecustomize module, and this directory sits first on

@@ -13,6 +13,7 @@ explicitly keeps local runs from creating 200 tiny tasks per shuffle.
 
 from __future__ import annotations
 
+import hashlib
 import os
 import tempfile
 import zipfile
@@ -59,9 +60,43 @@ def micros_parquet_writes(spark: SparkSession):
 _SHIPPED_APPS: set[str] = set()
 
 
+def _package_zip(pkg_dir: str) -> str:
+    """The package's ``.py`` sources as a zip in the temp directory, named by
+    a hash of them: every session of one checkout ships the same file, which
+    is written once, atomically (temp file + ``os.replace``), so a session
+    that starts beside another never ships a torn zip. It is never deleted:
+    cluster executors fetch it from this path while a session uses it."""
+    sources = []
+    for root, dirs, files in os.walk(pkg_dir):
+        dirs.sort()
+        for f in sorted(files):
+            if f.endswith(".py"):
+                full = os.path.join(root, f)
+                with open(full, "rb") as fh:
+                    sources.append((os.path.relpath(full, pkg_dir), fh.read()))
+    digest = hashlib.sha256()
+    for rel, data in sources:
+        digest.update(b"%s\0%d\0%s" % (rel.encode(), len(data), data))
+    tmp_dir = tempfile.gettempdir()
+    zpath = os.path.join(tmp_dir, f"timedb_spark_pkg_{digest.hexdigest()[:20]}.zip")
+    if os.path.exists(zpath):
+        return zpath
+    fd, part = tempfile.mkstemp(prefix="timedb_spark_pkg_", suffix=".zip.part", dir=tmp_dir)
+    try:
+        with os.fdopen(fd, "wb") as fh, zipfile.ZipFile(fh, "w", zipfile.ZIP_DEFLATED) as zf:
+            for rel, data in sources:
+                zf.writestr(os.path.join("timedb_spark", rel), data)
+        os.replace(part, zpath)
+    except BaseException:
+        os.unlink(part)
+        raise
+    return zpath
+
+
 def ensure_package_shipped(spark: SparkSession) -> None:
-    """Make ``timedb_spark`` importable on Python workers regardless of the
-    driver's working directory.
+    """Make ``timedb_spark`` importable, and the start-up shim run, in every
+    Python process Spark starts for this session, whatever the driver's
+    working directory.
 
     Operators built on ``applyInPandas`` / ``mapInPandas`` /
     ``applyInPandasWithState`` reference module-level functions, which
@@ -69,34 +104,35 @@ def ensure_package_shipped(spark: SparkSession) -> None:
     ``timedb_spark``. When the caller's session was created with a different
     cwd (or on a real cluster where the package isn't installed on the
     executors), that import fails with ``ModuleNotFoundError`` inside the
-    task. Shipping the package as a zip via ``addPyFile`` puts it on every
-    worker's ``sys.path`` — the Spark-idiomatic deploy path for driver-side
-    Python dependencies (same mechanism as ``spark-submit --py-files``).
+    task. Shipping the package as a zip via ``addPyFile`` (the
+    ``spark-submit --py-files`` route) puts it on every worker's
+    ``sys.path``; the zip is :func:`_package_zip`'s, one per version of the
+    sources.
 
-    The driver-side transformWithState runner (the fresh Python process that
-    plans each v2 stream's first batch) reads no ``addPyFile`` include; it
-    takes ``PYTHONPATH`` from the environment every Python function carries
-    (``sc.environment``), so the directory holding the package goes there.
+    ``sc.environment["PYTHONPATH"]``, which every Python function carries
+    into the processes that run it, gets two directories in front:
+
+    - the package's ``_protoshim``, whose ``sitecustomize`` runs at each
+      process's start-up and loads pyspark from an installed copy's
+      bytecode instead of Spark's source zip when the versions match;
+    - the directory holding the package, for the driver-side
+      transformWithState runner (the fresh Python process that plans each
+      v2 stream's first batch), which reads no ``addPyFile`` include.
 
     Once per SparkContext; a no-op when already shipped.
     """
+    from timedb_spark.streaming._proto_compat import _SHIM_DIR
+
     sc = spark.sparkContext
     app = sc.applicationId
     if app in _SHIPPED_APPS:
         return
     pkg_dir = os.path.dirname(os.path.abspath(__file__))
-    fd, zpath = tempfile.mkstemp(prefix="timedb_spark_pkg_", suffix=".zip")
-    os.close(fd)
-    with zipfile.ZipFile(zpath, "w", zipfile.ZIP_DEFLATED) as zf:
-        for root, _dirs, files in os.walk(pkg_dir):
-            for f in sorted(files):
-                if f.endswith(".py"):
-                    full = os.path.join(root, f)
-                    rel = os.path.join("timedb_spark", os.path.relpath(full, pkg_dir))
-                    zf.write(full, rel)
-    sc.addPyFile(zpath)
+    sc.addPyFile(_package_zip(pkg_dir))
     prev = sc.environment.get("PYTHONPATH")
-    sc.environment["PYTHONPATH"] = os.path.dirname(pkg_dir) + (os.pathsep + prev if prev else "")
+    sc.environment["PYTHONPATH"] = os.pathsep.join(
+        [_SHIM_DIR, os.path.dirname(pkg_dir)] + ([prev] if prev else [])
+    )
     _SHIPPED_APPS.add(app)
 
 

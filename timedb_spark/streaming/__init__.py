@@ -8,16 +8,37 @@ small dict per key-group) but tested with file sources +
 to their batch oracles.
 """
 
+import importlib
 import uuid
 
 from pyspark.sql import DataFrame
 
-from timedb_spark.streaming.windows import stream_events_window, windowed_events_agg
-from timedb_spark.streaming.state import stream_latest_state
-from timedb_spark.streaming.dedup import stream_dedup
-from timedb_spark.streaming.sessions import stream_sessionize
-from timedb_spark.streaming.funnel import stream_funnel
-from timedb_spark.streaming.ingest import stream_append_to_store
+#: the public builders, each imported from its module on first access (PEP
+#: 562): every Python process that unpickles a state-v2 processor imports
+#: this package, and several of these modules pull in pandas, which such a
+#: process (the driver-side runner that only calls init()) never uses.
+_LAZY = {
+    "stream_events_window": "windows",
+    "windowed_events_agg": "windows",
+    "stream_latest_state": "state",
+    "stream_dedup": "dedup",
+    "stream_sessionize": "sessions",
+    "stream_funnel": "funnel",
+    "stream_append_to_store": "ingest",
+}
+
+
+def __getattr__(name: str):
+    if name not in _LAZY:
+        raise AttributeError(f"module {__name__!r} has no attribute {name!r}")
+    value = getattr(importlib.import_module(f"{__name__}.{_LAZY[name]}"), name)
+    globals()[name] = value
+    return value
+
+
+def __dir__() -> list[str]:
+    return sorted(set(globals()) | set(_LAZY))
+
 
 __all__ = [
     "stream_events_window",
@@ -92,7 +113,11 @@ def stage_ordered_landing(df: DataFrame, path: str, n_files: int, order_col: str
 def run_available_now_progress(stream_df: DataFrame, output_mode: str, timeout_s: int = 600):
     """:func:`run_available_now`, additionally returning the micro-batch
     progress list — lets tests assert HOW the drain executed (number of
-    micro-batches, watermark advancement), not just the final rows."""
+    micro-batches, watermark advancement), not just the final rows.
+
+    A drain still running after ``timeout_s`` seconds is stopped, its sink
+    view dropped, and ``TimeoutError`` raised: the sink then holds only the
+    batches that finished, which is not the answer."""
     spark = stream_df.sparkSession
     name = "drain_" + uuid.uuid4().hex[:12]
     q = (
@@ -102,6 +127,13 @@ def run_available_now_progress(stream_df: DataFrame, output_mode: str, timeout_s
         .trigger(availableNow=True)
         .start()
     )
-    q.awaitTermination(timeout_s)
+    if not q.awaitTermination(timeout_s):
+        q.stop()
+        spark.catalog.dropTempView(name)
+        done = len([p for p in q.recentProgress if p is not None])
+        raise TimeoutError(
+            f"stream drain {name!r} did not finish within {timeout_s} s "
+            f"({done} micro-batch(es) finished); the query was stopped"
+        )
     progress = [p for p in q.recentProgress if p is not None]
     return _detach(spark, name), progress

@@ -30,6 +30,7 @@ from __future__ import annotations
 import functools
 import importlib
 import struct
+import sys
 from typing import Any, Optional, Tuple
 
 #: The versions the equivalence tests in tests/test_tws_fastpath.py passed
@@ -43,8 +44,23 @@ TESTED_VERSIONS = {
 }
 
 
+def _version(module: str) -> str:
+    """``module.__version__``, read from the installed distribution's
+    metadata while the module is not imported yet: the driver-side runner
+    that only calls a processor's init() never touches a frame, and must
+    not pay the pandas and pyarrow imports for this check."""
+    if module not in sys.modules:
+        from importlib import metadata
+
+        try:
+            return metadata.version(module)
+        except metadata.PackageNotFoundError:
+            pass
+    return importlib.import_module(module).__version__
+
+
 def _tested(*modules: str) -> bool:
-    return all(importlib.import_module(m).__version__ == TESTED_VERSIONS[m] for m in modules)
+    return all(_version(m) == TESTED_VERSIONS[m] for m in modules)
 
 
 def _varint(n: int) -> bytes:

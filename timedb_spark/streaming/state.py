@@ -25,11 +25,14 @@ fine-grained as the real parallelism needs (series count ≫ cores).
 from __future__ import annotations
 
 from collections.abc import Iterator
+from typing import TYPE_CHECKING
 
-import pandas as pd
 from pyspark.sql import DataFrame
 from pyspark.sql import types as T
 from pyspark.sql.streaming.state import GroupState, GroupStateTimeout
+
+if TYPE_CHECKING:
+    import pandas as pd
 
 OUTPUT_SCHEMA = T.StructType(
     [
@@ -57,6 +60,7 @@ def _update_latest(
     key: tuple, pdfs: Iterator[pd.DataFrame], state: GroupState
 ) -> Iterator[pd.DataFrame]:
     import numpy as np
+    import pandas as pd
 
     if state.exists:
         vt_a, kt_a, ct_a, val_a = state.get

@@ -25,13 +25,16 @@ skip messages and the ``NotImplementedError`` gate.
 from __future__ import annotations
 
 from collections.abc import Iterator
+from typing import TYPE_CHECKING
 
-import pandas as pd
 from pyspark.sql import DataFrame
 from pyspark.sql import types as T
 
 from timedb_spark.streaming._proto_compat import ensure_protobuf
 from timedb_spark.streaming.state import OUTPUT_SCHEMA
+
+if TYPE_CHECKING:
+    import pandas as pd
 
 #: exact unmet precondition ("" when runnable) — surfaced in skip messages
 #: and the NotImplementedError so a probe records WHY the gate is closed.
@@ -125,6 +128,7 @@ class LatestProcessor(StatefulProcessor):
         self, key: tuple, rows: Iterator[pd.DataFrame], timerValues
     ) -> Iterator[pd.DataFrame]:
         import numpy as np
+        import pandas as pd
 
         # one get() instead of exists()+get(): every state access is a
         # protobuf round-trip to the JVM state server, and get() already
@@ -223,6 +227,7 @@ class SessionizeProcessor(StatefulProcessor):
         from timedb_spark.streaming.sessions import _emit_sessions, _fold_sessions
 
         import numpy as np
+        import pandas as pd
 
         (user_id,) = key
         frames = [pdf for pdf in rows if len(pdf)]
@@ -371,6 +376,8 @@ class FunnelProcessor(StatefulProcessor):
             self._handle.registerTimer(min(deadlines))
 
     def _emit(self, user_id, out):
+        import pandas as pd
+
         if out:
             yield pd.DataFrame(
                 {
@@ -384,6 +391,7 @@ class FunnelProcessor(StatefulProcessor):
 
     def handleInputRows(self, key, rows, timerValues):
         import numpy as np
+        import pandas as pd
 
         (user_id,) = key
         wm_ms = max(timerValues.getCurrentWatermarkInMs(), 0)
@@ -499,6 +507,7 @@ class TopKUsersProcessor(StatefulProcessor):
 
     def handleInputRows(self, key, rows, timerValues):
         import numpy as np
+        import pandas as pd
 
         (event_type,) = key
         frames = [pdf for pdf in rows if len(pdf)]
@@ -617,6 +626,8 @@ class DedupProcessor(StatefulProcessor):
         self._seen = wrap_map_state(self._seen)
 
     def handleInputRows(self, key, rows, timerValues):
+        import pandas as pd
+
         frames = [pdf for pdf in rows if len(pdf)]
         if not frames:
             return
@@ -731,6 +742,7 @@ class CusumProcessor(StatefulProcessor):
         import math
 
         import numpy as np
+        import pandas as pd
 
         cur = self._state.get()
         sp, sn, alarms, mxp, mxn, first, t = (
@@ -850,6 +862,7 @@ class AnomalyProcessor(StatefulProcessor):
         import math
 
         import numpy as np
+        import pandas as pd
 
         cur = self._state.get()
         n, mean, m2, alerts, first = (
