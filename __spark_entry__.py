@@ -15,7 +15,7 @@ from __future__ import annotations
 from collections.abc import Callable
 from datetime import datetime, timedelta
 
-from pyspark.sql import DataFrame, SparkSession, Window
+from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from timedb_spark.functions.rounding import floor6 as _floor6
@@ -284,17 +284,70 @@ def _drain_v2(spark: SparkSession, stream_df, mode: str) -> DataFrame:
             spark.conf.set("spark.sql.streaming.stateStore.providerClass", prev)
 
 
+def _events(spark: SparkSession, sf_dir: str, cents: bool = False) -> DataFrame:
+    """The events table as the streaming queries stage it: ``ts`` as a
+    timestamp, then ``event_type, value`` (EVENTS_STREAM_SCHEMA) or, with
+    ``cents``, only ``c``, the value in integer cents."""
+    tail = (
+        [(F.col("value").cast("decimal(18,2)") * 100).cast("long").alias("c")]
+        if cents
+        else ["event_type", "value"]
+    )
+    return load_table(spark, sf_dir, "events").select(
+        "event_id", F.col("ts").cast("timestamp").alias("ts"), "user_id", *tail
+    )
+
+
+def _events_stream(spark: SparkSession, sf_dir: str, per_trigger: int | None = None) -> DataFrame:
+    """events as a 6-file landing zone, read ``per_trigger`` files per
+    micro-batch (default: all of them in ONE micro-batch)."""
+    from timedb_spark.streaming.windows import EVENTS_STREAM_SCHEMA
+
+    d = _stage_stream_dir(spark, sf_dir, _events(spark, sf_dir), "events", 6)
+    reader = spark.readStream.schema(EVENTS_STREAM_SCHEMA)
+    return (reader.option("maxFilesPerTrigger", per_trigger) if per_trigger else reader).parquet(d)
+
+
+def _sv_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """series_values as a 4-file landing zone read 2 files per trigger →
+    2 micro-batches: exercises cross-batch state at half the per-key
+    Python dispatch of 1-file batches (wall time here scales with keys ×
+    batches, not rows — see streaming/state.py)."""
+    sv = bitemporal_frame(spark, sf_dir).select(
+        "series_id", "valid_time", "knowledge_time", "change_time", "value"
+    )
+    d = _stage_stream_dir(spark, sf_dir, sv, "sv", 4)
+    return spark.readStream.schema(sv.schema).option("maxFilesPerTrigger", 2).parquet(d)
+
+
+def _docs_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """documents as a 5-file landing zone read 2 files per trigger."""
+    from timedb_spark.streaming.dedup import DOCUMENTS_STREAM_SCHEMA
+
+    docs = load_table(spark, sf_dir, "documents")
+    d = _stage_stream_dir(spark, sf_dir, docs, "docs", 5, src_table="documents")
+    return spark.readStream.schema(DOCUMENTS_STREAM_SCHEMA).option("maxFilesPerTrigger", 2).parquet(d)
+
+
+def _last_emission(out: DataFrame, keys: list[str], cols: list[str] | None = None) -> DataFrame:
+    """An update-mode drain collapsed to each key's last emission (memory-
+    sink arrival order is batch order): the ``keys``, then ``cols`` of that
+    emission (default: every other column)."""
+    cols = cols or [c for c in out.columns if c not in keys]
+    last = (
+        out.withColumn("_emit", F.monotonically_increasing_id())
+        .groupBy(*keys)
+        .agg(F.max_by(F.struct(*cols), "_emit").alias("s"))
+    )
+    return last.select(*keys, *[F.col(f"s.{c}").alias(c) for c in cols])
+
+
 def _q_stream_window(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Streaming twin of events_window, drained with availableNow — final
     complete-mode aggregates equal the batch/SQL oracle."""
     from timedb_spark import streaming as st
-    from timedb_spark.streaming.windows import EVENTS_STREAM_SCHEMA
 
-    ev = load_table(spark, sf_dir, "events").select(
-        "event_id", F.col("ts").cast("timestamp").alias("ts"), "user_id", "event_type", "value"
-    )
-    d = _stage_stream_dir(spark, sf_dir, ev, "events", 6)
-    stream = spark.readStream.schema(EVENTS_STREAM_SCHEMA).option("maxFilesPerTrigger", 2).parquet(d)
+    stream = _events_stream(spark, sf_dir, per_trigger=2)
     return _drain_with_few_partitions(spark, st.windowed_events_agg(stream), "complete")
 
 
@@ -304,31 +357,16 @@ def _q_stream_latest_state(spark: SparkSession, sf_dir: str) -> DataFrame:
     oracle."""
     from timedb_spark import streaming as st
 
-    sv = bitemporal_frame(spark, sf_dir).select(
-        "series_id", "valid_time", "knowledge_time", "change_time", "value"
-    )
-    # 2 files/trigger → 2 micro-batches: exercises cross-batch state at
-    # half the per-key Python dispatch of 1-file batches (wall time here
-    # scales with keys × batches, not rows — see streaming/state.py).
-    d = _stage_stream_dir(spark, sf_dir, sv, "sv", 4)
-    stream = spark.readStream.schema(sv.schema).option("maxFilesPerTrigger", 2).parquet(d)
-    out = _drain_with_few_partitions(spark, st.stream_latest_state(stream), "update")
-    # update mode re-emits on change; the last emission per key is the final
-    # state (memory-sink arrival order is batch order).
-    final = out.withColumn("_emit", F.monotonically_increasing_id())
-    return final.groupBy("series_id", "valid_time").agg(F.max_by("value", "_emit").alias("value"))
+    out = _drain_with_few_partitions(spark, st.stream_latest_state(_sv_stream(spark, sf_dir)), "update")
+    return _last_emission(out, ["series_id", "valid_time"], ["value"])
 
 
 def _q_stream_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Streaming ingestion dedup drained with availableNow — the final
     unique-document count equals the batch count(distinct key) oracle."""
     from timedb_spark import streaming as st
-    from timedb_spark.streaming.dedup import DOCUMENTS_STREAM_SCHEMA
 
-    docs = load_table(spark, sf_dir, "documents")
-    d = _stage_stream_dir(spark, sf_dir, docs, "docs", 5, src_table="documents")
-    stream = spark.readStream.schema(DOCUMENTS_STREAM_SCHEMA).option("maxFilesPerTrigger", 2).parquet(d)
-    return _drain_with_few_partitions(spark, st.stream_dedup(stream), "complete")
+    return _drain_with_few_partitions(spark, st.stream_dedup(_docs_stream(spark, sf_dir)), "complete")
 
 
 def _q_stream_sessionize(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -337,14 +375,8 @@ def _q_stream_sessionize(spark: SparkSession, sf_dir: str) -> DataFrame:
     timed out by the final watermark — exactly the SQL-oracle predicate over
     the batch sessionize result."""
     from timedb_spark import streaming as st
-    from timedb_spark.streaming.windows import EVENTS_STREAM_SCHEMA
 
-    ev = load_table(spark, sf_dir, "events").select(
-        "event_id", F.col("ts").cast("timestamp").alias("ts"), "user_id", "event_type", "value"
-    )
-    d = _stage_stream_dir(spark, sf_dir, ev, "events", 6)
-    stream = spark.readStream.schema(EVENTS_STREAM_SCHEMA).parquet(d)
-    return _drain_with_few_partitions(spark, st.stream_sessionize(stream), "append")
+    return _drain_with_few_partitions(spark, st.stream_sessionize(_events_stream(spark, sf_dir)), "append")
 
 
 def _q_stream_funnel(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -352,14 +384,8 @@ def _q_stream_funnel(spark: SparkSession, sf_dir: str) -> DataFrame:
     availableNow. Deterministic: depth-3 on purchase arrival, depth-1/2 via
     the click+horizon timer once the final watermark passes."""
     from timedb_spark import streaming as st
-    from timedb_spark.streaming.windows import EVENTS_STREAM_SCHEMA
 
-    ev = load_table(spark, sf_dir, "events").select(
-        "event_id", F.col("ts").cast("timestamp").alias("ts"), "user_id", "event_type", "value"
-    )
-    d = _stage_stream_dir(spark, sf_dir, ev, "events", 6)
-    stream = spark.readStream.schema(EVENTS_STREAM_SCHEMA).parquet(d)
-    return _drain_with_few_partitions(spark, st.stream_funnel(stream), "append")
+    return _drain_with_few_partitions(spark, st.stream_funnel(_events_stream(spark, sf_dir)), "append")
 
 
 def _q_stream_join(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -371,16 +397,10 @@ def _q_stream_join(spark: SparkSession, sf_dir: str) -> DataFrame:
     while emitting every pair: drain == batch interval join. The
     micro-batch late-drop semantics are pinned separately in
     tests/test_streaming.py."""
-    from timedb_spark.streaming import run_available_now
     from timedb_spark.streaming.joins import stream_click_purchase_join
-    from timedb_spark.streaming.windows import EVENTS_STREAM_SCHEMA
 
-    ev = load_table(spark, sf_dir, "events").select(
-        "event_id", F.col("ts").cast("timestamp").alias("ts"), "user_id", "event_type", "value"
-    )
-    d = _stage_stream_dir(spark, sf_dir, ev, "events", 6)
-    clicks = spark.readStream.schema(EVENTS_STREAM_SCHEMA).parquet(d).filter(F.col("event_type") == "click")
-    purchases = spark.readStream.schema(EVENTS_STREAM_SCHEMA).parquet(d).filter(F.col("event_type") == "purchase")
+    clicks = _events_stream(spark, sf_dir).filter(F.col("event_type") == "click")
+    purchases = _events_stream(spark, sf_dir).filter(F.col("event_type") == "purchase")
     return _drain_with_few_partitions(spark, stream_click_purchase_join(clicks, purchases), "append")
 
 
@@ -393,39 +413,14 @@ def _q_stream_join_ordered(spark: SparkSession, sf_dir: str) -> DataFrame:
     while join state is genuinely evicted between batches (asserted in
     tests/test_streaming.py). Complements _q_stream_join's single-batch
     drain of the UNORDERED zone."""
-    from timedb_spark.streaming import run_available_now
     from timedb_spark.streaming.joins import stream_click_purchase_join
     from timedb_spark.streaming.windows import EVENTS_STREAM_SCHEMA
 
-    ev = load_table(spark, sf_dir, "events").select(
-        "event_id", F.col("ts").cast("timestamp").alias("ts"), "user_id", "event_type", "value"
-    )
-    d = _stage_stream_dir(spark, sf_dir, ev, "events_ord", 6, order_col="ts")
+    d = _stage_stream_dir(spark, sf_dir, _events(spark, sf_dir), "events_ord", 6, order_col="ts")
     src = spark.readStream.schema(EVENTS_STREAM_SCHEMA).option("maxFilesPerTrigger", 2).parquet(d)
     clicks = src.filter(F.col("event_type") == "click")
     purchases = src.filter(F.col("event_type") == "purchase")
     return _drain_with_few_partitions(spark, stream_click_purchase_join(clicks, purchases), "append")
-
-
-def _workers_have_protobuf(spark: SparkSession) -> bool:
-    """Whether google.protobuf imports inside Spark's Python WORKERS.
-
-    The driver-side probe (_proto_compat) can succeed while workers still
-    lack the runtime: worker environments (PYTHONPATH → sitecustomize shim)
-    freeze when the JVM launches, so a harness that built its SparkSession
-    BEFORE importing this module has protobuf-less workers no matter what
-    we set afterwards. One 1-element task answers authoritatively (task
-    workers and the TWS driver worker inherit the same JVM env)."""
-
-    def _probe(_):
-        try:
-            import google.protobuf  # noqa: F401
-
-            return True
-        except ImportError:
-            return False
-
-    return spark.sparkContext.parallelize([0], 1).map(_probe).collect()[0]
 
 
 def _q_stream_latest_state_v2(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -438,58 +433,11 @@ def _q_stream_latest_state_v2(spark: SparkSession, sf_dir: str) -> DataFrame:
     access is a per-key protobuf RPC, so the fine-grained key costs 78 s at
     sf0.1 vs 10 s entity-keyed on identical rows — see the guidance in
     streaming/state_v2.py. The per-(series, hour) collapse at scale stays
-    on v1 (stream_latest_state: in-band Arrow state, no per-key RPC).
+    on v1 (stream_latest_state: in-band Arrow state, no per-key RPC)."""
+    from timedb_spark.streaming.state_v2 import stream_latest_state_v2
 
-    The v2 protocol needs google.protobuf in every Spark Python process
-    (vendored at package import when absent — streaming/_proto_compat.py);
-    if THIS session's workers predate the probe (JVM launched before the
-    package was imported), the v2 plan cannot run in it, so the query
-    FALLS BACK to the v1 twin collapsed to the same per-series argmax —
-    clearly surfaced here: the fallback proves the same semantics, not the
-    v2 API; the v2 path itself is pinned end-to-end in
-    tests/test_streaming.py::test_stream_latest_state_v2_series_matches_batch."""
-    from timedb_spark.streaming.state_v2 import _HAVE_TWS, stream_latest_state_v2
-
-    if not (_HAVE_TWS and _workers_have_protobuf(spark)):
-        from timedb_spark.streaming.state import stream_latest_state
-
-        sv = bitemporal_frame(spark, sf_dir).select(
-            "series_id", "valid_time", "knowledge_time", "change_time", "value"
-        )
-        d = _stage_stream_dir(spark, sf_dir, sv, "sv", 4)
-        stream = spark.readStream.schema(sv.schema).option("maxFilesPerTrigger", 2).parquet(d)
-        out = _drain_with_few_partitions(spark, stream_latest_state(stream), "update")
-        # v1 emits per-(series, hour) rows with kt/ct; last emission per key
-        # is that key's final state, then per-series argmax over (kt, ct).
-        final = (
-            out.withColumn("_emit", F.monotonically_increasing_id())
-            .groupBy("series_id", "valid_time")
-            .agg(
-                F.max_by(
-                    F.struct("knowledge_time", "change_time", "value"), "_emit"
-                ).alias("s")
-            )
-            .select("series_id", "valid_time", "s.knowledge_time", "s.change_time", "s.value")
-        )
-        win = F.max_by(F.struct("valid_time", "value"), F.struct("knowledge_time", "change_time"))
-        return (
-            final.groupBy("series_id")
-            .agg(win.alias("w"))
-            .select("series_id", F.col("w.valid_time").alias("valid_time"), F.col("w.value").alias("value"))
-        )
-
-    sv = bitemporal_frame(spark, sf_dir).select(
-        "series_id", "valid_time", "knowledge_time", "change_time", "value"
-    )
-    d = _stage_stream_dir(spark, sf_dir, sv, "sv", 4)
-    stream = spark.readStream.schema(sv.schema).option("maxFilesPerTrigger", 2).parquet(d)
-    out = _drain_v2(spark, stream_latest_state_v2(stream), "update")
-    final = out.withColumn("_emit", F.monotonically_increasing_id())
-    return (
-        final.groupBy("series_id")
-        .agg(F.max_by(F.struct("valid_time", "value"), "_emit").alias("w"))
-        .select("series_id", F.col("w.valid_time").alias("valid_time"), F.col("w.value").alias("value"))
-    )
+    out = _drain_v2(spark, stream_latest_state_v2(_sv_stream(spark, sf_dir)), "update")
+    return _last_emission(out, ["series_id"], ["valid_time", "value"])
 
 
 def _q_stream_sessionize_v2(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -498,20 +446,10 @@ def _q_stream_sessionize_v2(spark: SparkSession, sf_dir: str) -> DataFrame:
     register/delete). Same drain contract as stream_sessionize (sessions
     closed by data ∪ timed out by the final watermark), so it shares that
     oracle verbatim; keyed by user_id — entity-level, the right v2 key
-    cardinality (see streaming/state_v2.py). Falls back to the v1 query
-    (same semantics, not the v2 API) when this session's workers lack
-    protobuf; the v2 path is pinned in tests/test_streaming.py."""
-    from timedb_spark.streaming.state_v2 import _HAVE_TWS, stream_sessionize_v2
-    from timedb_spark.streaming.windows import EVENTS_STREAM_SCHEMA
+    cardinality (see streaming/state_v2.py)."""
+    from timedb_spark.streaming.state_v2 import stream_sessionize_v2
 
-    if not (_HAVE_TWS and _workers_have_protobuf(spark)):
-        return _q_stream_sessionize(spark, sf_dir)
-    ev = load_table(spark, sf_dir, "events").select(
-        "event_id", F.col("ts").cast("timestamp").alias("ts"), "user_id", "event_type", "value"
-    )
-    d = _stage_stream_dir(spark, sf_dir, ev, "events", 6)
-    stream = spark.readStream.schema(EVENTS_STREAM_SCHEMA).parquet(d)
-    return _drain_v2(spark, stream_sessionize_v2(stream), "append")
+    return _drain_v2(spark, stream_sessionize_v2(_events_stream(spark, sf_dir)), "append")
 
 
 def _q_stream_funnel_v2(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -519,19 +457,10 @@ def _q_stream_funnel_v2(spark: SparkSession, sf_dir: str) -> DataFrame:
     per-user open funnels as two ListStates, whole-list put per batch).
     Same drain contract as stream_funnel (depth-3 on purchase arrival,
     depth-1/2 via the click+horizon timer behind the final watermark), so
-    it shares that oracle verbatim. Falls back to the v1 query when this
-    session's workers lack protobuf."""
-    from timedb_spark.streaming.state_v2 import _HAVE_TWS, stream_funnel_v2
-    from timedb_spark.streaming.windows import EVENTS_STREAM_SCHEMA
+    it shares that oracle verbatim."""
+    from timedb_spark.streaming.state_v2 import stream_funnel_v2
 
-    if not (_HAVE_TWS and _workers_have_protobuf(spark)):
-        return _q_stream_funnel(spark, sf_dir)
-    ev = load_table(spark, sf_dir, "events").select(
-        "event_id", F.col("ts").cast("timestamp").alias("ts"), "user_id", "event_type", "value"
-    )
-    d = _stage_stream_dir(spark, sf_dir, ev, "events", 6)
-    stream = spark.readStream.schema(EVENTS_STREAM_SCHEMA).parquet(d)
-    return _drain_v2(spark, stream_funnel_v2(stream), "append")
+    return _drain_v2(spark, stream_funnel_v2(_events_stream(spark, sf_dir)), "append")
 
 
 def _q_stream_topk_users_v2(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -539,41 +468,12 @@ def _q_stream_topk_users_v2(spark: SparkSession, sf_dir: str) -> DataFrame:
     state API (MAP STATE: one (n, sum_cents) entry per user — only touched
     users pay an RPC per batch). Drained over ≥3 micro-batches; the last
     emission per (event_type, rank) is the exact batch top-k (count desc,
-    user_id tiebreak; cents-exact sums). Falls back to the equivalent batch
-    aggregation (same semantics, not the v2 API) when this session's
-    workers lack protobuf."""
-    from timedb_spark.streaming.state_v2 import _HAVE_TWS, stream_topk_users_v2
-    from timedb_spark.streaming.windows import EVENTS_STREAM_SCHEMA
+    user_id tiebreak; cents-exact sums)."""
+    from timedb_spark.streaming.state_v2 import stream_topk_users_v2
 
-    ev = load_table(spark, sf_dir, "events").select(
-        "event_id", F.col("ts").cast("timestamp").alias("ts"), "user_id", "event_type", "value"
-    )
-    if not (_HAVE_TWS and _workers_have_protobuf(spark)):
-        counts = ev.groupBy("event_type", "user_id").agg(
-            F.count(F.lit(1)).alias("n_events"),
-            F.round(F.sum(F.col("value").cast("decimal(18,2)")).cast("double"), 2).alias("sum_value"),
-        )
-        w = Window.partitionBy("event_type").orderBy(F.col("n_events").desc(), F.col("user_id"))
-        return (
-            counts.withColumn("rank", F.row_number().over(w))
-            .filter(F.col("rank") <= 10)
-            .select("event_type", "rank", "user_id", "n_events", "sum_value")
-        )
-    d = _stage_stream_dir(spark, sf_dir, ev, "events", 6)
-    stream = spark.readStream.schema(EVENTS_STREAM_SCHEMA).option("maxFilesPerTrigger", 2).parquet(d)
+    stream = _events_stream(spark, sf_dir, per_trigger=2)
     out = _drain_v2(spark, stream_topk_users_v2(stream, k=10), "update")
-    last = (
-        out.withColumn("_emit", F.monotonically_increasing_id())
-        .groupBy("event_type", "rank")
-        .agg(F.max_by(F.struct("user_id", "n_events", "sum_value"), "_emit").alias("s"))
-    )
-    return last.select(
-        "event_type",
-        "rank",
-        F.col("s.user_id").alias("user_id"),
-        F.col("s.n_events").alias("n_events"),
-        F.col("s.sum_value").alias("sum_value"),
-    )
+    return _last_emission(out, ["event_type", "rank"])
 
 
 def _q_stream_cusum_v2(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -584,18 +484,10 @@ def _q_stream_cusum_v2(spark: SparkSession, sf_dir: str) -> DataFrame:
     Drained over an in-order staged feed (the stream_join_ordered
     contract) and collapsed to each key's last emission, the result is
     bit-equal to batch ts_cusum - whose oracle this query shares
-    verbatim. Falls back to the batch operator (same semantics, not the
-    v2 API) when this session's workers lack protobuf."""
-    from timedb_spark.streaming.state_v2 import _HAVE_TWS, stream_cusum_v2
-    from timedb_spark.operators import timeseries as _ts
+    verbatim."""
+    from timedb_spark.streaming.state_v2 import stream_cusum_v2
 
-    if not (_HAVE_TWS and _workers_have_protobuf(spark)):
-        return _ts.cusum(spark, sf_dir)
-
-    ev = load_table(spark, sf_dir, "events").select(
-        "event_id", F.col("ts").cast("timestamp").alias("ts"), "user_id",
-        (F.col("value").cast("decimal(18,2)") * 100).cast("long").alias("c"),
-    )
+    ev = _events(spark, sf_dir, cents=True)
     params = ev.groupBy("user_id").agg(
         F.sum("c").alias("sx"),
         F.sum(F.col("c") * F.col("c")).alias("sxx"),
@@ -612,22 +504,7 @@ def _q_stream_cusum_v2(spark: SparkSession, sf_dir: str) -> DataFrame:
         spark.readStream.schema(ev.schema).option("maxFilesPerTrigger", 2).parquet(d)
         .join(F.broadcast(params), "user_id")
     )
-    out = _drain_v2(spark, stream_cusum_v2(stream), "update")
-    last = (
-        out.withColumn("_emit", F.monotonically_increasing_id())
-        .groupBy("user_id")
-        .agg(F.max_by(F.struct(*[c for c in out.columns if c != "user_id"]), "_emit").alias("s"))
-    )
-    return last.select(
-        "user_id",
-        F.col("s.n_events").alias("n_events"),
-        F.col("s.n_alarms").alias("n_alarms"),
-        F.col("s.first_alarm_idx").alias("first_alarm_idx"),
-        F.col("s.max_cusum_pos").alias("max_cusum_pos"),
-        F.col("s.max_cusum_neg").alias("max_cusum_neg"),
-        F.col("s.mean_value").alias("mean_value"),
-        F.col("s.std_value").alias("std_value"),
-    )
+    return _last_emission(_drain_v2(spark, stream_cusum_v2(stream), "update"), ["user_id"])
 
 
 def _q_stream_anomaly_v2(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -637,34 +514,13 @@ def _q_stream_anomaly_v2(spark: SparkSession, sf_dir: str) -> DataFrame:
     statistics of the first t−1 points. Drained over an in-order staged
     feed and collapsed to each key's last emission, the result replays the
     batch ts_anomaly_online recursion — whose recursive-CTE oracle this
-    query shares verbatim. Falls back to the batch operator when this
-    session's workers lack protobuf."""
-    from timedb_spark.operators import timeseries as _ts
-    from timedb_spark.streaming.state_v2 import _HAVE_TWS, stream_anomaly_v2
+    query shares verbatim."""
+    from timedb_spark.streaming.state_v2 import stream_anomaly_v2
 
-    if not (_HAVE_TWS and _workers_have_protobuf(spark)):
-        return _ts.anomaly_online(spark, sf_dir)
-
-    ev = load_table(spark, sf_dir, "events").select(
-        "event_id", F.col("ts").cast("timestamp").alias("ts"), "user_id",
-        (F.col("value").cast("decimal(18,2)") * 100).cast("long").alias("c"),
-    )
+    ev = _events(spark, sf_dir, cents=True)
     d = _stage_stream_dir(spark, sf_dir, ev, "events_anom", 5, order_col="ts")
     stream = spark.readStream.schema(ev.schema).option("maxFilesPerTrigger", 2).parquet(d)
-    out = _drain_v2(spark, stream_anomaly_v2(stream), "update")
-    last = (
-        out.withColumn("_emit", F.monotonically_increasing_id())
-        .groupBy("user_id")
-        .agg(F.max_by(F.struct(*[c for c in out.columns if c != "user_id"]), "_emit").alias("s"))
-    )
-    return last.select(
-        "user_id",
-        F.col("s.n_events").alias("n_events"),
-        F.col("s.n_alerts").alias("n_alerts"),
-        F.col("s.first_alert_idx").alias("first_alert_idx"),
-        F.col("s.mean_value").alias("mean_value"),
-        F.col("s.std_value").alias("std_value"),
-    )
+    return _last_emission(_drain_v2(spark, stream_anomaly_v2(stream), "update"), ["user_id"])
 
 
 def _q_stream_dedup_v2(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -673,17 +529,10 @@ def _q_stream_dedup_v2(spark: SparkSession, sf_dir: str) -> DataFrame:
     md5 across micro-batches, bucket-keyed so per-batch Python dispatch is
     bounded by 4096 buckets, not distinct documents (the r5 key-cardinality
     lesson). The drained first-arrival count equals the batch
-    count(distinct key) — stream_dedup's oracle verbatim. Falls back to
-    the v1 query when this session's workers lack protobuf."""
-    from timedb_spark.streaming.dedup import DOCUMENTS_STREAM_SCHEMA
-    from timedb_spark.streaming.state_v2 import _HAVE_TWS, stream_dedup_v2
+    count(distinct key) — stream_dedup's oracle verbatim."""
+    from timedb_spark.streaming.state_v2 import stream_dedup_v2
 
-    if not (_HAVE_TWS and _workers_have_protobuf(spark)):
-        return _q_stream_dedup(spark, sf_dir)
-    docs = load_table(spark, sf_dir, "documents")
-    d = _stage_stream_dir(spark, sf_dir, docs, "docs", 5, src_table="documents")
-    stream = spark.readStream.schema(DOCUMENTS_STREAM_SCHEMA).option("maxFilesPerTrigger", 2).parquet(d)
-    out = _drain_v2(spark, stream_dedup_v2(stream), "update")
+    out = _drain_v2(spark, stream_dedup_v2(_docs_stream(spark, sf_dir)), "update")
     return out.groupBy().agg(F.count(F.lit(1)).alias("n_unique_docs"))
 
 

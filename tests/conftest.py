@@ -1,3 +1,5 @@
+from contextlib import contextmanager
+
 import pytest
 
 from timedb_spark.session import get_spark
@@ -20,3 +22,21 @@ def spark():
 @pytest.fixture(scope="session")
 def sf_dir():
     return SF_DIR
+
+
+_PROVIDER = "spark.sql.streaming.stateStore.providerClass"
+
+
+@contextmanager
+def rocksdb_state_store(spark):
+    """The RocksDB state store provider (the v2 state API requires it) for
+    the block, then the session's previous provider again."""
+    prev = spark.conf.get(_PROVIDER, None)
+    spark.conf.set(_PROVIDER, "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider")
+    try:
+        yield
+    finally:
+        if prev is None:
+            spark.conf.unset(_PROVIDER)
+        else:
+            spark.conf.set(_PROVIDER, prev)

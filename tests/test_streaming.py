@@ -13,6 +13,7 @@ import pytest
 from pyspark.sql import Window
 from pyspark.sql import functions as F
 
+from conftest import rocksdb_state_store
 from timedb_spark.io.tables import bitemporal_frame, load_table
 from timedb_spark.operators import bitemporal as bt
 from timedb_spark.streaming import stream_events_window, stream_latest_state, windowed_events_agg
@@ -228,12 +229,7 @@ def test_stream_latest_state_v2_matches_batch_latest(spark, sf_dir, tmp_path):
     )
     sv.repartition(2).write.mode("overwrite").parquet(d)
 
-    prev = spark.conf.get("spark.sql.streaming.stateStore.providerClass", None)
-    spark.conf.set(
-        "spark.sql.streaming.stateStore.providerClass",
-        "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider",
-    )
-    try:
+    with rocksdb_state_store(spark):
         stream = spark.readStream.schema(sv.schema).option("maxFilesPerTrigger", 1).parquet(d)
         name = _run_to_memory(stream_latest_state_v2(stream, per_valid_time=True), "update")
         out = spark.table(name).withColumn("_emit", F.monotonically_increasing_id())
@@ -243,11 +239,6 @@ def test_stream_latest_state_v2_matches_batch_latest(spark, sf_dir, tmp_path):
             .agg(F.max_by("value", "_emit").alias("value"))
             .collect()
         }
-    finally:
-        if prev is None:
-            spark.conf.unset("spark.sql.streaming.stateStore.providerClass")
-        else:
-            spark.conf.set("spark.sql.streaming.stateStore.providerClass", prev)
     exp = {(r.series_id, r.valid_time): r.value for r in bt.latest(sv).collect()}
     assert len(got) == len(exp)
     matches = sum(1 for k, v in exp.items() if got.get(k) == v or (v != v and got.get(k) != got.get(k)))
@@ -270,12 +261,7 @@ def test_stream_latest_state_v2_series_matches_batch(spark, sf_dir, tmp_path):
     )
     sv.repartition(3).write.mode("overwrite").parquet(d)
 
-    prev = spark.conf.get("spark.sql.streaming.stateStore.providerClass", None)
-    spark.conf.set(
-        "spark.sql.streaming.stateStore.providerClass",
-        "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider",
-    )
-    try:
+    with rocksdb_state_store(spark):
         stream = spark.readStream.schema(sv.schema).option("maxFilesPerTrigger", 1).parquet(d)
         name = _run_to_memory(stream_latest_state_v2(stream), "update")
         out = spark.table(name).withColumn("_emit", F.monotonically_increasing_id())
@@ -286,11 +272,6 @@ def test_stream_latest_state_v2_series_matches_batch(spark, sf_dir, tmp_path):
             .select("series_id", "w.valid_time", "w.value")
             .collect()
         }
-    finally:
-        if prev is None:
-            spark.conf.unset("spark.sql.streaming.stateStore.providerClass")
-        else:
-            spark.conf.set("spark.sql.streaming.stateStore.providerClass", prev)
     exp = {
         r.series_id: (r.valid_time, r.value)
         for r in sv.groupBy("series_id")
@@ -554,23 +535,13 @@ def test_stream_sessionize_v2_matches_v1_drain(spark, sf_dir, events_dir):
     if not state_v2._HAVE_TWS:
         pytest.skip(f"transformWithStateInPandas gated: missing {state_v2._TWS_MISSING}")
 
-    prev = spark.conf.get("spark.sql.streaming.stateStore.providerClass", None)
-    spark.conf.set(
-        "spark.sql.streaming.stateStore.providerClass",
-        "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider",
-    )
-    try:
+    with rocksdb_state_store(spark):
         stream = spark.readStream.schema(EVENTS_STREAM_SCHEMA).parquet(events_dir)
         name = _run_to_memory(stream_sessionize_v2(stream), "append")
         got = {
             (r.user_id, r.session_start, r.session_end, r.n_events, round(r.sum_value, 2))
             for r in spark.table(name).collect()
         }
-    finally:
-        if prev is None:
-            spark.conf.unset("spark.sql.streaming.stateStore.providerClass")
-        else:
-            spark.conf.set("spark.sql.streaming.stateStore.providerClass", prev)
 
     ev = spark.read.schema(EVENTS_STREAM_SCHEMA).parquet(events_dir)
     wm_ms = ev.agg(F.floor(F.unix_micros(F.max("ts")) / 1000)).first()[0]
@@ -610,12 +581,7 @@ def test_stream_sessionize_v2_timer_extension_exactly_once(spark, tmp_path):
         ).coalesce(1).write.mode("append").parquet(src)
 
     def _run():
-        prev = spark.conf.get("spark.sql.streaming.stateStore.providerClass", None)
-        spark.conf.set(
-            "spark.sql.streaming.stateStore.providerClass",
-            "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider",
-        )
-        try:
+        with rocksdb_state_store(spark):
             stream = spark.readStream.schema(EVENTS_STREAM_SCHEMA).parquet(src)
             q = (
                 stream_sessionize_v2(stream)
@@ -627,11 +593,6 @@ def test_stream_sessionize_v2_timer_extension_exactly_once(spark, tmp_path):
                 .start()
             )
             q.awaitTermination(300)
-        finally:
-            if prev is None:
-                spark.conf.unset("spark.sql.streaming.stateStore.providerClass")
-            else:
-                spark.conf.set("spark.sql.streaming.stateStore.providerClass", prev)
         rows = spark.read.parquet(out).filter(F.col("user_id") < 900).collect()
         return sorted(
             (r.user_id, r.session_start.isoformat(), r.session_end.isoformat(), r.n_events)
@@ -680,23 +641,13 @@ def test_stream_funnel_v2_matches_batch_predicate(spark, sf_dir, events_dir):
     if not state_v2._HAVE_TWS:
         pytest.skip(f"transformWithStateInPandas gated: missing {state_v2._TWS_MISSING}")
 
-    prev = spark.conf.get("spark.sql.streaming.stateStore.providerClass", None)
-    spark.conf.set(
-        "spark.sql.streaming.stateStore.providerClass",
-        "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider",
-    )
-    try:
+    with rocksdb_state_store(spark):
         stream = spark.readStream.schema(EVENTS_STREAM_SCHEMA).parquet(events_dir)
         name = _run_to_memory(stream_funnel_v2(stream), "append")
         got = {
             (r.click_id, r.view_id, r.purchase_id, r.funnel_depth)
             for r in spark.table(name).collect()
         }
-    finally:
-        if prev is None:
-            spark.conf.unset("spark.sql.streaming.stateStore.providerClass")
-        else:
-            spark.conf.set("spark.sql.streaming.stateStore.providerClass", prev)
 
     ev = spark.read.schema(EVENTS_STREAM_SCHEMA).parquet(events_dir)
     wm_ms = ev.agg(F.floor(F.unix_micros(F.max("ts")) / 1000)).first()[0]
@@ -726,12 +677,7 @@ def test_stream_topk_users_v2_matches_batch(spark, sf_dir, events_dir):
     if not state_v2._HAVE_TWS:
         pytest.skip(f"transformWithStateInPandas gated: missing {state_v2._TWS_MISSING}")
 
-    prev = spark.conf.get("spark.sql.streaming.stateStore.providerClass", None)
-    spark.conf.set(
-        "spark.sql.streaming.stateStore.providerClass",
-        "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider",
-    )
-    try:
+    with rocksdb_state_store(spark):
         stream = (
             spark.readStream.schema(EVENTS_STREAM_SCHEMA)
             .option("maxFilesPerTrigger", 1)
@@ -746,11 +692,6 @@ def test_stream_topk_users_v2_matches_batch(spark, sf_dir, events_dir):
             (r.event_type, r.rank, r.s.user_id, r.s.n_events, r.s.sum_value)
             for r in last.collect()
         }
-    finally:
-        if prev is None:
-            spark.conf.unset("spark.sql.streaming.stateStore.providerClass")
-        else:
-            spark.conf.set("spark.sql.streaming.stateStore.providerClass", prev)
 
     from pyspark.sql import Window as W
 
@@ -816,12 +757,7 @@ def test_stream_dedup_v2_matches_batch_distinct(spark, sf_dir, tmp_path):
     expected = keyed.select("k").distinct().count()
     valid = {(r.k, r.doc_id) for r in keyed.collect()}
 
-    prev = spark.conf.get("spark.sql.streaming.stateStore.providerClass", None)
-    spark.conf.set(
-        "spark.sql.streaming.stateStore.providerClass",
-        "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider",
-    )
-    try:
+    with rocksdb_state_store(spark):
         stream = (
             spark.readStream.schema(DOCUMENTS_STREAM_SCHEMA)
             .option("maxFilesPerTrigger", 2)
@@ -839,11 +775,6 @@ def test_stream_dedup_v2_matches_batch_distinct(spark, sf_dir, tmp_path):
         # no-data batches forever — the regression this pins)
         assert q.awaitTermination(180)
         rows = spark.table("dedup_v2_t").collect()
-    finally:
-        if prev is None:
-            spark.conf.unset("spark.sql.streaming.stateStore.providerClass")
-        else:
-            spark.conf.set("spark.sql.streaming.stateStore.providerClass", prev)
 
     assert len(rows) == expected
     keys = [r.text_key for r in rows]
@@ -893,19 +824,9 @@ def test_dedup_v2_ttl_processing_time_matches_untimed(spark, sf_dir, tmp_path):
             q.stop()
         return {(r.text_key, r.doc_id) for r in spark.table(name).collect()}
 
-    prev = spark.conf.get("spark.sql.streaming.stateStore.providerClass", None)
-    spark.conf.set(
-        "spark.sql.streaming.stateStore.providerClass",
-        "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider",
-    )
-    try:
+    with rocksdb_state_store(spark):
         untimed = drain("dedup_v2_untimed", ttl=False, time_mode="None")
         ttl = drain("dedup_v2_ttl", ttl=True, time_mode="ProcessingTime")
-    finally:
-        if prev is None:
-            spark.conf.unset("spark.sql.streaming.stateStore.providerClass")
-        else:
-            spark.conf.set("spark.sql.streaming.stateStore.providerClass", prev)
 
     assert untimed and ttl == untimed
 
@@ -921,8 +842,6 @@ def test_stream_cusum_v2_matches_batch_cusum(spark, sf_dir):
 
     if not state_v2._HAVE_TWS:
         pytest.skip(f"transformWithStateInPandas gated: missing {state_v2._TWS_MISSING}")
-    if not entry._workers_have_protobuf(spark):
-        pytest.skip("workers lack protobuf runtime")
 
     got = {r.user_id: r for r in entry._q_stream_cusum_v2(spark, sf_dir).collect()}
     exp = {r.user_id: r for r in ts.cusum(spark, sf_dir).collect()}
@@ -946,8 +865,6 @@ def test_stream_anomaly_v2_matches_batch_online(spark, sf_dir):
 
     if not state_v2._HAVE_TWS:
         pytest.skip(f"transformWithStateInPandas gated: missing {state_v2._TWS_MISSING}")
-    if not entry._workers_have_protobuf(spark):
-        pytest.skip("workers lack protobuf runtime")
 
     got = {r.user_id: r for r in entry._q_stream_anomaly_v2(spark, sf_dir).collect()}
     exp = {r.user_id: r for r in ts.anomaly_online(spark, sf_dir).collect()}

@@ -10,7 +10,9 @@ This test runs a Pandas-UDF-backed query from a foreign cwd in a bare
 subprocess session to pin the addPyFile shipping path. The v2 state API
 adds a driver-side runner that sees no addPyFile include; the second test
 drains a ``stream_latest_state_v2`` query from a foreign cwd to pin it. The
-third pins that sessions share one shipped zip.
+third pins that sessions share one shipped zip. The fourth drains a v2
+query in a session whose JVM started before the package was imported, and
+the fifth pins that v2 drains log no per-key warning.
 """
 
 import os
@@ -18,6 +20,8 @@ import subprocess
 import sys
 import textwrap
 from pathlib import Path
+
+import pytest
 
 ROOT = str(Path(__file__).resolve().parents[1])
 
@@ -124,3 +128,88 @@ def test_package_zip_is_reused_across_sessions(tmp_path):
     assert "ZIP_CYCLES_OK" in r.stdout, (r.stdout[-1000:], r.stderr[-3000:])
     shipped = sorted(p.name for p in tmp_path.iterdir() if p.name.startswith("timedb_spark_pkg_"))
     assert len(shipped) == 1 and shipped[0].endswith(".zip"), shipped
+
+
+def _run_clean(script: str) -> subprocess.CompletedProcess:
+    """``script`` in a fresh interpreter with ``PYTHONPATH`` and
+    ``TIMEDB_PROTOBUF_DIR`` unset (this process's ``ensure_protobuf`` may
+    have set both): either would reach the JVM's environment and hide what
+    these tests pin."""
+    env = {k: v for k, v in os.environ.items() if k not in ("PYTHONPATH", "TIMEDB_PROTOBUF_DIR")}
+    return subprocess.run(
+        [sys.executable, "-c", textwrap.dedent(script), ROOT],
+        env=env,
+        capture_output=True,
+        text=True,
+        timeout=600,
+    )
+
+
+def _errors(r: subprocess.CompletedProcess) -> list[str]:
+    """The stderr lines naming an error: a drain's root cause sits far
+    above the tail of its stack traces."""
+    return [line for line in r.stderr.splitlines() if "Error" in line][-10:]
+
+
+def _require_tws():
+    from timedb_spark.streaming import state_v2
+
+    if not state_v2._HAVE_TWS:
+        pytest.skip(f"state API v2 unavailable: {state_v2._TWS_MISSING}")
+
+
+def test_v2_drain_in_session_started_before_import():
+    """A session built before ``timedb_spark`` is imported has a JVM whose
+    environment froze without the vendored protobuf runtime. The runtime's
+    directory reaches its Python processes through ``sc.environment``, so
+    the v2 funnel drains there and equals the v1 funnel's rows."""
+    _require_tws()
+    r = _run_clean(
+        """
+        import sys
+        sys.path.insert(0, sys.argv[1])  # the checkout under test
+        from pyspark.sql import SparkSession
+
+        spark = (
+            SparkSession.builder.master("local[2]")
+            .config("spark.ui.enabled", "false")
+            .appName("pre-started-session")
+            .getOrCreate()
+        )
+        import __spark_entry__ as entry
+
+        sf = "/root/testdata/sf0.001"
+        v2 = sorted(map(repr, entry._q_stream_funnel_v2(spark, sf).collect()))
+        v1 = sorted(map(repr, entry._q_stream_funnel(spark, sf).collect()))
+        assert v2 and v2 == v1, (len(v2), len(v1))
+        spark.stop()
+        print("PRESTARTED_V2_OK")
+        """
+    )
+    assert "PRESTARTED_V2_OK" in r.stdout, (r.stdout[-1000:], _errors(r))
+
+
+def test_v2_drains_log_no_per_key_warnings():
+    """Two per-key WARN lines reported no fault: the JVM state server's
+    for each key whose v2 state is still empty (the session sets that
+    logger to ERROR), and the timer service's for the funnel's delete of
+    the timer that is firing, which pyspark deletes itself afterwards. A
+    sessionize and a funnel drain print neither."""
+    _require_tws()
+    r = _run_clean(
+        """
+        import sys
+        sys.path.insert(0, sys.argv[1])  # the checkout under test
+        import __spark_entry__ as entry
+        from timedb_spark.session import get_spark
+
+        spark = get_spark("v2-quiet", extra_conf={"spark.sql.shuffle.partitions": "2"})
+        for q in ("stream_sessionize_v2", "stream_funnel_v2"):
+            assert entry.queries()[q](spark, "/root/testdata/sf0.001").count() > 0, q
+        spark.stop()
+        print("V2_DRAINS_OK")
+        """
+    )
+    assert "V2_DRAINS_OK" in r.stdout, (r.stdout[-1000:], _errors(r))
+    assert "doesn't contain a value" not in r.stderr, r.stderr[-3000:]
+    assert "Failed to delete timer" not in r.stderr, r.stderr[-3000:]

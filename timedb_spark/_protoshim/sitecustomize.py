@@ -8,7 +8,9 @@ THIS directory there:
 
 - ``timedb_spark.session.ensure_package_shipped`` adds it to
   ``sc.environment["PYTHONPATH"]``, which Spark hands to every Python
-  process it starts for the session's functions;
+  process it starts for the session's functions (``TIMEDB_PROTOBUF_DIR``
+  rides ``sc.environment`` beside it, so this holds for a session whose
+  JVM started before the package was imported);
 - ``timedb_spark.streaming._proto_compat.ensure_protobuf`` prepends it to
   the process's own ``PYTHONPATH`` when it vendors a protobuf runtime,
   before the JVM (and hence every Python process it forks) starts.
@@ -20,7 +22,7 @@ Two actions:
    (``timedb_pyspark_bytecode`` beside this file); otherwise ``sys.path``
    stays as it is.
 2. Only when ``TIMEDB_PROTOBUF_DIR`` is set (``ensure_protobuf`` exports
-   it): append that directory to ``sys.path`` (APPEND, not prepend: a real
+   it, ``ensure_package_shipped`` passes it on): append that directory to ``sys.path`` (APPEND, not prepend: a real
    site-packages protobuf always wins), and make the protobuf
    gencode/runtime version check lenient WITHIN a major version, for
    PySpark's own pb2 modules only (``timedb_protobuf_leniency`` beside

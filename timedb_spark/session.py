@@ -54,6 +54,13 @@ def micros_parquet_writes(spark: SparkSession):
         else:
             spark.conf.set(_OUTPUT_TS_CONF, prev)
 
+#: the JVM logger that warns once per grouping key whose v2 state is still
+#: empty (``Value state … doesn't contain a value``): a WARN per key per
+#: batch on the state-server path that reports no fault.
+_STATE_SERVER_LOGGER = (
+    "org.apache.spark.sql.execution.python.streaming.TransformWithStateInPySparkStateServer"
+)
+
 #: applicationIds the package zip has already been shipped to (addPyFile is
 #: per-SparkContext; re-shipping the same file name would error on a restart
 #: of the same app id, so track by id, not by session object).
@@ -96,7 +103,7 @@ def _package_zip(pkg_dir: str) -> str:
 def ensure_package_shipped(spark: SparkSession) -> None:
     """Make ``timedb_spark`` importable, and the start-up shim run, in every
     Python process Spark starts for this session, whatever the driver's
-    working directory.
+    working directory and whenever its JVM started.
 
     Operators built on ``applyInPandas`` / ``mapInPandas`` /
     ``applyInPandasWithState`` reference module-level functions, which
@@ -119,6 +126,14 @@ def ensure_package_shipped(spark: SparkSession) -> None:
       transformWithState runner (the fresh Python process that plans each
       v2 stream's first batch), which reads no ``addPyFile`` include.
 
+    ``TIMEDB_PROTOBUF_DIR``, when ``ensure_protobuf`` vendored a protobuf
+    runtime, rides ``sc.environment`` too, so the shim loads that runtime
+    in every such process even when the JVM started before the package was
+    imported (its environment froze without the variable).
+
+    It also sets the JVM's transformWithState state-server logger to ERROR
+    (in local mode the executors share that JVM).
+
     Once per SparkContext; a no-op when already shipped.
     """
     from timedb_spark.streaming._proto_compat import _SHIM_DIR
@@ -133,6 +148,10 @@ def ensure_package_shipped(spark: SparkSession) -> None:
     sc.environment["PYTHONPATH"] = os.pathsep.join(
         [_SHIM_DIR, os.path.dirname(pkg_dir)] + ([prev] if prev else [])
     )
+    if os.environ.get("TIMEDB_PROTOBUF_DIR"):
+        sc.environment["TIMEDB_PROTOBUF_DIR"] = os.environ["TIMEDB_PROTOBUF_DIR"]
+    log4j = sc._jvm.org.apache.logging.log4j
+    log4j.core.config.Configurator.setLevel(_STATE_SERVER_LOGGER, log4j.Level.ERROR)
     _SHIPPED_APPS.add(app)
 
 

@@ -20,8 +20,10 @@ version, one minor behind). ``ensure_protobuf()``:
    verbatim in test-skip messages and the ``NotImplementedError`` gate so
    every probe records WHY the gate is closed.
 
-Call it BEFORE ``SparkSession`` creation (``session.get_spark`` does):
-worker environments are frozen when the JVM launches.
+``session.get_spark`` calls it before the JVM launches, whose environment
+every worker inherits; for a session whose JVM started first,
+``session.ensure_package_shipped`` passes ``TIMEDB_PROTOBUF_DIR`` to the
+workers through ``sc.environment``.
 """
 
 from __future__ import annotations
@@ -104,8 +106,8 @@ def ensure_protobuf() -> str:
         _patch_validator()
         os.environ["TIMEDB_PROTOBUF_DIR"] = d
         # Prepend the shim dir so sitecustomize runs in every worker the
-        # (not-yet-started) JVM forks. Harmless if the JVM already runs —
-        # the v1 API stays the default and tests re-probe per process.
+        # (not-yet-started) JVM forks. A JVM that already runs gets both
+        # through sc.environment (session.ensure_package_shipped).
         prev = os.environ.get("PYTHONPATH", "")
         if _SHIM_DIR not in prev.split(os.pathsep):
             os.environ["PYTHONPATH"] = _SHIM_DIR + (os.pathsep + prev if prev else "")

@@ -38,6 +38,8 @@ from pyspark.sql import DataFrame
 from pyspark.sql import types as T
 from pyspark.sql.streaming.state import GroupState, GroupStateTimeout
 
+from timedb_spark.streaming.windows import events_in_order
+
 OUTPUT_SCHEMA = T.StructType(
     [
         T.StructField("user_id", T.LongType()),
@@ -126,6 +128,15 @@ def _fold_sessions(ts_us, cents, open_s, gap_us):
     return segs[:-1], list(segs[-1])
 
 
+def _fold_pdf(pdf: pd.DataFrame, open_s, gap_us):
+    """:func:`_fold_sessions` over one key's batch in event order."""
+    import numpy as np
+
+    ts_us = pdf["ts"].values.astype("datetime64[us]").astype("int64")
+    cents = np.rint(pdf["value"].values * 100).astype("int64")
+    return _fold_sessions(ts_us, cents, open_s, gap_us)
+
+
 def _emit_sessions(user_id: int, sessions: list) -> pd.DataFrame:
     import numpy as np
 
@@ -151,18 +162,11 @@ def _make_update(gap_us: int):
             state.remove()
             return
 
-        import numpy as np
-
-        frames = [pdf for pdf in pdfs if len(pdf)]
-        if not frames:
+        pdf = events_in_order(pdfs)
+        if pdf is None:
             return
-        pdf = pd.concat(frames) if len(frames) > 1 else frames[0]
-        order = np.lexsort((pdf["event_id"].values, pdf["ts"].values))
-        ts_us = pdf["ts"].values.astype("datetime64[us]").astype("int64")[order]
-        cents = np.rint(pdf["value"].values[order] * 100).astype("int64")
-
         open_prev = list(state.get) if state.exists else None
-        closed, open_s = _fold_sessions(ts_us, cents, open_prev, gap_us)
+        closed, open_s = _fold_pdf(pdf, open_prev, gap_us)
 
         state.update(tuple(open_s))
         # Close by time once the watermark passes end + gap. The timestamp

@@ -1,25 +1,35 @@
-"""Spark 4 state API v2 (``transformWithStateInPandas``) twin of
-``streaming.state.stream_latest_state``.
+"""Stateful streaming operators on the Spark 4 state API v2
+(``transformWithStateInPandas``): typed ``ValueState`` / ``ListState`` /
+``MapState`` handles, explicit timers and a RocksDB-backed state store
+(required by the API; also the store you'd run at 100 TB — changelog
+checkpointing + bounded memory, vs the HDFS-backed in-memory map of the v1
+``applyInPandasWithState`` API).
 
-Same semantics — per ``(series_id, valid_time)`` key keep the argmax of
-``value`` over ``(knowledge_time, change_time)``, emit on change — but on
-the new ``StatefulProcessor`` API: typed ``ValueState`` handles, explicit
-init/close lifecycle, RocksDB-backed state store (required by the API; also
-the store you'd run at 100 TB — changelog checkpointing + bounded memory,
-vs the HDFS-backed in-memory map of the v1 API).
+Why keep both APIs, per semantic:
 
-Why keep both: v1 (``applyInPandasWithState``) is the portable baseline;
-v2 is where Spark's stateful processing is headed (timers, multiple state
-variables, TTL on state, initial-state bootstrap). The per-key Python
-dispatch cost is the same order — the win is operational (state-store
-lifecycle), not per-row CPU.
+- latest state: both. v1 (``streaming/state.py``) keys by series with
+  the per-hour map in-band, the cheap form at ``(series, hour)`` grain;
+  v2 keys by series with the winner's hour as payload (one state RPC per
+  key, see :func:`stream_latest_state_v2`).
+- sessionize and funnel: both, one fold each. v1 and v2 call the same
+  step (``sessions._fold_pdf`` / ``funnel.funnel_step``); v2 only stores
+  state in ValueState / ListState and sets named event-time timers where
+  v1 has one timeout slot per key.
+- dedup: both. v1 is ``dropDuplicates`` on the key; v2 holds one
+  bucket-keyed MapState entry per key, with state TTL as an opt-in.
+- top-k users, CUSUM and the Welford anomaly monitor: v2 only.
+
+No v2 name falls back to a v1 twin or a batch operator: where the v2 API
+cannot run, every v2 builder raises :func:`_require_tws`'s
+``NotImplementedError`` naming the missing precondition.
 
 The v2 protocol is protobuf-framed, so every Spark Python process needs
 ``google.protobuf``. ``_proto_compat.ensure_protobuf`` vendors a pure-Python
-runtime from a public SDK bundle on disk when pip protobuf is absent (see
-that module and ``_protoshim/sitecustomize.py``); the exact unmet
-precondition, when any, is recorded in ``_TWS_MISSING`` and surfaced in
-skip messages and the ``NotImplementedError`` gate.
+runtime from a public SDK bundle on disk when pip protobuf is absent, and
+``session.ensure_package_shipped`` hands its directory to the session's
+Python processes (see those and ``_protoshim/sitecustomize.py``); the
+exact unmet precondition, when any, is recorded in ``_TWS_MISSING`` and
+surfaced in skip messages and the ``NotImplementedError`` gate.
 """
 
 from __future__ import annotations
@@ -32,6 +42,7 @@ from pyspark.sql import types as T
 
 from timedb_spark.streaming._proto_compat import ensure_protobuf
 from timedb_spark.streaming.state import OUTPUT_SCHEMA
+from timedb_spark.streaming.windows import events_in_order
 
 if TYPE_CHECKING:
     import pandas as pd
@@ -209,9 +220,9 @@ SESSION_STATE_SCHEMA = T.StructType(
 
 
 class SessionizeProcessor(StatefulProcessor):
-    """Same fold as streaming/sessions.py (closed-by-data emits inline,
-    idle sessions flushed when the event-time watermark passes end + gap),
-    re-expressed on ValueState + explicit timers."""
+    """The v1 sessionizer's fold (``sessions._fold_pdf``; closed-by-data
+    emits inline, idle sessions flushed when the event-time watermark
+    passes end + gap) on ValueState + explicit timers."""
 
     def __init__(self, gap_us: int):
         self._gap_us = gap_us
@@ -224,20 +235,12 @@ class SessionizeProcessor(StatefulProcessor):
         self._state = wrap_value_state(handle.getValueState("open_session", SESSION_STATE_SCHEMA))
 
     def handleInputRows(self, key, rows, timerValues):
-        from timedb_spark.streaming.sessions import _emit_sessions, _fold_sessions
-
-        import numpy as np
-        import pandas as pd
+        from timedb_spark.streaming.sessions import _emit_sessions, _fold_pdf
 
         (user_id,) = key
-        frames = [pdf for pdf in rows if len(pdf)]
-        if not frames:
+        pdf = events_in_order(rows)
+        if pdf is None:
             return
-        pdf = pd.concat(frames) if len(frames) > 1 else frames[0]
-        order = np.lexsort((pdf["event_id"].values, pdf["ts"].values))
-        ts_us = pdf["ts"].values.astype("datetime64[us]").astype("int64")[order]
-        cents = np.rint(pdf["value"].values[order] * 100).astype("int64")
-
         cur = self._state.get()  # one RPC: None encodes absence
         if cur is not None:
             st = tuple(cur)
@@ -245,7 +248,7 @@ class SessionizeProcessor(StatefulProcessor):
             self._handle.deleteTimer(st[4])  # superseded deadline
         else:
             open_prev = None
-        closed, open_s = _fold_sessions(ts_us, cents, open_prev, self._gap_us)
+        closed, open_s = _fold_pdf(pdf, open_prev, self._gap_us)
 
         deadline_ms = (open_s[1] + self._gap_us) // 1000 + 1
         if deadline_ms <= timerValues.getCurrentWatermarkInMs():
@@ -304,8 +307,6 @@ def stream_sessionize_v2(
 # into parallel arrays inside one value blob)
 # ---------------------------------------------------------------------------
 
-_FUNNEL_HORIZON_US = 24 * 3600 * 1_000_000
-
 FUNNEL_S1_SCHEMA = T.StructType(
     [T.StructField("ct_us", T.LongType()), T.StructField("cid", T.LongType())]
 )
@@ -319,16 +320,11 @@ FUNNEL_S2_SCHEMA = T.StructType(
 )
 
 
-def _funnel_deadline_ms(ct_us: int) -> int:
-    return (ct_us + _FUNNEL_HORIZON_US) // 1000 + 1
-
-
 class FunnelProcessor(StatefulProcessor):
-    """Same semantics and drain contract as streaming/funnel.py
-    (_update_funnel), re-expressed on two ListStates + explicit timers:
-    stage-1 rows are clicks awaiting a view, stage-2 rows carry the matched
-    view and await a purchase. ListState.put replaces the whole list per
-    batch — one RPC per stage, not one per entry."""
+    """The v1 funnel's step (``funnel.funnel_step``) on two ListStates +
+    explicit timers: stage-1 rows are clicks awaiting a view, stage-2 rows
+    carry the matched view and await a purchase. ListState.put replaces
+    the whole list per batch — one RPC per stage, not one per entry."""
 
     def init(self, handle: "StatefulProcessorHandle") -> None:
         from timedb_spark.streaming._tws_fastpath import patch_implicit_key
@@ -338,106 +334,34 @@ class FunnelProcessor(StatefulProcessor):
         self._s1 = handle.getListState("stage1", FUNNEL_S1_SCHEMA)
         self._s2 = handle.getListState("stage2", FUNNEL_S2_SCHEMA)
 
-    def _load(self):
-        s1 = [tuple(r) for r in self._s1.get()] if self._s1.exists() else []
-        s2 = [tuple(r) for r in self._s2.get()] if self._s2.exists() else []
-        return s1, s2
-
-    def _expire(self, s1, s2, wm_ms, out):
-        keep1 = []
-        for ct, cid in s1:
-            if _funnel_deadline_ms(ct) <= wm_ms:
-                out.append((cid, None, None, 1))
-            else:
-                keep1.append((ct, cid))
-        keep2 = []
-        for ct, cid, vid, vt in s2:
-            if _funnel_deadline_ms(ct) <= wm_ms:
-                out.append((cid, vid, None, 2))
-            else:
-                keep2.append((ct, cid, vid, vt))
-        return keep1, keep2
-
-    def _persist(self, s1, s2):
-        for t in list(self._handle.listTimers()):
-            self._handle.deleteTimer(t)
-        if s1:
-            self._s1.put(s1)
-        else:
-            self._s1.clear()
-        if s2:
-            self._s2.put(s2)
-        else:
-            self._s2.clear()
-        deadlines = [_funnel_deadline_ms(ct) for ct, *_ in s1] + [
-            _funnel_deadline_ms(ct) for ct, *_ in s2
-        ]
-        if deadlines:
-            self._handle.registerTimer(min(deadlines))
-
-    def _emit(self, user_id, out):
-        import pandas as pd
-
-        if out:
-            yield pd.DataFrame(
-                {
-                    "click_id": [r[0] for r in out],
-                    "user_id": [int(user_id)] * len(out),
-                    "view_id": pd.array([r[1] for r in out], dtype="Int64"),
-                    "purchase_id": pd.array([r[2] for r in out], dtype="Int64"),
-                    "funnel_depth": [r[3] for r in out],
-                }
-            )
-
     def handleInputRows(self, key, rows, timerValues):
-        import numpy as np
-        import pandas as pd
-
-        (user_id,) = key
-        wm_ms = max(timerValues.getCurrentWatermarkInMs(), 0)
-        s1, s2 = self._load()
-        out: list[tuple] = []
-
-        frames = [pdf for pdf in rows if len(pdf)]
-        if frames:
-            pdf = pd.concat(frames) if len(frames) > 1 else frames[0]
-            order = np.lexsort((pdf["event_id"].values, pdf["ts"].values))
-            ts_us = pdf["ts"].values.astype("datetime64[us]").astype("int64")[order]
-            etype = pdf["event_type"].values[order]
-            eid = pdf["event_id"].values[order]
-            for i in range(len(ts_us)):
-                t, typ, e = int(ts_us[i]), etype[i], int(eid[i])
-                if typ == "click":
-                    s1.append((t, e))
-                elif typ == "view":
-                    keep = []
-                    for ct, cid in s1:
-                        if ct < t and t - ct <= _FUNNEL_HORIZON_US:
-                            s2.append((ct, cid, e, t))
-                        else:
-                            keep.append((ct, cid))
-                    s1 = keep
-                elif typ == "purchase":
-                    keep = []
-                    for ct, cid, vid, vt in s2:
-                        if vt < t and t - ct <= _FUNNEL_HORIZON_US:
-                            out.append((cid, vid, e, 3))
-                        else:
-                            keep.append((ct, cid, vid, vt))
-                    s2 = keep
-
-        s1, s2 = self._expire(s1, s2, wm_ms, out)
-        self._persist(s1, s2)
-        yield from self._emit(user_id, out)
+        yield from self._advance(key, rows, timerValues, firing=None)
 
     def handleExpiredTimer(self, key, timerValues, expiredTimerInfo):
-        (user_id,) = key
+        # pyspark deletes the firing timer itself once this returns
+        yield from self._advance(key, (), timerValues, firing=expiredTimerInfo.getExpiryTimeInMs())
+
+    def _advance(self, key, rows, timerValues, firing):
+        """:func:`funnel.funnel_step` over the stored stages; the lists are
+        put whole (or cleared) and one timer sits at the earliest deadline."""
+        from timedb_spark.streaming.funnel import deadline_ms, funnel_frame, funnel_step
+
+        s1 = [tuple(r) for r in self._s1.get()] if self._s1.exists() else []
+        s2 = [tuple(r) for r in self._s2.get()] if self._s2.exists() else []
         wm_ms = max(timerValues.getCurrentWatermarkInMs(), 0)
-        s1, s2 = self._load()
-        out: list[tuple] = []
-        s1, s2 = self._expire(s1, s2, wm_ms, out)
-        self._persist(s1, s2)
-        yield from self._emit(user_id, out)
+        s1, s2, out = funnel_step(s1, s2, rows, wm_ms)
+        for t in list(self._handle.listTimers()):
+            if t != firing:
+                self._handle.deleteTimer(t)
+        for state, entries in ((self._s1, s1), (self._s2, s2)):
+            if entries:
+                state.put(entries)
+            else:
+                state.clear()
+        if s1 or s2:
+            self._handle.registerTimer(min(deadline_ms(f[0]) for f in s1 + s2))
+        if out:
+            yield funnel_frame(key[0], out)
 
 
 def stream_funnel_v2(events_stream: DataFrame, *, delay: str = "0 seconds") -> DataFrame:
@@ -748,26 +672,14 @@ class CusumProcessor(StatefulProcessor):
         sp, sn, alarms, mxp, mxn, first, t = (
             tuple(cur) if cur is not None else (0.0, 0.0, 0, 0.0, 0.0, -1, 0)
         )
-        # Concatenate ALL Arrow chunks for the key BEFORE sorting (the
-        # DedupProcessor pattern): one micro-batch's rows can arrive split
-        # across chunks, and a per-chunk lexsort folds chunks in arrival
-        # order — the order-sensitive alarm-reset recursion would then
-        # diverge from the batch ts_cusum fold whose oracle this operator
-        # shares verbatim (ADVICE r6).
-        chunks = [pdf for pdf in rows if len(pdf)]
-        if not chunks:
+        # the order-sensitive alarm-reset recursion must see the whole
+        # batch in event order to match the batch ts_cusum fold
+        pdf = events_in_order(rows)
+        if pdf is None:
             return
-        pdf = pd.concat(chunks, ignore_index=True) if len(chunks) > 1 else chunks[0]
         mu = float(pdf["mu"].iloc[0])
         sigma = float(pdf["sigma"].iloc[0])
-        order = np.lexsort(
-            (
-                pdf["event_id"].values.astype("int64"),
-                pdf["ts"].values.astype("datetime64[us]").astype("int64"),
-            )
-        )
-        cents = pdf["c"].values.astype("int64")[order]
-        for c in cents:
+        for c in pdf["c"].values.astype("int64"):
             z = (float(c) - mu) / sigma if sigma > 0.0 else 0.0
             sp2 = max(0.0, sp + z - _CUSUM_K)
             sn2 = max(0.0, sn - z - _CUSUM_K)
@@ -848,9 +760,9 @@ class AnomalyProcessor(StatefulProcessor):
     production monitor that needs NO training pass at all (vs
     stream_cusum_v2's pre-fit μ/σ broadcast; this one learns its baseline
     online, the other detects small sustained shifts against a fixed one).
-    The only state is the 5-field Welford tuple. Chunks concatenate before
-    the one lexsort+fold (the CusumProcessor lesson), so the drained final
-    emission replays the batch prefix recursion its oracle encodes."""
+    The only state is the 5-field Welford tuple. The fold runs over the
+    whole batch in event order, so the drained final emission replays the
+    batch prefix recursion its oracle encodes."""
 
     def init(self, handle: "StatefulProcessorHandle") -> None:
         from timedb_spark.streaming._tws_fastpath import patch_implicit_key, wrap_value_state
@@ -868,18 +780,10 @@ class AnomalyProcessor(StatefulProcessor):
         n, mean, m2, alerts, first = (
             tuple(cur) if cur is not None else (0, 0.0, 0.0, 0, -1)
         )
-        chunks = [pdf for pdf in rows if len(pdf)]
-        if not chunks:
+        pdf = events_in_order(rows)
+        if pdf is None:
             return
-        pdf = pd.concat(chunks, ignore_index=True) if len(chunks) > 1 else chunks[0]
-        order = np.lexsort(
-            (
-                pdf["event_id"].values.astype("int64"),
-                pdf["ts"].values.astype("datetime64[us]").astype("int64"),
-            )
-        )
-        cents = pdf["c"].values.astype("int64")[order]
-        for c in cents:
+        for c in pdf["c"].values.astype("int64"):
             x = float(c)
             if n >= _ANOM_MIN_N and m2 > 0.0 and abs(x - mean) / math.sqrt(m2 / n) > _ANOM_Z:
                 alerts += 1

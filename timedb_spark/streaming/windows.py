@@ -30,6 +30,24 @@ EVENTS_STREAM_SCHEMA = T.StructType(
 )
 
 
+def events_in_order(chunks):
+    """One key's non-empty Arrow chunks of an events-shaped batch as ONE
+    frame in ``(ts, event_id)`` order, or None when every chunk is empty.
+
+    Every order-sensitive fold over a key's events (sessions, funnel, the
+    CUSUM and Welford monitors, v1 and v2 alike) starts here: one
+    micro-batch's rows can arrive split across chunks, so sorting per chunk
+    would fold them in arrival order instead."""
+    import numpy as np
+    import pandas as pd
+
+    frames = [pdf for pdf in chunks if len(pdf)]
+    if not frames:
+        return None
+    pdf = pd.concat(frames, ignore_index=True) if len(frames) > 1 else frames[0]
+    return pdf.take(np.lexsort((pdf["event_id"].values, pdf["ts"].values)))
+
+
 def windowed_events_agg(events: DataFrame, *, window: str = "6 hours", delay: str = "1 hour") -> DataFrame:
     """Tumbling-window count+sum per event_type. Works on batch AND stream
     frames; on streams the watermark bounds state and admits late data up to

@@ -31,16 +31,9 @@ from timedb_spark.session import get_spark  # noqa: E402
 def main(sf_dir: str, out_path: str) -> int:
     spark = get_spark("keybench")
     from timedb_spark.streaming.state import stream_latest_state
-    from timedb_spark.streaming.state_v2 import _HAVE_TWS, stream_latest_state_v2
+    from timedb_spark.streaming.state_v2 import stream_latest_state_v2
 
     result: dict = {"sf_dir": sf_dir, "runs": {}}
-    if not (_HAVE_TWS and entrymod._workers_have_protobuf(spark)):
-        result["skipped"] = "state API v2 unavailable in this session (no protobuf in workers)"
-        with open(out_path, "w") as f:
-            json.dump(result, f, indent=1)
-        print(json.dumps(result))
-        return 1
-
     sv = bitemporal_frame(spark, sf_dir).select(
         "series_id", "valid_time", "knowledge_time", "change_time", "value"
     )
